@@ -77,7 +77,8 @@ object DevQ73Probe {
         }
       }
       time("batch parity") {
-        Concurrency.maxima(Concurrency.sweep(kept)).head()
+        Concurrency.maxima(
+          Concurrency.sweep(kept, Concurrency.integerDeltas)).head()
       }
       kept.unpersist()
       graft.Fs.deleteRecursively(tmp)

@@ -68,7 +68,8 @@ object DevStreamProbe {
       }
       time("stop") { q.stop(); spark.catalog.dropTempView(qname) }
       val b = time("batch_q20") {
-        sizing.Concurrency.maxima(sizing.Concurrency.sweep(kept)).head()
+        sizing.Concurrency.maxima(sizing.Concurrency.sweep(kept,
+          sizing.Concurrency.integerDeltas)).head()
       }
       println(s"parity: ${b.getLong(0) == folded.get.maxConcurrentQueries}")
       kept.unpersist()

@@ -1016,7 +1016,7 @@ object Similarity extends QueryModule {
   private def planeCoefs(p: Int): String =
     (0 until Dims).map(d => planeCoef(p, d)).mkString(", ")
 
-  private def sigSpark(v: String, nPlanes: Int = MinPlanes): String =
+  private def sigSpark(v: String, nPlanes: Int): String =
     (0 until nPlanes).map { p =>
       // int coefficients |c| <= 3 are exact as float, so the float-array
       // cast preserves bit parity with the oracle's integer-literal dot
@@ -1043,12 +1043,6 @@ object Similarity extends QueryModule {
       s"CASE WHEN $p < $wRef AND " +
         s"${Dialect.duckDot(v, s"[${planeCoefs(p)}]")} > 0 " +
         s"THEN ${1L << p} ELSE 0 END"
-    }.mkString("(", " + ", ")")
-
-  private def sigDuck(v: String): String =
-    (0 until MinPlanes).map { p =>
-      s"CASE WHEN ${Dialect.duckDot(v, s"[${planeCoefs(p)}]")} > 0 " +
-        s"THEN ${1 << p} ELSE 0 END"
     }.mkString("(", " + ", ")")
 
   private def q30(s: SparkSession, dir: String): DataFrame = {

@@ -99,7 +99,8 @@ object Sizing extends QueryModule {
 
   // --- q20: sweep-line concurrency maxima (E1–E6) ------------------------
   private def q20(s: SparkSession, dir: String): DataFrame =
-    Concurrency.maxima(Concurrency.sweep(kept(s, dir)))
+    Concurrency.maxima(
+      Concurrency.sweep(kept(s, dir), Concurrency.integerDeltas))
 
   // private[ops]: q73's oracle wraps this (stream maxima ≡ batch maxima)
   private[ops] def q20Sql = s"""${QuerylogAdapter.sqlCte(cfg)}

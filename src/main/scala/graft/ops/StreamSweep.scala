@@ -129,7 +129,8 @@ object StreamSweep extends QueryModule {
     val m = folded.getOrElse(sys.error("q73: no closed buckets — empty querylog?"))
 
     // Parity against the batch operator on the same kept querylog.
-    val b = Concurrency.maxima(Concurrency.sweep(kept)).head()
+    val b = Concurrency.maxima(
+      Concurrency.sweep(kept, Concurrency.integerDeltas)).head()
     kept.unpersist()
     val matches = b.getLong(0) == m.maxConcurrentQueries &&
       b.getLong(1) == m.maxPods && b.getLong(2) == m.maxCache &&

@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.CkptLocalOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +56,7 @@ object PrefixSum {
     * NULL group values are real keys end-to-end (null-safe carry join).
     */
   def scan(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
-      sumCols: Seq[(String, String)], uniformBounds: Boolean = false,
+      sumCols: Seq[(String, String)],
       knownRange: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
@@ -67,26 +66,21 @@ object PrefixSum {
     // every row the same bucket.
     //  - default: Greenwald-Khanna quantiles (no RNG) — robust to any key
     //    distribution, costs one sketch aggregation pass;
-    //  - uniformBounds: min/max + even split — one cheap min/max agg,
-    //    right when the caller knows the key is near-uniform (event
-    //    timestamps); correctness never depends on balance, only the
-    //    local-scan parallelism does;
     //  - knownRange: the caller already knows (or can compute more
-    //    cheaply upstream) the [lo, hi] span — skips the eager pass over
-    //    `df` entirely, making the whole scan a single job.
+    //    cheaply upstream) the [lo, hi] span — an even split, skipping the
+    //    eager pass over `df` entirely and making the whole scan a single
+    //    job; correctness never depends on balance, only the local-scan
+    //    parallelism does.
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
     val bounds =
       if (probs.isEmpty) Array.empty[Double]
-      else if (knownRange.isDefined || uniformBounds) {
-        val (lo, hi) = knownRange.getOrElse {
-          val mm = df.agg(min(col(bucketCol)).cast("double"),
-            max(col(bucketCol)).cast("double")).head()
-          if (mm.isNullAt(0)) (0.0, 0.0)
-          else (mm.getDouble(0), mm.getDouble(1))
-        }
-        if (lo == hi) Array.empty[Double]
-        else probs.map(p => lo + (hi - lo) * p).distinct.sorted
-      } else df.stat.approxQuantile(bucketCol, probs, 0.001).distinct.sorted
+      else knownRange match {
+        case Some((lo, hi)) =>
+          if (lo == hi) Array.empty[Double]
+          else probs.map(p => lo + (hi - lo) * p).distinct.sorted
+        case None =>
+          df.stat.approxQuantile(bucketCol, probs, 0.001).distinct.sorted
+      }
     val bucketExpr =
       if (bounds.isEmpty) lit(0)
       else bounds.map(b => when(col(bucketCol) > lit(b), 1).otherwise(0))
@@ -153,9 +147,7 @@ object PrefixSum {
     * non-trivial upstream should localCheckpoint first.
     */
   def rowNumber(df: DataFrame, bucketCol: String, orderCols: Seq[Column],
-      dst: String, groupCols: Seq[String] = Nil,
-      uniformBounds: Boolean = false): DataFrame =
+      dst: String, groupCols: Seq[String] = Nil): DataFrame =
     scan(df.withColumn("__one", lit(1L)), bucketCol, orderCols,
-      Seq("__one" -> dst), uniformBounds = uniformBounds,
-      groupCols = groupCols).drop("__one")
+      Seq("__one" -> dst), groupCols = groupCols).drop("__one")
 }

@@ -1,7 +1,7 @@
 package graft.sizing
 
 import graft.plans.PrefixSum
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The sweep-line concurrency operator (SURVEY §2.6) — the reference's one
@@ -28,88 +28,91 @@ import org.apache.spark.sql.functions._
   */
 object Concurrency {
 
-  /** Input: derived querylog (post-[[Formulas.derive]]) with an
-    * `admitted_us`/`end_us` pair (µs since epoch, BIGINT) and per-event
-    * integer delta units (associativity-safe across partitions; doubles
-    * would make distributed partial sums order-sensitive):
-    *
-    *   - pods: `min_executor_pod` (count units)
-    *   - cache/mem/spill: bytes-per-backend (`x_bytes div num_backends`)
-    *   - cpu: milli-vcores-per-backend
-    *
-    * Output: one row per event with running sums `run_*` over the global
-    * (ts, kind, query_id) order.
+  /** The battery's integer payload (q20, q73): pods in count units,
+    * cache/mem/spill in bytes-per-backend (`x_bytes div num_backends`),
+    * cpu in milli-vcores-per-backend. Integer deltas are
+    * associativity-safe across partitions; doubles would make distributed
+    * partial sums order-sensitive.
     */
-  def sweep(derived: DataFrame): DataFrame = {
-    val deltas = Seq("d_count", "d_pods", "d_cache_b", "d_mem_b",
-      "d_cpu_mv", "d_spill_b")
+  val integerDeltas: Seq[(String, Column)] = Seq(
+    "pods" -> col("min_executor_pod"),
+    "cache_b" -> col("cache_b_per_backend"),
+    "mem_b" -> col("mem_b_per_backend"),
+    "cpu_mv" -> col("cpu_mv_per_backend"),
+    "spill_b" -> col("spill_b_per_backend"))
 
-    val start = struct(
-      col("admitted_us").as("ts_us"), lit(1).as("kind"),
-      lit(1L).as("d_count"), col("min_executor_pod").as("d_pods"),
-      col("cache_b_per_backend").as("d_cache_b"),
-      col("mem_b_per_backend").as("d_mem_b"),
-      col("cpu_mv_per_backend").as("d_cpu_mv"),
-      col("spill_b_per_backend").as("d_spill_b"))
-    val end = struct(
-      col("end_us").as("ts_us"), lit(0).as("kind"),
-      lit(-1L).as("d_count"), (-col("min_executor_pod")).as("d_pods"),
-      (-col("cache_b_per_backend")).as("d_cache_b"),
-      (-col("mem_b_per_backend")).as("d_mem_b"),
-      (-col("cpu_mv_per_backend")).as("d_cpu_mv"),
-      (-col("spill_b_per_backend")).as("d_spill_b"))
-
-    // Persisted: PrefixSum.scan's totals and local-scan branches both
-    // read the events — without a barrier each re-scans the querylog
-    // source and re-derives every sizing column. The event rows are
-    // narrow (9 numeric cols + id), so the cache is ~2 rows per query; it
-    // lives until the session's next clearCache/LRU eviction (callers
-    // hold no handle to unpersist — acceptable because every consumer
-    // aggregates it to one row immediately after).
-    val events = derived
-      .select(col("query_id"), explode(array(start, end)).as("e"))
+  /** Input: kept querylog rows with an `admitted_us`/`end_us` pair (µs
+    * since epoch, BIGINT) and one `(name, delta)` per swept resource — the
+    * delta an exact integer or decimal expression over the row (see
+    * [[integerDeltas]]; the report's DECIMAL payload is in [[Pipeline]]).
+    * One delta must be named `pods`: [[maxima]] reports the instant of
+    * its peak.
+    *
+    * Rows missing either instant are excluded: a null-instant event would
+    * land in PrefixSum's bucket 0 and sort FIRST, applying a query's end
+    * deltas before its start and silently depressing every running sum.
+    * Such rows cannot contribute a well-formed interval (they stay in the
+    * caller's CSV/aggregate paths).
+    *
+    * Output: one row per event — `query_id, ts_us, kind, d_count, d_<name>…`
+    * — with running sums `run_count, run_<name>…` over the global
+    * (ts, kind, query_id) order.
+    *
+    * Nothing is cached. The scan evaluates the explode three times (bounds
+    * pass, totals branch, local-scan branch); round 18 measured that
+    * materializing the event frame costs more than re-evaluating it (a
+    * localCheckpoint per call, which q73 makes per micro-batch, left
+    * blocks accumulating until driver GC and took the entry 7.5 → 35 s at
+    * sf0.1). Callers with an expensive upstream persist `kept` instead.
+    */
+  def sweep(kept: DataFrame, deltas: Seq[(String, Column)]): DataFrame = {
+    def event(ts: String, kind: Int, sign: Long): Column = struct(
+      col(ts).as("ts_us") +: lit(kind).as("kind") +: lit(sign).as("d_count") +:
+        deltas.map { case (n, d) => (if (sign > 0) d else -d).as(s"d_$n") }: _*)
+    val events = kept
+      .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)
+      .select(col("query_id"),
+        explode(array(event("admitted_us", 1, 1L), event("end_us", 0, -1L)))
+          .as("e"))
       .select(col("query_id"), col("e.*"))
-      .persist()
 
-    // knownRange: event instants are near-uniform over the analysis
-    // window, and their span is computable from the PRE-explode table
-    // (min admitted, max end over half the rows, two columns) — so the
-    // bucket bounds cost one slim aggregate and the events cache
-    // populates inside the main job instead of needing its own pass.
-    // Bucket balance only affects local-scan parallelism, never
-    // correctness, so min-admitted/max-end is a safe over-span.
-    val mm = derived
-      .agg(min(col("admitted_us")).cast("double"),
-        max(col("end_us")).cast("double")).head()
+    // Event instants are near-uniform over the analysis window, so an even
+    // split of [min, max] balances the buckets; balance only affects
+    // local-scan parallelism, never correctness.
+    val mm = events.agg(min(col("ts_us")).cast("double"),
+      max(col("ts_us")).cast("double")).head()
     val range = if (mm.isNullAt(0)) (0.0, 0.0)
       else (mm.getDouble(0), mm.getDouble(1))
 
     PrefixSum.scan(events, "ts_us",
       Seq(col("ts_us"), col("kind"), col("query_id")),
-      deltas.map(d => d -> d.replace("d_", "run_")),
+      ("count" +: deltas.map(_._1)).map(n => s"d_$n" -> s"run_$n"),
       knownRange = Some(range))
   }
 
-  /** The maxima row's column order — the single source of truth shared by
-    * the batch [[maxima]] aggregate and the streamed fold (q73), so the
-    * two output schemas cannot drift.
+  /** The maxima row's columns for [[integerDeltas]] — the single source of
+    * truth shared by the batch [[maxima]] aggregate and the streamed fold
+    * (q73), so the two output schemas cannot drift.
     */
-  val maximaCols: Seq[String] = Seq(
-    "max_concurrent_queries", "max_concurrent_pods",
-    "max_concurrent_cache_b", "max_concurrent_mem_b",
-    "max_concurrent_cpu_mv", "max_concurrent_spill_b", "max_pods_at_us")
+  val maximaCols: Seq[String] = "max_concurrent_queries" +:
+    integerDeltas.map { case (n, _) => s"max_concurrent_$n" } :+
+    "max_pods_at_us"
 
   /** Conditional maxima (py:381–396): max running footprint observed at
-    * start events. Returns a single row with [[maximaCols]].
+    * start events. Returns a single row: `max_concurrent_queries`, one
+    * `max_concurrent_<name>` per delta of the [[sweep]] (its type), and
+    * `max_pods_at_us`.
     */
-  def maxima(sweepEvents: DataFrame): DataFrame = {
-    val aggs = Seq(
-      max(col("run_count")), max(col("run_pods")), max(col("run_cache_b")),
-      max(col("run_mem_b")), max(col("run_cpu_mv")), max(col("run_spill_b")),
+  def maxima(swept: DataFrame): DataFrame = {
+    val names = swept.columns.toSeq
+      .filter(c => c.startsWith("run_") && c != "run_count")
+      .map(_.stripPrefix("run_"))
+    val aggs = max(col("run_count")).as("max_concurrent_queries") +:
+      names.map(n => max(col(s"run_$n")).as(s"max_concurrent_$n")) :+
       // py:384 uses >= for pods: at ties the LATEST start wins
-      max_by(col("ts_us"), struct(col("run_pods"), col("ts_us"))))
-      .zip(maximaCols).map { case (a, n) => a.as(n) }
-    sweepEvents
+      max_by(col("ts_us"), struct(col("run_pods"), col("ts_us")))
+        .as("max_pods_at_us")
+    swept
       .filter(col("d_count") > 0)
       .agg(aggs.head, aggs.tail: _*)
   }

@@ -1,7 +1,5 @@
 package graft.sizing
 
-import graft.CkptLocalOps
-import graft.plans.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,72 +90,22 @@ object Pipeline {
       col("admission_wait"),
       col("num_backends"))
 
-  /** Resource-delta events with the reference's per-event payload
-    * (py:311–333): UN-ceiled pods, per-backend GB shares, avg vcores, data
-    * rate. Doubles are carried as DECIMAL(38,9) so distributed partial
-    * sums are exact and order-independent; rendered values round to 2dp,
-    * far below the 1e-9 quantization.
+  /** The report's sweep payload (py:311–333): UN-ceiled pods, per-backend
+    * GB shares, avg vcores, data rate. Doubles are carried as
+    * DECIMAL(38,9) so distributed partial sums are exact and
+    * order-independent; rendered values round to 2dp, far below the 1e-9
+    * quantization.
     */
-  private def sweepEvents(derived: DataFrame): DataFrame = {
+  private[sizing] val reportDeltas: Seq[(String, Column)] = {
     def dec(c: Column): Column = c.cast("decimal(38,9)")
-    val podsRaw = greatest(col("ratio_data"), col("ratio_mem"),
-      col("ratio_cpu"), col("ratio_spill"))
-    val payload = Seq[(String, Column)](
-      "d_pods" -> dec(podsRaw),
-      "d_cache" -> dec(col("reqd_cache_gb") / col("num_backends")),
-      "d_mem" -> dec(col("reqd_agg_mem") / col("num_backends")),
-      "d_cpu" -> dec(col("avg_vcores_per_node")),
-      "d_data_rate" -> dec(col("avg_data_rate_per_node")),
-      "d_spill" -> dec(col("memory_spilled_gb") / col("num_backends")))
-    val start = struct(
-      col("admitted_us").as("ts_us") +: lit(1).as("kind") +:
-        lit(1L).as("d_count") +:
-        payload.map { case (n, c) => c.as(n) }: _*)
-    val end = struct(
-      col("end_us").as("ts_us") +: lit(0).as("kind") +:
-        lit(-1L).as("d_count") +:
-        payload.map { case (n, c) => (-c).cast("decimal(38,9)").as(n) }: _*)
-    derived
-      .select(col("query_id"), explode(array(start, end)).as("e"))
-      .select(col("query_id"), col("e.*"))
-  }
-
-  /** Sweep-line maxima over the kept rows (EP3, py:351–396): distributed
-    * prefix scan + conditional maxima at start events only.
-    */
-  def concurrency(derived: DataFrame): DataFrame = {
-    val deltas = Seq("d_count", "d_pods", "d_cache", "d_mem", "d_cpu",
-      "d_data_rate", "d_spill")
-    // Guard: a row with an unparseable/missing end_time (schema allows
-    // null) would emit a null-instant event — PrefixSum buckets nulls
-    // into bucket 0 and the window sorts them FIRST, applying the end
-    // deltas before the query's start and silently depressing every
-    // running sum. Such rows cannot contribute a well-formed interval,
-    // so they are excluded from the sweep (kept in CSV/aggregate paths).
-    val withInstants = derived
-      .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)
-    // NOTE (round 18): ckptLocal on the event frame was tried and
-    // REVERTED — PrefixSum's three evaluations of this cheap explode are
-    // cheaper than materializing checkpoint blocks per call (q73 runs
-    // this per micro-batch; blocks accumulate until driver GC and the
-    // entry degraded 7.5 → 35 s at sf0.1).
-    val scanned = PrefixSum.scan(sweepEvents(withInstants), "ts_us",
-      Seq(col("ts_us"), col("kind"), col("query_id")),
-      deltas.map(d => d -> d.replace("d_", "run_")), uniformBounds = true)
-    scanned
-      .filter(col("d_count") > 0)
-      .agg(
-        max(col("run_count")).as("max_concurrent_queries"),
-        max(col("run_pods")).cast("double").as("max_pods_workload"),
-        max(col("run_cache")).cast("double").as("max_concurrent_cache"),
-        max(col("run_mem")).cast("double").as("max_concurrent_memory"),
-        max(col("run_cpu")).cast("double").as("max_concurrent_cores"),
-        max(col("run_data_rate")).cast("double")
-          .as("max_concurrent_data_rate"),
-        max(col("run_spill")).cast("double").as("max_concurrent_spill"),
-        // py:384 `>=`: at equal pods the LATEST start wins
-        max_by(col("ts_us"), struct(col("run_pods"), col("ts_us")))
-          .as("max_pods_workload_start_us"))
+    Seq(
+      "pods" -> dec(greatest(col("ratio_data"), col("ratio_mem"),
+        col("ratio_cpu"), col("ratio_spill"))),
+      "cache" -> dec(col("reqd_cache_gb") / col("num_backends")),
+      "mem" -> dec(col("reqd_agg_mem") / col("num_backends")),
+      "cpu" -> dec(col("avg_vcores_per_node")),
+      "data_rate" -> dec(col("avg_data_rate_per_node")),
+      "spill" -> dec(col("memory_spilled_gb") / col("num_backends")))
   }
 
   /** Full run: reads `cfg.inputFile`, writes the three sinks under
@@ -174,7 +122,7 @@ object Pipeline {
     val path = cfg.inputFile.getOrElse(
       sys.error("input_file is required for CSV mode; use runRest for API mode"))
     val raw = withEventInstants(readQuerylogCsv(spark, path))
-    finish(spark, cfg, raw, outDir)
+    finish(cfg, raw, outDir)
   }
 
   /** EP2 (API mode, py:134–165 + 189–208): the DSv2 REST source feeds the
@@ -203,27 +151,24 @@ object Pipeline {
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
       val raw = withEventInstants(graft.sources.RestAdapter.toQuerylog(api))
-      finish(spark, cfg, raw, outDir, writeSkipSink = false)
+      finish(cfg, raw, outDir, writeSkipSink = false)
     } finally api.unpersist()
   }
 
-  private def finish(spark: SparkSession, cfg: SizingConfig, raw: DataFrame,
-      outDir: String, writeSkipSink: Boolean = true): SizingReport = {
+  private def finish(cfg: SizingConfig, raw: DataFrame, outDir: String,
+      writeSkipSink: Boolean = true): SizingReport = {
     // The sinks plus ~8 report aggregations are independent actions; cache
     // the adapted querylog once so the source (CSV scan or REST pages) is
     // read a single time and every pass sees identical data.
     val cached = raw.persist()
-    // Round 18 (guide §5 caching): the DERIVED frame is read by 7
-    // downstream actions (2 prune + 5 kept consumers) — without its own
-    // cache each action re-runs Formulas.derive's ~30-column arithmetic
-    // over the cached raw. One cache on the pre-split derived frame;
-    // kept/pruned stay cheap filters over it, skipped is a cheap filter
-    // over raw (no derivation) and stays uncached.
-    val pooled = Routing.poolFilter(cached, cfg)
-    val skipped = pooled.filter(Routing.skipPredicate)
-    val derived = Formulas
-      .derive(pooled.filter(!Routing.skipPredicate), cfg).persist()
-    val (kept, pruned) = Routing.pruneSplit(derived, cfg)
+    // Round 18 (guide §5 caching): the derived flows are read by 7
+    // downstream actions (2 prune + 5 kept consumers) — without a cache
+    // each action re-runs Formulas.derive's ~30-column arithmetic over the
+    // cached raw. skipped is a cheap filter over raw (no derivation) and
+    // stays uncached.
+    val (skipped, kept0, pruned0) = Routing.route(cached, cfg)
+    val kept = kept0.persist()
+    val pruned = pruned0.persist()
     try {
       // ONE routing pre-pass replaces the per-sink isEmpty probes AND the
       // report's prune count / pool roster actions (Report.routedCounts)
@@ -242,9 +187,11 @@ object Pipeline {
             col("start_time"), col("end_time")).as("value"))
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
-      Report.build(cfg, kept, concurrency(kept), pre)
+      Report.build(cfg, kept,
+        Concurrency.maxima(Concurrency.sweep(kept, reportDeltas)), pre)
     } finally {
-      derived.unpersist()
+      kept.unpersist()
+      pruned.unpersist()
       cached.unpersist()
     }
   }

@@ -140,6 +140,10 @@ object Report {
     }.toMap
 
     val c = concurrencyRow.head()
+    // the sweep's DECIMAL maxima (Pipeline's payload); NULL when no row
+    // was kept, read as 0 like the Long fields
+    def dbl(name: String): Double =
+      Option(c.getAs[java.math.BigDecimal](name)).fold(0.0)(_.doubleValue)
     val podWorkload = g.getAs[Long]("min_executor_pod_workload")
     val tsizeWl = Bucketing.tsizeValue(podWorkload)
 
@@ -157,14 +161,14 @@ object Report {
       pruneCount = pre.getAs[Long]("n_pruned"),
       podLimit = cfg.podLimit,
       maxConcurrentQueries = c.getAs[Long]("max_concurrent_queries"),
-      maxPodsWorkloadStartUs = c.getAs[Long]("max_pods_workload_start_us"),
-      maxConcurrentCores = c.getAs[Double]("max_concurrent_cores"),
-      maxConcurrentCache = c.getAs[Double]("max_concurrent_cache"),
-      maxConcurrentSpill = c.getAs[Double]("max_concurrent_spill"),
-      maxConcurrentMemory = c.getAs[Double]("max_concurrent_memory"),
-      maxConcurrentDataRate = c.getAs[Double]("max_concurrent_data_rate"),
+      maxPodsWorkloadStartUs = c.getAs[Long]("max_pods_at_us"),
+      maxConcurrentCores = dbl("max_concurrent_cpu"),
+      maxConcurrentCache = dbl("max_concurrent_cache"),
+      maxConcurrentSpill = dbl("max_concurrent_spill"),
+      maxConcurrentMemory = dbl("max_concurrent_mem"),
+      maxConcurrentDataRate = dbl("max_concurrent_data_rate"),
       minExecutorPodWorkload = podWorkload,
-      maxPodsWorkload = c.getAs[Double]("max_pods_workload"),
+      maxPodsWorkload = dbl("max_concurrent_pods"),
       tsizeWorkload = tsizeWl,
       constrainedBy = Aggregates.constrainedBy(matrixRows, tsizeWl),
       matrix = matrix,

@@ -66,8 +66,9 @@ class PrefixSumSpec extends SparkTestBase {
       (ts, i, rnd.nextInt(11) - 5L)
     }
     val df = rows.toDF("ts", "id", "delta").repartition(4)
+    val keys = rows.map(_._1.toDouble)
     val got = PrefixSum.scan(df, "ts", Seq(col("ts"), col("id")),
-        Seq("delta" -> "run"), uniformBounds = true)
+        Seq("delta" -> "run"), knownRange = Some((keys.min, keys.max)))
       .select("ts", "id", "run").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
