@@ -2346,7 +2346,7 @@ object Similarity extends QueryModule {
     * is O(d²) regardless of corpus size.
     */
   def principalComponent(flat: Array[Long], d: Int,
-      quantScale: Int = 100, constScale: Int = 100, iters: Int = 100)
+      constScale: Int = 100, iters: Int = 100)
       : (Array[Double], Double) = {
     import graft.functions.CovTriangle.cell
     val n = cell(flat, d + 1, d, d).toDouble / (constScale.toDouble * constScale)

@@ -27,26 +27,4 @@ object Model {
     StructField("admission_wait", LongType, nullable = false), // ms
     StructField("num_backends", IntegerType, nullable = false)
   ))
-
-  /** API-mode input (py:189–208): bytes/ms raw units + nested attributes. */
-  val apiQuerySchema: StructType = StructType(Seq(
-    StructField("queryId", StringType, nullable = false),
-    StructField("startTime", StringType, nullable = false),
-    StructField("endTime", StringType, nullable = true),
-    StructField("durationMillis", LongType, nullable = false),
-    StructField("queryState", StringType, nullable = true),
-    StructField("user", StringType, nullable = true),
-    StructField("queryType", StringType, nullable = true),
-    StructField("attributes", MapType(StringType, StringType), nullable = true)
-  ))
-
-  /** The 24 output columns, in the reference's order (py:120). */
-  val outputFields: Seq[String] = Seq(
-    "query_id", "pool", "start_time", "end_time", "duration_millis",
-    "duration_sec", "query_sla_sec", "reqd_cache_gb", "reqd_agg_mem",
-    "memory_spilled_gb", "cpu_time_sec", "min_parallelism", "query_type",
-    "admission_wait", "num_backends", "avg_vcores_per_node",
-    "avg_mem_per_node", "avg_cache_per_node", "avg_spill_per_node",
-    "avg_data_rate_per_node", "min_executor_pod_data",
-    "min_executor_pod_mem", "min_executor_pod_cpu", "min_executor_pod_spill")
 }

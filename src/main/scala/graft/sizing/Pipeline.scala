@@ -42,7 +42,9 @@ object Pipeline {
       col("cpu_time_sec").cast("double").as("cpu_time_sec"),
       col("query_type"),
       col("admission_wait").cast("long").as("admission_wait"),
-      col("num_backends").cast("int").as("num_backends"))
+      col("num_backends").cast("int").as("num_backends"),
+      // the skip line's API-mode state field (RestAdapter.toQuerylog)
+      lit(null).cast("string").as("query_state"))
   }
 
   /** Admitted/end instants in µs since epoch (SURVEY §2.6 E2, py:307–310).
@@ -114,22 +116,23 @@ object Pipeline {
     * Sink deviations (doc'd): distributed CSV writes are directories of
     * part files with minimal quoting (vs the reference's single
     * QUOTE_NONNUMERIC file); the skip file is one id|duration|start|end
-    * line per row (the reference abuses a csv writer into a single
-    * newline-delimited cell, py:341–344).
+    * line per row, |state appended in API mode (the reference abuses a
+    * csv writer into a single newline-delimited cell, py:341–344).
     */
   def run(spark: SparkSession, cfg: SizingConfig, outDir: String)
       : SizingReport = {
     val path = cfg.inputFile.getOrElse(
       sys.error("input_file is required for CSV mode; use runRest for API mode"))
-    val raw = withEventInstants(readQuerylogCsv(spark, path))
-    finish(cfg, raw, outDir)
+    finish(cfg, readQuerylogCsv(spark, path), outDir)
   }
 
   /** EP2 (API mode, py:134–165 + 189–208): the DSv2 REST source feeds the
     * same downstream as CSV mode. `restOptions` are the source options
-    * (url, from, to, slices, fetcher, user/passwordFile); the
-    * missing-metric skip (F2) happens in the adapter, so the skip sink
-    * here carries the reference's id|duration|start|end|state rows.
+    * (url, from, to, slices, fetcher, user/passwordFile). The adapter
+    * keeps the documents missing `memory_aggregate_peak` (F2) with their
+    * `query_state`, so the one skip sink writes the reference's
+    * id|duration|start|end|state rows; [[finish]]'s single cache is what
+    * makes the HTTP pagination run once per report.
     */
   def runRest(spark: SparkSession, cfg: SizingConfig,
       restOptions: Map[String, String], outDir: String): SizingReport = {
@@ -137,42 +140,24 @@ object Pipeline {
       .format("graft.sources.RestQuerylogSource")
     restOptions.foreach { case (k, v) => reader = reader.option(k, v) }
     cfg.pool.foreach(p => reader = reader.option("pool", p))
-    // Persist the fetched pages: the skip sink plus every downstream
-    // action in finish() would otherwise re-run the whole HTTP pagination
-    // (~10 scans of the live server) and could each observe different
-    // data; one cached scan makes the run consistent and polite.
-    val api = reader.load().persist()
-    try {
-      val apiSkipped = graft.sources.RestAdapter.skipped(api)
-      if (!apiSkipped.isEmpty)
-        apiSkipped.select(concat_ws("|", col("query_id"),
-            col("duration_millis"), col("start_time"), col("end_time"),
-            col("query_state")).as("value"))
-          .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
-
-      val raw = withEventInstants(graft.sources.RestAdapter.toQuerylog(api))
-      finish(cfg, raw, outDir, writeSkipSink = false)
-    } finally api.unpersist()
+    finish(cfg, graft.sources.RestAdapter.toQuerylog(reader.load()), outDir)
   }
 
-  private def finish(cfg: SizingConfig, raw: DataFrame, outDir: String,
-      writeSkipSink: Boolean = true): SizingReport = {
-    // The sinks plus ~8 report aggregations are independent actions; cache
-    // the adapted querylog once so the source (CSV scan or REST pages) is
-    // read a single time and every pass sees identical data.
-    val cached = raw.persist()
-    // Round 18 (guide §5 caching): the derived flows are read by 7
-    // downstream actions (2 prune + 5 kept consumers) — without a cache
-    // each action re-runs Formulas.derive's ~30-column arithmetic over the
-    // cached raw. skipped is a cheap filter over raw (no derivation) and
-    // stays uncached.
-    val (skipped, kept0, pruned0) = Routing.route(cached, cfg)
-    val kept = kept0.persist()
-    val pruned = pruned0.persist()
+  /** Routes the adapted querylog (either source) into the sinks and the
+    * report. The routed frame ([[Routing.route]]: derived columns + `flow`)
+    * is the ONLY cache: the source (CSV scan or REST pages) is read and
+    * derived a single time, every sink and report action is a filter over
+    * it and sees identical data, and it is released before returning.
+    */
+  private def finish(cfg: SizingConfig, querylog: DataFrame, outDir: String)
+      : SizingReport = {
+    val routed = Routing.route(withEventInstants(querylog), cfg).persist()
     try {
+      def flow(name: String) = routed.filter(col("flow") === name)
+      val kept = flow("kept")
       // ONE routing pre-pass replaces the per-sink isEmpty probes AND the
       // report's prune count / pool roster actions (Report.routedCounts)
-      val pre = Report.routedCounts(kept, pruned, skipped)
+      val pre = Report.routedCounts(routed)
 
       outputRow(kept).write.mode("overwrite").option("header", "true")
         .csv(s"$outDir/${cfg.outputFile}")
@@ -180,19 +165,17 @@ object Pipeline {
       // the first over-limit row; an empty write is the distributed analog —
       // but we match observable behavior (no file when no pruned rows).
       if (pre.getAs[Long]("n_pruned") > 0)
-        outputRow(pruned).write.mode("overwrite").option("header", "true")
-          .csv(s"$outDir/${cfg.pruneOutputFile}")
-      if (writeSkipSink && pre.getAs[Long]("n_skipped") > 0)
-        skipped.select(concat_ws("|", col("query_id"), col("duration_millis"),
-            col("start_time"), col("end_time")).as("value"))
+        outputRow(flow("pruned")).write.mode("overwrite")
+          .option("header", "true").csv(s"$outDir/${cfg.pruneOutputFile}")
+      // concat_ws drops the NULL query_state of CSV mode
+      if (pre.getAs[Long]("n_skipped") > 0)
+        flow("skipped").select(concat_ws("|", col("query_id"),
+            col("duration_millis"), col("start_time"), col("end_time"),
+            col("query_state")).as("value"))
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
       Report.build(cfg, kept,
         Concurrency.maxima(Concurrency.sweep(kept, reportDeltas)), pre)
-    } finally {
-      kept.unpersist()
-      pruned.unpersist()
-      cached.unpersist()
-    }
+    } finally routed.unpersist()
   }
 }

@@ -92,28 +92,22 @@ final case class SizingReport(
 
 object Report {
 
-  /** ONE pre-pass over the routed flows, run by [[Pipeline]] BEFORE the
-    * sinks: total queries + pool roster (Q10 — both include pruned rows,
-    * never skipped ones) and the prune/skip counts. Replaces three
-    * separate driver actions (the kept∪pruned head, `pruned.count()`,
-    * and the sinks' `isEmpty` probes) with a single union aggregate;
-    * `count(when(...))` counts only the matching flow (COUNT skips the
-    * NULL of the un-matched branch), and `collect_set` likewise drops
-    * the NULL pools of skipped rows.
+  /** ONE pre-pass over the routed querylog ([[Routing.route]]), run by
+    * [[Pipeline]] BEFORE the sinks: total queries + pool roster (Q10 —
+    * both include pruned rows, never skipped ones) and the prune/skip
+    * counts. Replaces three separate Spark actions (the kept∪pruned
+    * head, `pruned.count()`, and the sinks' `isEmpty` probes) with a
+    * single aggregate; `count(when(...))` counts only the matching flow
+    * (COUNT skips the NULL of the un-matched branch), and `collect_set`
+    * likewise drops the NULL pools of skipped rows.
     */
-  def routedCounts(kept: DataFrame, pruned: DataFrame,
-      skipped: DataFrame): org.apache.spark.sql.Row =
-    kept.select(col("query_id"), col("pool"), lit("kept").as("flow"))
-      .unionByName(pruned.select(col("query_id"), col("pool"),
-        lit("pruned").as("flow")))
-      .unionByName(skipped.select(col("query_id"), col("pool"),
-        lit("skipped").as("flow")))
-      .agg(
-        count(when(col("flow") =!= "skipped", 1)).as("n"),
-        array_join(sort_array(collect_set(
-          when(col("flow") =!= "skipped", col("pool")))), ",").as("pools"),
-        count(when(col("flow") === "pruned", 1)).as("n_pruned"),
-        count(when(col("flow") === "skipped", 1)).as("n_skipped"))
+  def routedCounts(routed: DataFrame): org.apache.spark.sql.Row =
+    routed.agg(
+      count(when(col("flow") =!= "skipped", 1)).as("n"),
+      array_join(sort_array(collect_set(
+        when(col("flow") =!= "skipped", col("pool")))), ",").as("pools"),
+      count(when(col("flow") === "pruned", 1)).as("n_pruned"),
+      count(when(col("flow") === "skipped", 1)).as("n_skipped"))
       .head()
 
   /** Assemble the report. Collects exactly THREE tiny results — the fused

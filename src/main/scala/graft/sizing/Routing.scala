@@ -1,46 +1,33 @@
 package graft.sizing
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Predicate routing (SURVEY §2.3, F2–F4): one input stream fans out into
-  * skip / prune / keep flows, mirroring the reference's three output files
-  * (py:197–200, 262–269, 336).
+/** Predicate routing (SURVEY §2.3, F2–F4): one input stream, each row
+  * tagged with the one flow it belongs to — skip / prune / keep, mirroring
+  * the reference's three output files (py:197–200, 262–269, 336).
   *
-  * Each branch is a filter over the SAME scan — Catalyst collapses shared
-  * plan prefixes, and at 100 TB each branch pushes its predicate into the
-  * parquet scan rather than materializing the whole input.
+  * The consumers (sinks, report) are filters on the `flow` column of ONE
+  * frame, so a caller that caches it reads and derives the log once.
   */
 object Routing {
 
-  /** F2: rows missing the memory metric are skipped before derivation
-    * (py:197–200) — they would poison every downstream formula.
+  /** The routed querylog: the pool-filtered rows (F3, py:211–212) with
+    * every [[Formulas.derive]] column and a `flow` column —
+    *  - `skipped` when `reqd_agg_mem` is NULL (F2, py:197–200);
+    *  - `pruned` when the rounded overall pod count exceeds `podLimit`
+    *    (F4, py:262–269);
+    *  - `kept` otherwise.
+    * The skip test comes first: skipped rows carry derived columns too,
+    * but theirs are computed from a missing metric and mean nothing.
+    * NOTE Q10: the reference counts total_queries BEFORE the prune split,
+    * so A1 aggregates over `kept` and `pruned` together.
     */
-  def skipPredicate: Column = col("reqd_agg_mem").isNull
-
-  /** F3: optional client-side pool filter (py:211–212). */
-  def poolFilter(df: DataFrame, cfg: SizingConfig): DataFrame =
-    cfg.pool.map(p => df.filter(col("pool") === lit(p))).getOrElse(df)
-
-  /** F4: the prune split on the rounded overall pod count (py:262–269).
-    * Returns (kept, pruned). NOTE Q10: the reference counts total_queries
-    * BEFORE this split, so callers aggregate A1 over `kept ∪ pruned`.
-    */
-  def pruneSplit(derived: DataFrame, cfg: SizingConfig)
-      : (DataFrame, DataFrame) = {
-    val over = col("min_executor_pod") > cfg.podLimit
-    (derived.filter(!over), derived.filter(over))
-  }
-
-  /** Three-way routing over a raw querylog: (skipped, kept, pruned).
-    * Derivation runs only on non-skipped rows.
-    */
-  def route(raw: DataFrame, cfg: SizingConfig)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val pooled = poolFilter(raw, cfg)
-    val skipped = pooled.filter(skipPredicate)
-    val derived = Formulas.derive(pooled.filter(!skipPredicate), cfg)
-    val (kept, pruned) = pruneSplit(derived, cfg)
-    (skipped, kept, pruned)
+  def route(raw: DataFrame, cfg: SizingConfig): DataFrame = {
+    val pooled = cfg.pool.fold(raw)(p => raw.filter(col("pool") === lit(p)))
+    Formulas.derive(pooled, cfg).withColumn("flow",
+      when(col("reqd_agg_mem").isNull, "skipped")
+        .when(col("min_executor_pod") > cfg.podLimit, "pruned")
+        .otherwise("kept"))
   }
 }

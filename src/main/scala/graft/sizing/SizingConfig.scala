@@ -6,8 +6,10 @@ package graft.sizing
   *
   * Quirk stances (SURVEY §2.10):
   *  - Q3: `cacheAdjustmentPct` is accepted but defaults to 100 (the
-  *    reference reads it at py:102 and never applies it, py:235);
-  *    `scratchAdjustmentPct` likewise (in conf:13, never read).
+  *    reference reads it at py:102 and never applies it, py:235). The
+  *    conf's `scratch_adjustment_pct` (conf:13) is never read by the
+  *    reference, so it is not a knob here: the parser ignores it like
+  *    any other key it does not know.
   *  - Q4: `vcoresLimited` is just `vcoresPerNode` (the per-query
   *    `min(vcores_per_node, avg_vcores)` is commented out at py:228–229).
   *  - Q8: `pool` is optional (the reference NameErrors in API mode when
@@ -21,7 +23,6 @@ final case class SizingConfig(
     memAdjustmentPct: Double = 100, // sizing.conf:10
     cpuAdjustmentPct: Double = 80, // sizing.conf:12
     cacheAdjustmentPct: Double = 100, // Q3: read but never applied (py:235)
-    scratchAdjustmentPct: Double = 100, // Q3: in conf, never read
     mtDop: Int = 12, // sizing.conf:20
     podLimit: Int = 100, // sizing.conf:24
     pool: Option[String] = None, // sizing.conf:25 (optional; Q8)
@@ -69,7 +70,6 @@ object SizingConfig {
       memAdjustmentPct = d("mem_adjustment_pct", 100),
       cpuAdjustmentPct = d("cpu_adjustment_pct", 80),
       cacheAdjustmentPct = d("cache_adjustment_pct", 100),
-      scratchAdjustmentPct = d("scratch_adjustment_pct", 100),
       mtDop = i("mt_dop", 12),
       podLimit = i("pod_limit", 100),
       pool = kv.get("pool").filter(_.nonEmpty),

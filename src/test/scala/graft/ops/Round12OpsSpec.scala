@@ -112,8 +112,7 @@ class Round12OpsSpec extends SparkTestBase {
     val df = pts.toDF("vec_id", "embedding")
     val flat = Similarity.gramStats(df, quantScale = 1000)
     assert(graft.functions.CovTriangle.count(flat, 3) == 400L)
-    val (v, lambda) = Similarity.principalComponent(flat, d = 2,
-      quantScale = 1000)
+    val (v, lambda) = Similarity.principalComponent(flat, d = 2)
     val inv = 1.0 / math.sqrt(2.0)
     assert(math.abs(v(0) - inv) < 0.01 && math.abs(v(1) - inv) < 0.01,
       s"got ${v.toSeq}")

@@ -189,6 +189,35 @@ class RestQuerylogSourceSpec extends SparkTestBase {
       "q5|1000|2021-07-12T00:00:03.000Z|2021-07-12T01:00:00.000Z|FINISHED"))
   }
 
+  test("Pipeline.run and runRest release every cache they take") {
+    PageFetcher.register("hygiene", _ =>
+      page(Seq(doc(1, "2021-07-12T00:00:01.000Z"),
+        doc(2, "2021-07-12T00:00:02.000Z", mem = false))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-hygiene")
+    val csv = dir.resolve("querylog.csv")
+    java.nio.file.Files.writeString(csv,
+      """query_id,pool,start_time,end_time,duration_millis,reqd_cache_gb,reqd_agg_mem,memory_spilled_gb,cpu_time_sec,query_type,admission_wait,num_backends
+        |q1,etl,2021-07-12T00:00:00.000Z,2021-07-12T00:00:10.000Z,10000,3000,500,1500,40,QUERY,0,2
+        |q2,etl,2021-07-12T00:02:00.000Z,2021-07-12T00:02:10.000Z,10000,1,,0,1,QUERY,0,1
+        |""".stripMargin)
+    // compare ids, not counts: the context cleaner may drop RDDs that
+    // earlier suites left persisted while this test runs
+    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cachedIds
+    graft.sizing.Pipeline.run(spark,
+      graft.sizing.SizingConfig(inputFile = Some(csv.toString)),
+      dir.resolve("csv-out").toString)
+    assert((cachedIds -- before).isEmpty,
+      "Pipeline.run left a persisted RDD behind")
+    graft.sizing.Pipeline.runRest(spark, graft.sizing.SizingConfig(),
+      Map("url" -> "http://cm.example/api/impalaQueries",
+        "from" -> "2021-07-12T00:00:00Z", "to" -> "2021-07-12T04:00:00Z",
+        "fetcher" -> "hygiene"),
+      dir.resolve("rest-out").toString)
+    assert((cachedIds -- before).isEmpty,
+      "Pipeline.runRest left a persisted RDD behind")
+  }
+
   test("adapter: unit conversions + missing-metric skip routing (py:189–208)") {
     PageFetcher.register("adapter", _ =>
       page(Seq(doc(1, "2021-07-12T00:00:01.000Z"),
@@ -201,7 +230,8 @@ class RestQuerylogSourceSpec extends SparkTestBase {
     assert(q.getAs[Double]("cpu_time_sec") == 1.5) // 1500 ms
     assert(q.getAs[Long]("admission_wait") == 10L)
     assert(q.getAs[Int]("num_backends") == 2)
-    val sk = RestAdapter.skipped(api).collect()
+    val sk = RestAdapter.toQuerylog(api)
+      .filter(col("reqd_agg_mem").isNull).collect()
     assert(sk.map(_.getAs[String]("query_id")).toSeq == Seq("q2"))
   }
 }
