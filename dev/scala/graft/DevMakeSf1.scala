@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: synthesize an sf1 dataset as 10 key-shifted copies of the
@@ -48,13 +48,7 @@ object DevMakeSf1 {
         "'a'..'z' — an out-of-alphabet tag silently reintroduces the " +
         "cross-copy exact-duplicate artifact the tag scheme exists to " +
         "prevent (pick a lower factor or an earlier base letter)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-make-sf1")
 
     val orderS = 10L * 1000 * 1000 * strideF
     val custS = 1L * 1000 * 1000 * strideF

@@ -43,7 +43,18 @@ import org.apache.spark.sql.SparkSession
   * cross-round min comparisons know the basis.
   */
 object Bench {
-  private val WarmDir = "/root/testdata/sf0.001"
+  val WarmDir = "/root/testdata/sf0.001"
+
+  /** Runs one entry to completion through the noop sink. This evaluates
+    * the query's OWN plan: df.count() would rewrite it into a count
+    * aggregate and let column pruning drop every projected expression — a
+    * pure-projection battery query (string/JSON/array/window work) would
+    * time a parquet row-count instead of the operator. The noop sink
+    * executes the optimized plan with all columns live.
+    */
+  def exec(spark: SparkSession, name: String, dir: String): Unit =
+    SparkEntry.queries(name)(spark, dir)
+      .write.mode("overwrite").format("noop").save()
 
   def main(args: Array[String]): Unit = {
     val startNs = System.nanoTime()
@@ -77,7 +88,6 @@ object Bench {
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
     // ---- round-over-round trend (read BEFORE this run overwrites it) ----
     // The committed BENCH_LOCAL.json is the previous record; the
@@ -110,21 +120,7 @@ object Bench {
       } yield (s, pairRe.findAllMatchIn(body)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap)
     } catch { case scala.util.control.NonFatal(_) => None }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Evaluate the query's OWN plan: df.count() would rewrite it into a
-    // count aggregate and let column pruning drop every projected
-    // expression — a pure-projection battery query (string/JSON/array/
-    // window work) would time a parquet row-count instead of the operator.
-    // The noop sink executes the optimized plan with all columns live.
-    def exec(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
+    val spark = GraftSession("graft-bench")
 
     // Dev harness only (never set by the driver): comma-separated entry
     // names to restrict the battery — smoke-testing the bench machinery
@@ -134,7 +130,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     names.foreach { name =>
-      try exec(name, WarmDir)
+      try exec(spark, name, WarmDir)
       catch { case e: Throwable =>
         // A warm-scale-only failure must be VISIBLE: a silently skipped
         // warm-up charges this query's codegen compile to its timed run
@@ -204,7 +200,7 @@ object Bench {
         } else {
           val first = {
             val t0 = System.nanoTime()
-            val ok = try { exec(name, sfDir); true }
+            val ok = try { exec(spark, name, sfDir); true }
               catch { case e: Throwable =>
                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                 false
@@ -215,7 +211,7 @@ object Bench {
           }
           def timedRun(): Double = {
             val t0 = System.nanoTime()
-            val ok = try { exec(name, sfDir); true }
+            val ok = try { exec(spark, name, sfDir); true }
               catch { case e: Throwable =>
                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
                 false

@@ -1,11 +1,13 @@
 package graft
 
 import graft.sizing.{Pipeline, SizingConfig}
-import org.apache.spark.sql.SparkSession
 
 /** CLI mirroring `python impala_query_sizing.py sizing.conf` (py:58–69):
   * one arg = config path (key=value format), optional second arg = output
   * directory (default "."). Prints the five-section report.
+  *
+  * `SPARK_MASTER` (a deployment setting only this main reads) replaces
+  * the local master of [[GraftSession]].
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -17,14 +19,9 @@ object Main {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(args(0)))))
     val outDir = if (args.length > 1) args(1) else "."
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-sizing")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val local = GraftSession.builder("graft-sizing")
+    val spark =
+      GraftSession(sys.env.get("SPARK_MASTER").fold(local)(local.master))
     try println(Pipeline.run(spark, cfg, outDir).render)
     finally spark.stop()
   }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * comparisons) and splices by indexed Vector concat — bulk node copy,
   * not the former cons-walk with a three-field comparator per element
   * (measured ≥5× at k = 4096 on the saturated path; see
-  * DevTimelineAggProbe).
+  * DevTimelineAggProbe in PERF.md "Deleted dev probes").
   */
 class BoundedTimelineAgg(k: Int) extends Aggregator[
     (Long, Long, String), BoundedTimelineAgg.Buf, Seq[(Long, Long, String)]] {

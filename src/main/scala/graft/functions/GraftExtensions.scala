@@ -67,12 +67,12 @@ object GraftFunctions {
       "", "built-in")
 
   private def tsizeExpr(pods: Expression): Expression = {
-    def branch(hi: Int, label: String) =
-      (LessThanOrEqual(pods, Literal(hi.toLong)), Literal(label))
+    import graft.sizing.Bucketing.{PodBuckets, TopBucket}
     CaseWhen(
-      Seq(branch(2, "XSMALL"), branch(10, "SMALL"), branch(20, "MEDIUM"),
-        branch(40, "LARGE")),
-      Some(Literal("CUSTOM")))
+      PodBuckets.map { case (hi, l) =>
+        (LessThanOrEqual(pods, Literal(hi)), Literal(l))
+      },
+      Some(Literal(TopBucket)))
   }
 
   private def hash60Expr(e: Expression): Expression = {

@@ -333,7 +333,8 @@ object Similarity extends QueryModule {
     * shape): probing neighbor buckets recovers the near neighbors that
     * landed one unlucky sign bit away, for `1 + w + w(w−1)/2` bucket
     * lookups (hamming = 2) instead of more hash tables. Measured on the
-    * fixture decades (DevRecallProbe, sf0.001 → sf10): single-probe
+    * fixture decades (DevRecallProbe, sf0.001 → sf10; PERF.md "Deleted
+    * dev probes"): single-probe
     * recall@10 decays to ~0–100 milli as adaptive width grows, while
     * hamming-2 multi-probe holds ≥ 200 milli at every decade — the
     * floor q202 gates.
@@ -657,7 +658,8 @@ object Similarity extends QueryModule {
     * Codes quantize the cell RESIDUAL `cv − anchor(cell)` (IVFADC
     * proper, Jégou et al. §IV): within a cell, vectors share the
     * anchor direction, so residuals are small and `K` codewords cover
-    * them far better than raw vectors — measured (DevPqProbe) as the
+    * them far better than raw vectors — measured (DevPqProbe, PERF.md
+    * "Deleted dev probes") as the
     * difference between recall collapsing at the sf10 decade and
     * tracking the coarse-IVF ceiling there. The ADC score adds the
     * exact per-(query, probed-cell) anchor dot back:
@@ -731,7 +733,8 @@ object Similarity extends QueryModule {
     * [[adaptiveNPlanes]], a fixed value rots with scale — as corpus
     * density grows, the sim margin between rank 10 and rank `shortlist`
     * shrinks below the ADC quantization error, and a fixed-200 list
-    * drops true neighbors (measured, DevPqProbe at the sf10 decade:
+    * drops true neighbors (measured, DevPqProbe at the sf10 decade, see
+    * PERF.md "Deleted dev probes":
     * fixed 200 → 100 milli on two queries; n/250 = 800 → ≥ 200 milli
     * everywhere, tracking the coarse-IVF ceiling). n/250 re-ranks 0.4%
     * of the corpus exactly — the PQ win (compressed first pass over
@@ -2623,7 +2626,8 @@ object Similarity extends QueryModule {
   // per-method floor (the q38 accuracy-bit precedent), for the two ANN
   // paths with a recall CONTRACT: IVF multi-cell probing (q41) and
   // hamming-2 multi-probe SRP ([[srpMultiProbeTopK]]). Single-probe SRP
-  // (q30) is deliberately NOT floor-gated: DevRecallProbe measured its
+  // (q30) is deliberately NOT floor-gated: DevRecallProbe (PERF.md
+  // "Deleted dev probes") measured its
   // recall@10 decaying to 0–100 milli as adaptive width grows — it is a
   // candidate GENERATOR (the near-dup pair threshold downstream
   // supplies precision), and gating it would pin a number the operator
@@ -2657,7 +2661,8 @@ object Similarity extends QueryModule {
   // in-row recall bit, which the oracle pins as literal TRUE: the
   // driver hash itself now proves every recall_ok bit evaluated true
   // AND the exact leg matches. recall_milli values remain measured by
-  // DevRecallProbe (PERF.md); the floor contract lives in the bit.
+  // DevRecallProbe (PERF.md "Deleted dev probes"); the floor contract
+  // lives in the bit.
   private def q202(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
     val exact = q29(s, dir).select(col("qid"), col("cid"))

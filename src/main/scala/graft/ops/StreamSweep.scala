@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   * summaries (one tiny row per non-empty time bucket — bounded by the
   * analysis window, not the data).
   *
-  * Cost shape at sf0.1 (measured, DevStreamProbe): ≈1.5 s interval
+  * Cost shape at sf0.1 (measured, DevStreamProbe; PERF.md "Deleted dev
+  * probes"): ≈1.5 s interval
   * write+bounds, ≈5 s data micro-batch, ≈2.5 s sentinel/timeout flush,
   * ≈4 s the batch q20 parity run — q73's bench time is the price of
   * executing BOTH engines plus fixed micro-batch machinery, not a plan
@@ -554,7 +555,8 @@ object StreamSweep extends QueryModule {
     //     silently dropping pre-merge events whose individual
     //     [ts, ts+gap) window crosses the watermark — observed as a
     //     2-event session un-merged into a phantom 1-event session
-    //     (DevQ78Debug reproduces). Tumbling windows (q75) are immune:
+    //     (reproduced by DevQ78Debug, PERF.md "Deleted dev probes").
+    //     Tumbling windows (q75) are immune:
     //     their window IS a per-row function, so that pushdown is sound.
     // The filter below sits on an aggregate output (max + gap), which
     // the optimizer cannot push past the aggregation.

@@ -1726,7 +1726,7 @@ object TextAnalysis extends QueryModule {
     * replicates into every CASE branch (~15 copies) and the fused
     * whole-stage function costs ~1.6 s of Janino compilation PER QUERY
     * (measured flat across 100× rows, DevQ103Probe: 2.4 s → 0.8 s with
-    * codegen off). Callers on a hot path bind `host` and `parts` as
+    * codegen off; PERF.md "Deleted dev probes"). Callers on a hot path bind `host` and `parts` as
     * their own projection columns — split/regexp are non-cheap and
     * multiply-referenced, so CollapseProject keeps that projection
     * separate and each stage codegens small.

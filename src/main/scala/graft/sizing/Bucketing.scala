@@ -20,14 +20,24 @@ import org.apache.spark.sql.functions._
 object Bucketing {
 
   /** Pod-count ranges (py:14–20): 0–2 XSMALL, 3–10 SMALL, 11–20 MEDIUM,
-    * 21–40 LARGE, 41+ CUSTOM. Bounds are inclusive on ceil'd values.
+    * 21–40 LARGE, 41+ CUSTOM. Bounds are inclusive on ceil'd values. The
+    * one threshold table behind [[tsize]], [[tsizeValue]], [[tsizeSql]]
+    * and the `graft_tsize` SQL function: (inclusive upper bound, label).
     */
-  def tsize(pods: Column): Column =
-    when(pods <= 2, "XSMALL")
-      .when(pods <= 10, "SMALL")
-      .when(pods <= 20, "MEDIUM")
-      .when(pods <= 40, "LARGE")
-      .otherwise("CUSTOM") // Q2: total (reference: None above 999)
+  val PodBuckets: Seq[(Long, String)] =
+    Seq(2L -> "XSMALL", 10L -> "SMALL", 20L -> "MEDIUM", 40L -> "LARGE")
+
+  /** Label above the last bound — Q2: total (reference: None above 999). */
+  val TopBucket = "CUSTOM"
+
+  def tsize(pods: Column): Column = {
+    val (hi0, l0) = PodBuckets.head
+    PodBuckets.tail
+      .foldLeft(when(pods <= hi0, l0)) { case (c, (hi, l)) =>
+        c.when(pods <= hi, l)
+      }
+      .otherwise(TopBucket)
+  }
 
   /** The reference's dead cache-GB ranges (py:22–28), kept for parity
     * experiments (Q1).
@@ -41,19 +51,13 @@ object Bucketing {
 
   /** Driver-side scalar twin of [[tsize]] (report assembly, py:370). */
   def tsizeValue(pods: Long): String =
-    if (pods <= 2) "XSMALL"
-    else if (pods <= 10) "SMALL"
-    else if (pods <= 20) "MEDIUM"
-    else if (pods <= 40) "LARGE"
-    else "CUSTOM"
+    PodBuckets.collectFirst { case (hi, l) if pods <= hi => l }
+      .getOrElse(TopBucket)
 
   /** SQL text of [[tsize]] over a named column — shared with oracle SQL so
     * the DuckDB side is guaranteed textually identical.
     */
   def tsizeSql(colName: String): String =
-    s"""CASE WHEN $colName <= 2 THEN 'XSMALL'
-       |     WHEN $colName <= 10 THEN 'SMALL'
-       |     WHEN $colName <= 20 THEN 'MEDIUM'
-       |     WHEN $colName <= 40 THEN 'LARGE'
-       |     ELSE 'CUSTOM' END""".stripMargin
+    PodBuckets.map { case (hi, l) => s"WHEN $colName <= $hi THEN '$l'" }
+      .mkString("CASE ", "\n     ", s"\n     ELSE '$TopBucket' END")
 }

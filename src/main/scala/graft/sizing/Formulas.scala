@@ -44,9 +44,9 @@ object Formulas {
     */
   def derive(df: DataFrame, cfg: SizingConfig): DataFrame = {
     val withBase = df
-      // P2 (py:219–220)
+      // P2 (py:219–220); the sink's query_sla_sec is Pipeline.outputRow's
+      // round(duration_sec, 2)
       .withColumn("duration_sec", col("duration_millis") / 1000.0)
-      .withColumn("query_sla_sec", col("duration_millis") / 1000.0)
       // P3 (py:221), Q9 guard
       .withColumn("min_parallelism",
         ceil(safeDiv(col("cpu_time_sec"), col("duration_sec"))))

@@ -49,7 +49,9 @@ final case class SizingConfig(
 object SizingConfig {
 
   /** Parse the reference's flat `key=value` config format (py:88–92):
-    * one pair per line, `#` comments and blank lines ignored.
+    * one pair per line, `#` comments and blank lines ignored. A value that
+    * is not a number, or a node size, `mt_dop` or `pod_limit` ≤ 0, is
+    * rejected with an error naming the key and the value.
     */
   def fromProperties(text: String): SizingConfig = {
     val kv = text.linesIterator
@@ -60,18 +62,29 @@ object SizingConfig {
         l.take(i).trim -> l.drop(i + 1).trim
       }
       .toMap
-    def d(k: String, dflt: Double) = kv.get(k).map(_.toDouble).getOrElse(dflt)
-    def i(k: String, dflt: Int) = kv.get(k).map(_.toInt).getOrElse(dflt)
+    def num[N](k: String, dflt: N, parse: String => N): N =
+      kv.get(k).fold(dflt) { v =>
+        try parse(v)
+        catch { case _: NumberFormatException =>
+          throw new IllegalArgumentException(s"$k=$v is not a number")
+        }
+      }
+    def positive[N](k: String, dflt: N, parse: String => N)(
+        implicit n: Numeric[N]): N = {
+      val v = num(k, dflt, parse)
+      require(n.gt(v, n.zero), s"$k=${kv(k)} must be > 0")
+      v
+    }
     SizingConfig(
-      scratchGbPerNode = d("scratch_gb_per_node", 1000),
-      cacheGbPerNode = d("cache_gb_per_node", 1000),
-      queryMemPerNode = d("query_mem_per_node", 200),
-      vcoresPerNode = i("vcores_per_node", 16),
-      memAdjustmentPct = d("mem_adjustment_pct", 100),
-      cpuAdjustmentPct = d("cpu_adjustment_pct", 80),
-      cacheAdjustmentPct = d("cache_adjustment_pct", 100),
-      mtDop = i("mt_dop", 12),
-      podLimit = i("pod_limit", 100),
+      scratchGbPerNode = positive("scratch_gb_per_node", 1000.0, _.toDouble),
+      cacheGbPerNode = positive("cache_gb_per_node", 1000.0, _.toDouble),
+      queryMemPerNode = positive("query_mem_per_node", 200.0, _.toDouble),
+      vcoresPerNode = positive("vcores_per_node", 16, _.toInt),
+      memAdjustmentPct = num("mem_adjustment_pct", 100.0, _.toDouble),
+      cpuAdjustmentPct = num("cpu_adjustment_pct", 80.0, _.toDouble),
+      cacheAdjustmentPct = num("cache_adjustment_pct", 100.0, _.toDouble),
+      mtDop = positive("mt_dop", 12, _.toInt),
+      podLimit = positive("pod_limit", 100, _.toInt),
       pool = kv.get("pool").filter(_.nonEmpty),
       inputFile = kv.get("input_file").filter(_.nonEmpty),
       outputFile = kv.getOrElse("output_file", "sizing_output.csv"),

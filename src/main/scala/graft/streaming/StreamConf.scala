@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * harnesses carry tiny state (10²–10⁴ keys), so the session's 32
   * batch-shuffle partitions are pure commit overhead — measured at
   * sf0.1: 32 parts ≈ 1.9 s per processAllAvailable vs 4 parts ≈ 1.2 s
-  * (DevQ75Probe). A production stream sizes this to its state volume
+  * (DevQ75Probe, PERF.md "Deleted dev probes"). A production stream sizes this to its state volume
   * (state-rows ÷ target-rows-per-store), exactly as this helper's `n`;
   * the number is a deployment knob, not a semantic one.
   */

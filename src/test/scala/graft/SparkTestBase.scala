@@ -4,20 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite — Spark startup is ~5s,
-  * per-suite sessions would dominate `sbt test` wall-clock.
+  * per-suite sessions would dominate `sbt test` wall-clock. Pinned to 4
+  * cores and 4 shuffle partitions whatever the host has.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession(GraftSession.builder("graft-test", cores = 4))
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

@@ -45,4 +45,26 @@ class SizingConfigSpec extends AnyFunSuite {
     val c = SizingConfig.fromProperties("pool=a=b")
     assert(c.pool.contains("a=b"))
   }
+
+  test("fromProperties names the key and value of a number that does not parse") {
+    val e = intercept[IllegalArgumentException](
+      SizingConfig.fromProperties("vcores_per_node=abc"))
+    assert(e.getMessage.contains("vcores_per_node=abc"))
+    val d = intercept[IllegalArgumentException](
+      SizingConfig.fromProperties("mem_adjustment_pct=lots"))
+    assert(d.getMessage.contains("mem_adjustment_pct=lots"))
+  }
+
+  test("fromProperties rejects node sizes, mt_dop and pod_limit <= 0") {
+    for {
+      k <- Seq("vcores_per_node", "mt_dop", "pod_limit",
+        "scratch_gb_per_node", "cache_gb_per_node", "query_mem_per_node")
+      v <- Seq("0", "-1")
+    } {
+      val e = intercept[IllegalArgumentException](
+        SizingConfig.fromProperties(s"$k=$v"))
+      assert(e.getMessage.contains(s"$k=$v"))
+    }
+    assert(SizingConfig.fromProperties("pod_limit=1").podLimit == 1)
+  }
 }
