@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Dev-only: the one timing and plan runner for battery entries.
   *
   * Usage: `runMain graft.DevProfile <sfDir>[,<sfDir>…] <entry…|all>
@@ -11,11 +15,12 @@ package graft
   * noop-sink execution, with `clearCache()` after each run. Output is one
   * line per entry:
   *
-  * {{{PROFILE <entry> <sf>=<min s> … x=<last/first>}}}
+  * {{{PROFILE <entry> <sf>=<min s> … x=<last/first> jobs=<n>}}}
   *
   * where `<sf>` is the directory's last path component, `<min s>` the
-  * fastest of the runs (-1 if any run failed) and `x` the ratio of the
-  * last directory's minimum to the first's (-1 on a failure). `--plan`
+  * fastest of the runs (-1 if any run failed), `x` the ratio of the
+  * last directory's minimum to the first's (-1 on a failure) and `jobs`
+  * the number of Spark jobs the entry's last run started. `--plan`
   * prints the formatted physical plan on the first directory before the
   * entry is timed.
   *
@@ -49,8 +54,17 @@ object DevProfile {
       // the default 1 GiB cap kills its stream
       .config("spark.driver.maxResultSize", "4g"))
     def label(dir: String) = dir.split('/').filter(_.nonEmpty).last
-    // a failed run reports -1, never a time-to-failure
+    val jobs = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    var lastJobs = 0
+    // a failed run reports -1, never a time-to-failure; the job count is
+    // read once every event of the run has reached the listener
     def timed(name: String, dir: String): Double = {
+      GraftListenerAccess.drain(spark.sparkContext)
+      jobs.set(0)
       val t0 = System.nanoTime()
       val t =
         try { Bench.exec(spark, name, dir); (System.nanoTime() - t0) / 1e9 }
@@ -58,6 +72,8 @@ object DevProfile {
           System.err.println(s"[profile] $name @ $dir FAILED: ${e.getMessage}")
           -1.0
         }
+      GraftListenerAccess.drain(spark.sparkContext)
+      lastJobs = jobs.get
       spark.catalog.clearCache()
       t
     }
@@ -75,7 +91,7 @@ object DevProfile {
       }
       val x = if (mins.contains(-1.0)) -1.0 else mins.last / mins.head
       val cells = dirs.zip(mins).map { case (d, t) => f"${label(d)}=$t%.2fs" }
-      println(f"PROFILE $name ${cells.mkString(" ")} x=$x%.2f")
+      println(f"PROFILE $name ${cells.mkString(" ")} x=$x%.2f jobs=$lastJobs")
     }
     spark.stop()
   }

@@ -4,7 +4,8 @@ import graft.sizing.{Pipeline, SizingConfig}
 
 /** CLI mirroring `python impala_query_sizing.py sizing.conf` (py:58–69):
   * one arg = config path (key=value format), optional second arg = output
-  * directory (default "."). Prints the five-section report.
+  * directory (default "."). Prints the five-section report; each config
+  * key the parser does not read is named on stderr.
   *
   * `SPARK_MASTER` (a deployment setting only this main reads) replaces
   * the local master of [[GraftSession]].
@@ -15,9 +16,11 @@ object Main {
       System.err.println("usage: graft.Main <sizing.conf> [outDir]")
       sys.exit(1)
     }
-    val cfg = SizingConfig.fromProperties(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(args(0)))))
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(args(0))))
+    val cfg = SizingConfig.fromProperties(text)
+    SizingConfig.unknownKeys(text).foreach(k =>
+      System.err.println(s"[config] unknown key $k ignored"))
     val outDir = if (args.length > 1) args(1) else "."
     val local = GraftSession.builder("graft-sizing")
     val spark =

@@ -3,10 +3,12 @@ package graft.sizing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Global workload aggregates (SURVEY §2.5, A1–A9) — the reference keeps
+/** Global workload aggregates (SURVEY §2.5, A1–A7) — the reference keeps
   * these as running variables in its single loop (py:272–305); in Spark
   * they collapse into ONE hash aggregate (partial + final, map-side
-  * combine free) plus one tiny groupBy for the size matrix.
+  * combine free) plus one tiny groupBy for the size matrix. These are the
+  * battery's forms (q18, q19); the sizing report folds the same
+  * aggregates into its one pass over the routed log ([[Report.aggregate]]).
   */
 object Aggregates {
 
@@ -18,12 +20,7 @@ object Aggregates {
     * order (Spark 4 runs ANSI mode, so a long overflow would throw).
     */
   def global(derived: DataFrame): DataFrame =
-    derived.agg(globalExprs.head, globalExprs.tail: _*)
-
-  /** The A1–A6 aggregate expressions, exposed so [[Report]] can fuse them
-    * with the rounded-maxima set into ONE pass over the kept rows.
-    */
-  private[sizing] val globalExprs: Seq[org.apache.spark.sql.Column] = Seq(
+    derived.agg(
       count(lit(1)).as("total_queries"), // A1
       count_distinct(col("pool")).as("n_pools"), // A2
       array_join(sort_array(collect_set(col("pool"))), ",").as("pools"),
@@ -52,35 +49,29 @@ object Aggregates {
       sum((col("memory_spilled_gb") * col("duration_sec"))
         .cast("decimal(38,6)")).cast("double").as("util_spill_gb_sec"))
 
-  /** Maxima over the 2dp-ROUNDED per-node averages (the reference rounds
-    * at derivation, py:223–227, and compares the rounded values,
-    * py:279–292). Prefixed names — the UN-rounded A3 maxima in
-    * [[globalExprs]] already own `max_vcores` etc.
+  /** The size matrix's dimensions (A5, py:294–298) and the pod count each
+    * one buckets, in the rendered column order.
     */
-  private[sizing] val roundedMaxExprs: Seq[org.apache.spark.sql.Column] = Seq(
-    max(round(col("avg_vcores_per_node"), 2)).as("r_max_vcores"),
-    max(round(col("avg_mem_per_node"), 2)).as("r_max_mem"),
-    max(round(col("avg_cache_per_node"), 2)).as("r_max_data"),
-    max(round(col("avg_data_rate_per_node"), 2)).as("r_max_data_rate"),
-    max(round(col("avg_spill_per_node"), 2)).as("r_max_spill"))
+  private[sizing] val MatrixDims: Seq[(String, String)] = Seq(
+    "count" -> "min_executor_pod",
+    "cache" -> "min_executor_pod_data",
+    "mem" -> "min_executor_pod_mem",
+    "cpu" -> "min_executor_pod_cpu",
+    "spill" -> "min_executor_pod_spill")
 
   /** A5: the (tsize × dimension) count matrix. The reference maintains five
     * independent histograms (py:294–298); we unpivot the five bucketed
     * columns with `stack` and pivot back — one shuffle on a ≤25-key space.
     */
   def sizeMatrix(derived: DataFrame): DataFrame = {
-    val bucketed = derived.select(
-      Bucketing.tsize(col("min_executor_pod")).as("t_count"),
-      Bucketing.tsize(col("min_executor_pod_data")).as("t_cache"),
-      Bucketing.tsize(col("min_executor_pod_mem")).as("t_mem"),
-      Bucketing.tsize(col("min_executor_pod_cpu")).as("t_cpu"),
-      Bucketing.tsize(col("min_executor_pod_spill")).as("t_spill"))
+    val bucketed = derived.select(MatrixDims.map { case (d, c) =>
+      Bucketing.tsize(col(c)).as(s"t_$d") }: _*)
+    val stacked = MatrixDims.map { case (d, _) => s"'$d', t_$d" }
+      .mkString(s"stack(${MatrixDims.size}, ", ", ", ") AS (dimension, tsize)")
     bucketed
-      .select(expr(
-        """stack(5, 'count', t_count, 'cache', t_cache, 'mem', t_mem,
-          |'cpu', t_cpu, 'spill', t_spill) AS (dimension, tsize)""".stripMargin))
+      .select(expr(stacked))
       .groupBy("tsize")
-      .pivot("dimension", Seq("count", "cache", "mem", "cpu", "spill"))
+      .pivot("dimension", MatrixDims.map(_._1))
       .count()
       .na.fill(0L)
   }
@@ -100,18 +91,5 @@ object Aggregates {
       "mem" -> pct(globalRow.getAs[Double]("util_mem_gb_sec"), cfg.queryMemPerNode),
       "cpu" -> pct(globalRow.getAs[Double]("util_cpu_sec"), cfg.vcoresPerNode.toDouble),
       "spill" -> pct(globalRow.getAs[Double]("util_spill_gb_sec"), cfg.scratchGbPerNode))
-  }
-
-  /** A9: dimensions (fixed order — Q13 stance) with nonzero counts at the
-    * workload's tsize row.
-    */
-  def constrainedBy(matrix: Array[org.apache.spark.sql.Row],
-      workloadTsize: String): Seq[String] = {
-    matrix.find(_.getAs[String]("tsize") == workloadTsize) match {
-      case Some(r) =>
-        Seq("cache", "mem", "cpu", "spill")
-          .filter(d => r.getAs[Long](d) > 0)
-      case None => Nil
-    }
   }
 }

@@ -30,6 +30,9 @@ object Bucketing {
   /** Label above the last bound — Q2: total (reference: None above 999). */
   val TopBucket = "CUSTOM"
 
+  /** Every label, smallest first: the report's matrix row order. */
+  val Sizes: Seq[String] = PodBuckets.map(_._2) :+ TopBucket
+
   def tsize(pods: Column): Column = {
     val (hi0, l0) = PodBuckets.head
     PodBuckets.tail
@@ -38,6 +41,17 @@ object Bucketing {
       }
       .otherwise(TopBucket)
   }
+
+  /** [[tsize]] as the label's position in [[Sizes]] (an INT; NULL pods
+    * land in the top bucket, like [[tsize]]): an integer the report's
+    * matrix cells compare instead of a string.
+    */
+  def tsizeIndex(pods: Column): Column =
+    PodBuckets.zipWithIndex.tail
+      .foldLeft(when(pods <= PodBuckets.head._1, 0)) {
+        case (c, ((hi, _), i)) => c.when(pods <= hi, i)
+      }
+      .otherwise(PodBuckets.size)
 
   /** The reference's dead cache-GB ranges (py:22–28), kept for parity
     * experiments (Q1).

@@ -64,8 +64,15 @@ object Concurrency {
     * localCheckpoint per call, which q73 makes per micro-batch, left
     * blocks accumulating until driver GC and took the entry 7.5 → 35 s at
     * sf0.1). Callers with an expensive upstream persist `kept` instead.
+    *
+    * `eventRange` is the events' [min, max] instant when the caller
+    * already has it (the report computes it in its aggregate pass); it
+    * only sets the scan's bucket bounds, so a range that is off costs
+    * balance, never correctness. Without it the range costs one eager
+    * min/max action over the events.
     */
-  def sweep(kept: DataFrame, deltas: Seq[(String, Column)]): DataFrame = {
+  def sweep(kept: DataFrame, deltas: Seq[(String, Column)],
+      eventRange: Option[(Double, Double)] = None): DataFrame = {
     def event(ts: String, kind: Int, sign: Long): Column = struct(
       col(ts).as("ts_us") +: lit(kind).as("kind") +: lit(sign).as("d_count") +:
         deltas.map { case (n, d) => (if (sign > 0) d else -d).as(s"d_$n") }: _*)
@@ -79,10 +86,11 @@ object Concurrency {
     // Event instants are near-uniform over the analysis window, so an even
     // split of [min, max] balances the buckets; balance only affects
     // local-scan parallelism, never correctness.
-    val mm = events.agg(min(col("ts_us")).cast("double"),
-      max(col("ts_us")).cast("double")).head()
-    val range = if (mm.isNullAt(0)) (0.0, 0.0)
-      else (mm.getDouble(0), mm.getDouble(1))
+    val range = eventRange.getOrElse {
+      val mm = events.agg(min(col("ts_us")).cast("double"),
+        max(col("ts_us")).cast("double")).head()
+      if (mm.isNullAt(0)) (0.0, 0.0) else (mm.getDouble(0), mm.getDouble(1))
+    }
 
     PrefixSum.scan(events, "ts_us",
       Seq(col("ts_us"), col("kind"), col("query_id")),

@@ -148,6 +148,11 @@ object Pipeline {
     * is the ONLY cache: the source (CSV scan or REST pages) is read and
     * derived a single time, every sink and report action is a filter over
     * it and sees identical data, and it is released before returning.
+    *
+    * Spark actions after the source's own: ONE aggregate pass
+    * ([[Report.aggregate]] — every report number but the sweep's, the
+    * sinks' row counts and the sweep's event range; it also fills the
+    * cache), one write per non-empty sink, and the sweep's maxima.
     */
   private def finish(cfg: SizingConfig, querylog: DataFrame, outDir: String)
       : SizingReport = {
@@ -155,27 +160,25 @@ object Pipeline {
     try {
       def flow(name: String) = routed.filter(col("flow") === name)
       val kept = flow("kept")
-      // ONE routing pre-pass replaces the per-sink isEmpty probes AND the
-      // report's prune count / pool roster actions (Report.routedCounts)
-      val pre = Report.routedCounts(routed)
+      val agg = Report.aggregate(routed)
 
       outputRow(kept).write.mode("overwrite").option("header", "true")
         .csv(s"$outDir/${cfg.outputFile}")
       // K2 lazy creation quirk: the reference only creates the prune file on
       // the first over-limit row; an empty write is the distributed analog —
       // but we match observable behavior (no file when no pruned rows).
-      if (pre.getAs[Long]("n_pruned") > 0)
+      if (agg.getAs[Long]("n_pruned") > 0)
         outputRow(flow("pruned")).write.mode("overwrite")
           .option("header", "true").csv(s"$outDir/${cfg.pruneOutputFile}")
       // concat_ws drops the NULL query_state of CSV mode
-      if (pre.getAs[Long]("n_skipped") > 0)
+      if (agg.getAs[Long]("n_skipped") > 0)
         flow("skipped").select(concat_ws("|", col("query_id"),
             col("duration_millis"), col("start_time"), col("end_time"),
             col("query_state")).as("value"))
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
-      Report.build(cfg, kept,
-        Concurrency.maxima(Concurrency.sweep(kept, reportDeltas)), pre)
+      Report.build(cfg, agg, Concurrency.maxima(Concurrency.sweep(kept,
+        reportDeltas, eventRange = Some(Report.eventRange(agg)))))
     } finally routed.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft.sizing
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's five report sections (SURVEY §2.7 K4, py:399–458) as a
@@ -74,10 +74,10 @@ final case class SizingReport(
     sb ++= "\n\t\t\t    Query Counts\n"
     sb ++= "                     Cache       Mem         CPU         Spill\n"
     sb ++= "Size     Count       Constrained Constrained Constrained Constrained\n"
-    Seq("XSMALL", "SMALL", "MEDIUM", "LARGE", "CUSTOM").foreach { t =>
+    Bucketing.Sizes.foreach { t =>
       val row = matrix.getOrElse(t, Map.empty)
       sb ++= ("%8s".format(t) +
-        Seq("count", "cache", "mem", "cpu", "spill")
+        Aggregates.MatrixDims.map(_._1)
           .map(d => " " + "%11d".format(row.getOrElse(d, 0L))).mkString + "\n")
     }
 
@@ -92,67 +92,124 @@ final case class SizingReport(
 
 object Report {
 
-  /** ONE pre-pass over the routed querylog ([[Routing.route]]), run by
-    * [[Pipeline]] BEFORE the sinks: total queries + pool roster (Q10 —
-    * both include pruned rows, never skipped ones) and the prune/skip
-    * counts. Replaces three separate Spark actions (the kept∪pruned
-    * head, `pruned.count()`, and the sinks' `isEmpty` probes) with a
-    * single aggregate; `count(when(...))` counts only the matching flow
-    * (COUNT skips the NULL of the un-matched branch), and `collect_set`
-    * likewise drops the NULL pools of skipped rows.
+  /** Every number the report reads from the routed querylog
+    * ([[Routing.route]]), in ONE aggregate pass, run by [[Pipeline]] before
+    * the sinks (it is also the pass that fills the routed cache):
+    *  - `n` and `pools` over kept + pruned rows (Q10 — never skipped ones),
+    *    `n_pruned`, `n_skipped`;
+    *  - over kept rows only: the A3/A4/A6 aggregates the report reads
+    *    (`max_backends`, `max_pods_query_id`, `min_executor_pod_workload`,
+    *    the decimal `total_query_time_sec` and `util_*` sums) and the
+    *    `r_max_*` maxima of the 2dp-ROUNDED per-node averages (the
+    *    reference rounds at derivation, py:223–227, and compares the
+    *    rounded values, py:279–292);
+    *  - `m_<size index>_<dim>`: the 25 kept-only size-matrix cells (A5);
+    *  - `ev_lo`/`ev_hi`: the kept rows' event range (both instants
+    *    non-null — the rows the sweep keeps), NULL when there are none.
+    *
+    * Each kept-only aggregate is `agg(when(kept, x))`: an un-matched row
+    * is NULL, which every aggregate here skips. The kept flag and each
+    * dimension's integer size index are projected once before the
+    * aggregate, not re-derived per cell.
     */
-  def routedCounts(routed: DataFrame): org.apache.spark.sql.Row =
-    routed.agg(
+  def aggregate(routed: DataFrame): Row = {
+    val kept = col("k")
+    def k(c: Column): Column = when(kept, c)
+    def maxRounded(c: String, name: String): Column =
+      max(k(round(col(c), 2))).as(name)
+    def weighted(c: Column, name: String): Column =
+      sum(k(c.cast("decimal(38,6)"))).cast("double").as(name)
+    val hasEvents = kept && col("admitted_us").isNotNull &&
+      col("end_us").isNotNull
+    def ev(c: String): Column = when(hasEvents, col(c))
+    val cells = for {
+      i <- Bucketing.Sizes.indices
+      (d, _) <- Aggregates.MatrixDims
+    } yield count(when(col(s"t_$d") === i, 1)).as(s"m_${i}_$d")
+    val aggs = Seq(
       count(when(col("flow") =!= "skipped", 1)).as("n"),
       array_join(sort_array(collect_set(
         when(col("flow") =!= "skipped", col("pool")))), ",").as("pools"),
       count(when(col("flow") === "pruned", 1)).as("n_pruned"),
-      count(when(col("flow") === "skipped", 1)).as("n_skipped"))
+      count(when(col("flow") === "skipped", 1)).as("n_skipped"),
+      max(k(col("num_backends"))).as("max_backends"),
+      // A4 argmax with deterministic tiebreak: highest pods, then highest
+      // query_id (see Aggregates.global); rows with a NULL ordering (the
+      // un-kept ones) are skipped by max_by
+      max_by(col("query_id"), k(struct(col("min_executor_pod"),
+        col("query_id")))).as("max_pods_query_id"),
+      max(k(col("min_executor_pod"))).as("min_executor_pod_workload"),
+      weighted((col("duration_millis") - col("admission_wait")) / 1000.0,
+        "total_query_time_sec"),
+      weighted(col("reqd_agg_mem") * col("duration_sec"), "util_mem_gb_sec"),
+      weighted(col("cpu_time_sec"), "util_cpu_sec"),
+      weighted(col("reqd_cache_gb") * col("duration_sec"),
+        "util_cache_gb_sec"),
+      weighted(col("memory_spilled_gb") * col("duration_sec"),
+        "util_spill_gb_sec"),
+      maxRounded("avg_vcores_per_node", "r_max_vcores"),
+      maxRounded("avg_mem_per_node", "r_max_mem"),
+      maxRounded("avg_cache_per_node", "r_max_data"),
+      maxRounded("avg_data_rate_per_node", "r_max_data_rate"),
+      maxRounded("avg_spill_per_node", "r_max_spill"),
+      least(min(ev("admitted_us")), min(ev("end_us")))
+        .cast("double").as("ev_lo"),
+      greatest(max(ev("admitted_us")), max(ev("end_us")))
+        .cast("double").as("ev_hi")) ++ cells
+    routed
+      .withColumn("k", col("flow") === "kept")
+      .withColumns(Aggregates.MatrixDims.map { case (d, c) =>
+        s"t_$d" -> when(kept, Bucketing.tsizeIndex(col(c)))
+      }.toMap)
+      .agg(aggs.head, aggs.tail: _*)
       .head()
+  }
 
-  /** Assemble the report. Collects exactly THREE tiny results — the fused
-    * global + rounded-maxima row (ONE pass over kept), the size matrix,
-    * and the concurrency row; the routing counts arrive pre-computed in
-    * `pre` (see [[routedCounts]]). Down from six driver actions: at the
-    * battery's scale the fixed per-action floor, not data volume,
-    * dominated the e2e entry's cost.
-    *
-    * Parity notes: the reference takes maxima over the 2dp-ROUNDED
-    * per-node averages (py:223–227 round at derivation, py:279–292 compare
-    * the rounded values), so the maxima here round before aggregating.
-    * A1/A2 count pools/queries BEFORE the prune split (Q10, py:215–216).
+  /** The kept rows' event range from [[aggregate]]'s row, for
+    * [[Concurrency.sweep]]'s `eventRange`; (0, 0) when no kept row has
+    * both instants (the sweep then has no events).
     */
-  def build(cfg: SizingConfig, kept: DataFrame, concurrencyRow: DataFrame,
-      pre: org.apache.spark.sql.Row): SizingReport = {
-    val fused = Aggregates.globalExprs ++ Aggregates.roundedMaxExprs
-    val g = kept.agg(fused.head, fused.tail: _*).head()
+  def eventRange(agg: Row): (Double, Double) =
+    if (agg.isNullAt(agg.fieldIndex("ev_lo"))) (0.0, 0.0)
+    else (agg.getAs[Double]("ev_lo"), agg.getAs[Double]("ev_hi"))
 
-    val matrixRows = Aggregates.sizeMatrix(kept).collect()
-    val matrix = matrixRows.map { r =>
-      r.getAs[String]("tsize") -> Seq("count", "cache", "mem", "cpu", "spill")
-        .map(d => d -> r.getAs[Long](d)).toMap
-    }.toMap
+  /** Assemble the report from [[aggregate]]'s row and the sweep's maxima
+    * row — the only two results the report collects. At the battery's
+    * scale the fixed cost of each driver action, not data volume,
+    * dominates the e2e entry's cost, so nothing else is collected.
+    *
+    * A1/A2 count pools/queries BEFORE the prune split (Q10, py:215–216).
+    * A matrix row is listed only when one of its cells is nonzero; A9
+    * `constrainedBy` is the dimensions (fixed order — Q13 stance) with
+    * nonzero counts at the workload's tsize row.
+    */
+  def build(cfg: SizingConfig, agg: Row, concurrencyRow: DataFrame)
+      : SizingReport = {
+    val matrix = Bucketing.Sizes.zipWithIndex.map { case (t, i) =>
+      t -> Aggregates.MatrixDims.map { case (d, _) =>
+        d -> agg.getAs[Long](s"m_${i}_$d") }.toMap
+    }.filter(_._2.values.exists(_ > 0)).toMap
 
     val c = concurrencyRow.head()
     // the sweep's DECIMAL maxima (Pipeline's payload); NULL when no row
     // was kept, read as 0 like the Long fields
     def dbl(name: String): Double =
       Option(c.getAs[java.math.BigDecimal](name)).fold(0.0)(_.doubleValue)
-    val podWorkload = g.getAs[Long]("min_executor_pod_workload")
+    val podWorkload = agg.getAs[Long]("min_executor_pod_workload")
     val tsizeWl = Bucketing.tsizeValue(podWorkload)
 
     SizingReport(
-      totalQueries = pre.getAs[Long]("n"),
-      totalQueryTimeSec = g.getAs[Double]("total_query_time_sec"),
-      maxPodsQueryId = g.getAs[String]("max_pods_query_id"),
-      maxBackends = g.getAs[Int]("max_backends"),
-      maxVcores = g.getAs[Double]("r_max_vcores"),
-      maxData = g.getAs[Double]("r_max_data"),
-      maxSpill = g.getAs[Double]("r_max_spill"),
-      maxMem = g.getAs[Double]("r_max_mem"),
-      maxDataRate = g.getAs[Double]("r_max_data_rate"),
-      pools = pre.getAs[String]("pools").split(",").toSeq.filter(_.nonEmpty),
-      pruneCount = pre.getAs[Long]("n_pruned"),
+      totalQueries = agg.getAs[Long]("n"),
+      totalQueryTimeSec = agg.getAs[Double]("total_query_time_sec"),
+      maxPodsQueryId = agg.getAs[String]("max_pods_query_id"),
+      maxBackends = agg.getAs[Int]("max_backends"),
+      maxVcores = agg.getAs[Double]("r_max_vcores"),
+      maxData = agg.getAs[Double]("r_max_data"),
+      maxSpill = agg.getAs[Double]("r_max_spill"),
+      maxMem = agg.getAs[Double]("r_max_mem"),
+      maxDataRate = agg.getAs[Double]("r_max_data_rate"),
+      pools = agg.getAs[String]("pools").split(",").toSeq.filter(_.nonEmpty),
+      pruneCount = agg.getAs[Long]("n_pruned"),
       podLimit = cfg.podLimit,
       maxConcurrentQueries = c.getAs[Long]("max_concurrent_queries"),
       maxPodsWorkloadStartUs = c.getAs[Long]("max_pods_at_us"),
@@ -164,8 +221,9 @@ object Report {
       minExecutorPodWorkload = podWorkload,
       maxPodsWorkload = dbl("max_concurrent_pods"),
       tsizeWorkload = tsizeWl,
-      constrainedBy = Aggregates.constrainedBy(matrixRows, tsizeWl),
+      constrainedBy = matrix.get(tsizeWl).fold(Seq.empty[String])(r =>
+        Seq("cache", "mem", "cpu", "spill").filter(r(_) > 0)),
       matrix = matrix,
-      utilizationPct = Aggregates.utilizationPct(g, cfg))
+      utilizationPct = Aggregates.utilizationPct(agg, cfg))
   }
 }

@@ -48,22 +48,43 @@ final case class SizingConfig(
 
 object SizingConfig {
 
-  /** Parse the reference's flat `key=value` config format (py:88–92):
-    * one pair per line, `#` comments and blank lines ignored. A value that
-    * is not a number, or a node size, `mt_dop` or `pod_limit` ≤ 0, is
-    * rejected with an error naming the key and the value.
+  /** The `key=value` pairs of the reference's flat config format
+    * (py:88–92), in file order: one pair per line, `#` comments and blank
+    * lines ignored, the value everything after the first `=`.
     */
-  def fromProperties(text: String): SizingConfig = {
-    val kv = text.linesIterator
+  private def pairs(text: String): Seq[(String, String)] =
+    text.linesIterator
       .map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#") && l.contains("="))
       .map { l =>
         val i = l.indexOf('=')
         l.take(i).trim -> l.drop(i + 1).trim
       }
-      .toMap
+      .toSeq
+
+  /** Parse the reference's config format. A value that is not a number,
+    * or a node size, `mt_dop` or `pod_limit` ≤ 0, is rejected with an
+    * error naming the key and the value. Keys it does not read are
+    * ignored (see [[unknownKeys]]).
+    */
+  def fromProperties(text: String): SizingConfig = read(pairs(text).toMap.get)
+
+  /** The keys of `text` that [[fromProperties]] does not read, in file
+    * order — a misspelt key silently leaves its setting at the default.
+    */
+  def unknownKeys(text: String): Seq[String] =
+    pairs(text).map(_._1).distinct.filterNot(knownKeys)
+
+  /** Every key [[read]] looks up, recorded by reading an empty config. */
+  private lazy val knownKeys: Set[String] = {
+    val seen = Set.newBuilder[String]
+    read { k => seen += k; None }
+    seen.result()
+  }
+
+  private def read(get: String => Option[String]): SizingConfig = {
     def num[N](k: String, dflt: N, parse: String => N): N =
-      kv.get(k).fold(dflt) { v =>
+      get(k).fold(dflt) { v =>
         try parse(v)
         catch { case _: NumberFormatException =>
           throw new IllegalArgumentException(s"$k=$v is not a number")
@@ -72,7 +93,7 @@ object SizingConfig {
     def positive[N](k: String, dflt: N, parse: String => N)(
         implicit n: Numeric[N]): N = {
       val v = num(k, dflt, parse)
-      require(n.gt(v, n.zero), s"$k=${kv(k)} must be > 0")
+      require(n.gt(v, n.zero), s"$k=${get(k).getOrElse(v)} must be > 0")
       v
     }
     SizingConfig(
@@ -85,11 +106,11 @@ object SizingConfig {
       cacheAdjustmentPct = num("cache_adjustment_pct", 100.0, _.toDouble),
       mtDop = positive("mt_dop", 12, _.toInt),
       podLimit = positive("pod_limit", 100, _.toInt),
-      pool = kv.get("pool").filter(_.nonEmpty),
-      inputFile = kv.get("input_file").filter(_.nonEmpty),
-      outputFile = kv.getOrElse("output_file", "sizing_output.csv"),
-      pruneOutputFile = kv.getOrElse("prune_output_file", "sizing_pruned.csv"),
-      skipQueryFile = kv.getOrElse("skip_query_file", "skipped_queries.txt")
+      pool = get("pool").filter(_.nonEmpty),
+      inputFile = get("input_file").filter(_.nonEmpty),
+      outputFile = get("output_file").getOrElse("sizing_output.csv"),
+      pruneOutputFile = get("prune_output_file").getOrElse("sizing_pruned.csv"),
+      skipQueryFile = get("skip_query_file").getOrElse("skipped_queries.txt")
     )
   }
 }

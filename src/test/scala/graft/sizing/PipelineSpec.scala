@@ -2,6 +2,10 @@ package graft.sizing
 
 import graft.SparkTestBase
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerAccess
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end EP1 golden test (SURVEY §5.3): CSV fixture → sinks + report,
   * every number hand-computed from the reference formulas.
@@ -23,13 +27,18 @@ class PipelineSpec extends SparkTestBase {
       |q4,etl,2021-07-12T00:02:00.000Z,2021-07-12T00:02:10.000Z,10000,1,,0,1,QUERY,0,1
       |""".stripMargin
 
-  private lazy val (report, outDir) = {
+  /** `Pipeline.run` with default settings over `text` as the querylog CSV,
+    * in a fresh directory; returns the report and the directory.
+    */
+  private def runCsv(text: String): (SizingReport, java.io.File) = {
     val dir = Files.createTempDirectory("graft-pipeline").toFile
     val in = new java.io.File(dir, "querylog.csv")
-    Files.writeString(in.toPath, csv)
+    Files.writeString(in.toPath, text)
     val cfg = SizingConfig(inputFile = Some(in.getAbsolutePath))
     (Pipeline.run(spark, cfg, dir.getAbsolutePath), dir)
   }
+
+  private lazy val (report, outDir) = runCsv(csv)
 
   test("individual query analysis numbers") {
     assert(report.totalQueries == 3) // kept 2 + pruned 1, skip excluded (Q10)
@@ -129,5 +138,69 @@ class PipelineSpec extends SparkTestBase {
       "Cluster Sizing", "Query Counts", "Average Cluster Utilization")
       .foreach(s => assert(r.contains(s), s))
     assert(r.contains("Max Memory Per Node: 250.0 GB")) // Q7 fixed label
+  }
+
+  test("a report over the fixture runs seven Spark actions") {
+    // the CSV header read (two), ONE aggregate pass over the routed log,
+    // the three sink writes and the sweep's maxima
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val counter = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        n.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        n.incrementAndGet()
+    }
+    GraftListenerAccess.drain(sc)
+    spark.listenerManager.register(counter)
+    try {
+      runCsv(csv)
+      GraftListenerAccess.drain(sc)
+    } finally spark.listenerManager.unregister(counter)
+    assert(n.get == 7)
+  }
+
+  /** The report of a run whose routed log has no kept row: NULL
+    * aggregates read as 0, no matrix row, no event to sweep.
+    */
+  private def emptyKept(n: Long, pools: Seq[String], pruned: Long) =
+    SizingReport(totalQueries = n, totalQueryTimeSec = 0.0,
+      maxPodsQueryId = null, maxBackends = 0, maxVcores = 0.0, maxData = 0.0,
+      maxSpill = 0.0, maxMem = 0.0, maxDataRate = 0.0, pools = pools,
+      pruneCount = pruned, podLimit = 100, maxConcurrentQueries = 0,
+      maxPodsWorkloadStartUs = 0, maxConcurrentCores = 0.0,
+      maxConcurrentCache = 0.0, maxConcurrentSpill = 0.0,
+      maxConcurrentMemory = 0.0, maxConcurrentDataRate = 0.0,
+      minExecutorPodWorkload = 0, maxPodsWorkload = 0.0,
+      tsizeWorkload = "XSMALL", constrainedBy = Nil, matrix = Map.empty,
+      utilizationPct = Map("cache" -> 0.0, "mem" -> 0.0, "cpu" -> 0.0,
+        "spill" -> 0.0))
+
+  test("every row skipped: an empty report and an empty main sink") {
+    val lines = csv.linesIterator.toSeq
+    val (r, dir) = runCsv((lines.head +: lines.tail.map(_.split(",", -1)
+      .updated(6, "").mkString(","))).mkString("\n"))
+    assert(r == emptyKept(0, Nil, 0))
+    assert(r.render.contains(
+      " Max Concurrent Resources Time: 1970-01-01T00:00:00Z\n"))
+    assert(r.render.contains("XSMALL\t\t0\t\t0\t\t\n"))
+    val main = spark.read.option("header", "true")
+      .csv(s"$dir/sizing_output.csv")
+    assert(main.count() == 0)
+    assert(!new java.io.File(dir, "sizing_pruned.csv").exists())
+    assert(spark.read.text(s"$dir/skipped_queries.txt").count() == 4)
+  }
+
+  test("every row pruned: counts and pools only, no sweep") {
+    val lines = csv.linesIterator.toSeq
+    val (r, dir) = runCsv((lines.head +: lines.tail.map(_.split(",", -1)
+      .updated(5, "150000").updated(6, "1").mkString(","))).mkString("\n"))
+    assert(r == emptyKept(4, Seq("bi", "etl"), 4))
+    assert(r.render.contains(" Queries Over Pod Limit ( 100 ): 4\n"))
+    assert(spark.read.option("header", "true")
+      .csv(s"$dir/sizing_output.csv").count() == 0)
+    assert(spark.read.option("header", "true")
+      .csv(s"$dir/sizing_pruned.csv").count() == 4)
+    assert(!new java.io.File(dir, "skipped_queries.txt").exists())
   }
 }

@@ -67,4 +67,25 @@ class SizingConfigSpec extends AnyFunSuite {
     }
     assert(SizingConfig.fromProperties("pod_limit=1").podLimit == 1)
   }
+
+  test("unknownKeys names the keys fromProperties does not read") {
+    val text =
+      """# node sizes
+        |vcores_per_nod=8
+        |pod_limit=42
+        |scratch_adjustment_pct=100
+        |vcores_per_nod=9
+        |input_file=
+        |""".stripMargin
+    assert(SizingConfig.unknownKeys(text) ==
+      Seq("vcores_per_nod", "scratch_adjustment_pct"))
+    // the misspelt key leaves its setting at the default
+    assert(SizingConfig.fromProperties(text).vcoresPerNode == 16)
+    assert(SizingConfig.unknownKeys(Seq("scratch_gb_per_node",
+      "cache_gb_per_node", "query_mem_per_node", "vcores_per_node",
+      "mem_adjustment_pct", "cpu_adjustment_pct", "cache_adjustment_pct",
+      "mt_dop", "pod_limit", "pool", "input_file", "output_file",
+      "prune_output_file", "skip_query_file").map(k => s"$k=1")
+      .mkString("\n")).isEmpty)
+  }
 }
