@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Dev-only oracle parity harness (mirrors the driver's t2 check).
 
-Usage: python3 dev/compare.py <sfDir> <verifyOutDir>
+Usage: python3 dev/compare.py <sfDir> <verifyOutDir> [name,name,...]
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the
 testdata parquet tables, canonicalizes both sides (columns sorted by name,
-rows sorted), and reports row/schema/value match per query. Not part of the
-shipped library — pre-validates the correctness gate during development.
+rows sorted), and reports row/schema/value match per query. The optional
+third argument (the comma list given to a targeted `graft.Verify`) compares
+exactly those entries; a listed entry with no engine output still fails. Not
+part of the shipped library — pre-validates the correctness gate during
+development.
 """
 import glob
 import json
@@ -46,7 +49,7 @@ def canon(rows, cols):
     return sorted(out), [cols[i] for i in order]
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=None):
     if duckdb.__version__ != PINNED_DUCKDB:
         print(f"FATAL: duckdb {duckdb.__version__} != pinned "
               f"{PINNED_DUCKDB}; the oracle dialect is verified against "
@@ -63,7 +66,11 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    for name in sorted(names.split(",") if names else oracle):
+        if name not in oracle:
+            print(f"FAIL {name}: no oracle SQL")
+            n_fail += 1
+            continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no engine output")
@@ -110,4 +117,4 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))

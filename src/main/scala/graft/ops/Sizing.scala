@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * derivation formulas + bucketing (q17), the size matrix (q18), the
   * global workload aggregates (q19), and the sweep-line concurrency
   * operator (q20) — all over the deterministic events→querylog adapter so
-  * DuckDB can oracle-check the full surface.
+  * DuckDB can oracle-check the full surface. q18 and q19 are
+  * [[Aggregates]]' definitions over the kept rows — the same columns the
+  * sizing report aggregates — so the oracle checks the report's numbers.
   *
   * q20 exercises the scalable two-pass prefix scan ([[graft.plans.PrefixSum]]):
   * the oracle's single global window proves the distributed scan equals

@@ -66,7 +66,7 @@ object StreamSweep extends QueryModule {
     import s.implicits._
     val kept = QuerylogAdapter.derived(s, dir, cfg)
       .filter(col("min_executor_pod") <= keptLimit)
-      .persist() // read 3×: bounds agg + interval write, batch sweep (×2 inside)
+      .persist() // read 3×: bounds agg, interval write, batch sweep
 
     // Bounds fold: 1 row, 2 columns — sizes the buckets and the sentinel.
     val mm = kept.agg(min(col("admitted_us")), max(col("end_us"))).head()
@@ -129,9 +129,10 @@ object StreamSweep extends QueryModule {
     } finally graft.Fs.deleteRecursively(tmp)
     val m = folded.getOrElse(sys.error("q73: no closed buckets — empty querylog?"))
 
-    // Parity against the batch operator on the same kept querylog.
-    val b = Concurrency.maxima(
-      Concurrency.sweep(kept, Concurrency.integerDeltas)).head()
+    // Parity against the batch operator on the same kept querylog, over
+    // the event range the bounds fold already found.
+    val b = Concurrency.maxima(Concurrency.sweep(kept, Concurrency.integerDeltas,
+      Some((minAdmittedUs.toDouble, maxEndUs.toDouble)))).head()
     kept.unpersist()
     val matches = b.getLong(0) == m.maxConcurrentQueries &&
       b.getLong(1) == m.maxPods && b.getLong(2) == m.maxCache &&

@@ -18,34 +18,17 @@ object Pipeline {
     * The reference's DictReader selects columns BY NAME, so the input may
     * carry any superset of the 12 required columns (its own example input
     * is a previous run's 24-column output). We mirror that: read with the
-    * header, then select+cast the canonical columns — extra columns are
-    * dropped, missing ones fail analysis (same as a KeyError).
-    *
-    * Timestamps stay raw strings for output pass-through (the reference
-    * echoes them verbatim into the output CSV); event instants are derived
-    * separately in [[withEventInstants]].
+    * header, then select+cast the columns of [[Model.querylogSchema]] —
+    * extra columns are dropped, missing ones fail analysis (same as a
+    * KeyError). The instants stay strings; [[withEventInstants]] parses
+    * them.
     */
-  def readQuerylogCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    raw.select(
-      col("query_id"),
-      col("pool"),
-      col("start_time"),
-      col("end_time"),
-      col("duration_millis").cast("long").as("duration_millis"),
-      col("reqd_cache_gb").cast("double").as("reqd_cache_gb"),
-      col("reqd_agg_mem").cast("double").as("reqd_agg_mem"),
-      col("memory_spilled_gb").cast("double").as("memory_spilled_gb"),
-      col("cpu_time_sec").cast("double").as("cpu_time_sec"),
-      col("query_type"),
-      col("admission_wait").cast("long").as("admission_wait"),
-      col("num_backends").cast("int").as("num_backends"),
-      // the skip line's API-mode state field (RestAdapter.toQuerylog)
-      lit(null).cast("string").as("query_state"))
-  }
+  def readQuerylogCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("header", "true").option("mode", "PERMISSIVE").csv(path)
+      .select(Model.querylogSchema.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)) :+
+        // the skip line's API-mode state field (RestAdapter.toQuerylog)
+        lit(null).cast("string").as("query_state"): _*)
 
   /** Admitted/end instants in µs since epoch (SURVEY §2.6 E2, py:307–310).
     *

@@ -95,72 +95,38 @@ object Report {
   /** Every number the report reads from the routed querylog
     * ([[Routing.route]]), in ONE aggregate pass, run by [[Pipeline]] before
     * the sinks (it is also the pass that fills the routed cache):
-    *  - `n` and `pools` over kept + pruned rows (Q10 — never skipped ones),
-    *    `n_pruned`, `n_skipped`;
-    *  - over kept rows only: the A3/A4/A6 aggregates the report reads
-    *    (`max_backends`, `max_pods_query_id`, `min_executor_pod_workload`,
-    *    the decimal `total_query_time_sec` and `util_*` sums) and the
-    *    `r_max_*` maxima of the 2dp-ROUNDED per-node averages (the
-    *    reference rounds at derivation, py:223–227, and compares the
-    *    rounded values, py:279–292);
-    *  - `m_<size index>_<dim>`: the 25 kept-only size-matrix cells (A5);
+    *  - `n` and the sorted `pools` array over kept + pruned rows (Q10 —
+    *    never skipped ones), `n_pruned`, `n_skipped`;
+    *  - over kept rows only, from [[Aggregates]] with the guard
+    *    `when(kept, _)`: the A3/A4/A6 workload columns, the `r_max_*`
+    *    maxima of the 2dp-rounded per-node averages and the 25 size-matrix
+    *    cells (A5);
     *  - `ev_lo`/`ev_hi`: the kept rows' event range (both instants
     *    non-null — the rows the sweep keeps), NULL when there are none.
-    *
-    * Each kept-only aggregate is `agg(when(kept, x))`: an un-matched row
-    * is NULL, which every aggregate here skips. The kept flag and each
-    * dimension's integer size index are projected once before the
-    * aggregate, not re-derived per cell.
     */
   def aggregate(routed: DataFrame): Row = {
     val kept = col("k")
     def k(c: Column): Column = when(kept, c)
-    def maxRounded(c: String, name: String): Column =
-      max(k(round(col(c), 2))).as(name)
-    def weighted(c: Column, name: String): Column =
-      sum(k(c.cast("decimal(38,6)"))).cast("double").as(name)
     val hasEvents = kept && col("admitted_us").isNotNull &&
       col("end_us").isNotNull
     def ev(c: String): Column = when(hasEvents, col(c))
-    val cells = for {
-      i <- Bucketing.Sizes.indices
-      (d, _) <- Aggregates.MatrixDims
-    } yield count(when(col(s"t_$d") === i, 1)).as(s"m_${i}_$d")
     val aggs = Seq(
       count(when(col("flow") =!= "skipped", 1)).as("n"),
-      array_join(sort_array(collect_set(
-        when(col("flow") =!= "skipped", col("pool")))), ",").as("pools"),
+      sort_array(collect_set(
+        when(col("flow") =!= "skipped", col("pool")))).as("pools"),
       count(when(col("flow") === "pruned", 1)).as("n_pruned"),
-      count(when(col("flow") === "skipped", 1)).as("n_skipped"),
-      max(k(col("num_backends"))).as("max_backends"),
-      // A4 argmax with deterministic tiebreak: highest pods, then highest
-      // query_id (see Aggregates.global); rows with a NULL ordering (the
-      // un-kept ones) are skipped by max_by
-      max_by(col("query_id"), k(struct(col("min_executor_pod"),
-        col("query_id")))).as("max_pods_query_id"),
-      max(k(col("min_executor_pod"))).as("min_executor_pod_workload"),
-      weighted((col("duration_millis") - col("admission_wait")) / 1000.0,
-        "total_query_time_sec"),
-      weighted(col("reqd_agg_mem") * col("duration_sec"), "util_mem_gb_sec"),
-      weighted(col("cpu_time_sec"), "util_cpu_sec"),
-      weighted(col("reqd_cache_gb") * col("duration_sec"),
-        "util_cache_gb_sec"),
-      weighted(col("memory_spilled_gb") * col("duration_sec"),
-        "util_spill_gb_sec"),
-      maxRounded("avg_vcores_per_node", "r_max_vcores"),
-      maxRounded("avg_mem_per_node", "r_max_mem"),
-      maxRounded("avg_cache_per_node", "r_max_data"),
-      maxRounded("avg_data_rate_per_node", "r_max_data_rate"),
-      maxRounded("avg_spill_per_node", "r_max_spill"),
-      least(min(ev("admitted_us")), min(ev("end_us")))
-        .cast("double").as("ev_lo"),
-      greatest(max(ev("admitted_us")), max(ev("end_us")))
-        .cast("double").as("ev_hi")) ++ cells
-    routed
-      .withColumn("k", col("flow") === "kept")
-      .withColumns(Aggregates.MatrixDims.map { case (d, c) =>
-        s"t_$d" -> when(kept, Bucketing.tsizeIndex(col(c)))
-      }.toMap)
+      count(when(col("flow") === "skipped", 1)).as("n_skipped")) ++
+      Aggregates.workload(k) ++
+      Aggregates.PerNodeMaxima.map { case (c, s) =>
+        max(k(round(col(c), 2))).as(s"r_max_$s") } ++
+      Seq(
+        least(min(ev("admitted_us")), min(ev("end_us")))
+          .cast("double").as("ev_lo"),
+        greatest(max(ev("admitted_us")), max(ev("end_us")))
+          .cast("double").as("ev_hi")) ++
+      Aggregates.matrixCells
+    Aggregates.withSizeIndices(
+      routed.withColumn("k", col("flow") === "kept"), k)
       .agg(aggs.head, aggs.tail: _*)
       .head()
   }
@@ -178,17 +144,15 @@ object Report {
     * scale the fixed cost of each driver action, not data volume,
     * dominates the e2e entry's cost, so nothing else is collected.
     *
-    * A1/A2 count pools/queries BEFORE the prune split (Q10, py:215–216).
-    * A matrix row is listed only when one of its cells is nonzero; A9
+    * A1/A2 count pools/queries BEFORE the prune split (Q10, py:215–216);
+    * each pool is one entry, as the reference prints each member of its
+    * set (py:412–413). The matrix is [[Aggregates.matrix]]; A9
     * `constrainedBy` is the dimensions (fixed order — Q13 stance) with
     * nonzero counts at the workload's tsize row.
     */
   def build(cfg: SizingConfig, agg: Row, concurrencyRow: DataFrame)
       : SizingReport = {
-    val matrix = Bucketing.Sizes.zipWithIndex.map { case (t, i) =>
-      t -> Aggregates.MatrixDims.map { case (d, _) =>
-        d -> agg.getAs[Long](s"m_${i}_$d") }.toMap
-    }.filter(_._2.values.exists(_ > 0)).toMap
+    val matrix = Aggregates.matrix(agg)
 
     val c = concurrencyRow.head()
     // the sweep's DECIMAL maxima (Pipeline's payload); NULL when no row
@@ -208,7 +172,7 @@ object Report {
       maxSpill = agg.getAs[Double]("r_max_spill"),
       maxMem = agg.getAs[Double]("r_max_mem"),
       maxDataRate = agg.getAs[Double]("r_max_data_rate"),
-      pools = agg.getAs[String]("pools").split(",").toSeq.filter(_.nonEmpty),
+      pools = agg.getSeq[String](agg.fieldIndex("pools")),
       pruneCount = agg.getAs[Long]("n_pruned"),
       podLimit = cfg.podLimit,
       maxConcurrentQueries = c.getAs[Long]("max_concurrent_queries"),

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftListenerAccess
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end EP1 golden test (SURVEY §5.3): CSV fixture → sinks + report,
@@ -138,6 +139,45 @@ class PipelineSpec extends SparkTestBase {
       "Cluster Sizing", "Query Counts", "Average Cluster Utilization")
       .foreach(s => assert(r.contains(s), s))
     assert(r.contains("Max Memory Per Node: 250.0 GB")) // Q7 fixed label
+  }
+
+  test("a pool name with a comma is one pool") {
+    val (r, _) = runCsv(csv.replace("q2,bi,", "q2,\"etl,adhoc\","))
+    assert(r.pools == Seq("etl", "etl,adhoc"))
+    assert(r.render.linesIterator.filter(_.contains("adhoc")).toSeq ==
+      Seq("   etl,adhoc"))
+  }
+
+  test("q18's and q19's forms over the kept rows equal the report's") {
+    val cfg = SizingConfig()
+    val kept = Routing.route(Pipeline.withEventInstants(
+      Pipeline.readQuerylogCsv(spark, s"$outDir/querylog.csv")), cfg)
+      .filter(col("flow") === "kept")
+    val q18 = Aggregates.sizeMatrix(kept)
+    assert(q18.dtypes.toSeq == ("tsize" -> "StringType") +:
+      Seq("count", "cache", "mem", "cpu", "spill").map(_ -> "LongType"))
+    assert(q18.collect().map(r => r.getString(0) ->
+      q18.columns.tail.map(d => d -> r.getAs[Long](d)).toMap).toMap ==
+      report.matrix)
+
+    val q19 = Aggregates.global(kept).head()
+    assert(q19.getAs[Int]("max_backends") == report.maxBackends)
+    assert(q19.getAs[String]("max_pods_query_id") == report.maxPodsQueryId)
+    assert(q19.getAs[Long]("min_executor_pod_workload") ==
+      report.minExecutorPodWorkload)
+    assert(q19.getAs[Double]("total_query_time_sec") ==
+      report.totalQueryTimeSec)
+    assert(Aggregates.utilizationPct(q19, cfg) == report.utilizationPct)
+    // the report reads the maxima of the 2dp-rounded averages
+    def r2(v: Double) =
+      BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+    Seq("vcores" -> report.maxVcores, "mem" -> report.maxMem,
+      "data" -> report.maxData, "data_rate" -> report.maxDataRate,
+      "spill" -> report.maxSpill).foreach { case (s, v) =>
+      assert(r2(q19.getAs[Double](s"max_$s")) == v, s)
+    }
+
+    assert(Aggregates.sizeMatrix(kept.filter(lit(false))).count() == 0)
   }
 
   test("a report over the fixture runs seven Spark actions") {
