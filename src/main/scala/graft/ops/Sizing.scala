@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * [[Aggregates]]' definitions over the kept rows — the same columns the
   * sizing report aggregates — so the oracle checks the report's numbers.
   *
-  * q20 exercises the scalable two-pass prefix scan ([[graft.plans.PrefixSum]]):
-  * the oracle's single global window proves the distributed scan equals
-  * the sequential semantics.
+  * q20 is the bucketed [[Concurrency.maxima]]: the oracle's single global
+  * window proves it equals the sequential semantics.
   */
 object Sizing extends QueryModule {
 
@@ -100,9 +99,10 @@ object Sizing extends QueryModule {
     |FROM kept""".stripMargin
 
   // --- q20: sweep-line concurrency maxima (E1–E6) ------------------------
-  private def q20(s: SparkSession, dir: String): DataFrame =
-    Concurrency.maxima(
-      Concurrency.sweep(kept(s, dir), Concurrency.integerDeltas))
+  private def q20(s: SparkSession, dir: String): DataFrame = {
+    val r = Concurrency.maxima(kept(s, dir), Concurrency.integerDeltas)
+    s.createDataFrame(java.util.List.of(r), r.schema)
+  }
 
   // private[ops]: q73's oracle wraps this (stream maxima ≡ batch maxima)
   private[ops] def q20Sql = s"""${QuerylogAdapter.sqlCte(cfg)}

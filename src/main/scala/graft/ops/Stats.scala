@@ -242,8 +242,7 @@ object Stats extends QueryModule {
     * `tieCols`) for every (group, k) row of `targets` (columns:
     * `groupCol`, `k`), WITHOUT a per-group sort or a full ranking pass.
     * Distributed selection in two data passes:
-    *   1. bucket the value domain by global literals (Greenwald–Khanna
-    *      approxQuantile — no RNG, deterministic under recomputation)
+    *   1. bucket the value domain ([[graft.plans.PrefixSum.valueBucket]])
     *      and count rows per (group, bucket): one tiny hash agg;
     *   2. locate each target's bucket and residual rank by a window
     *      over that tiny frame, then rank ONLY the hit buckets (each
@@ -259,16 +258,8 @@ object Stats extends QueryModule {
     */
   def valueAtRank(df: DataFrame, groupCol: String, valueCol: String,
       tieCols: Seq[Column], targets: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val nBuckets =
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val bounds = if (probs.isEmpty) Array.empty[Double]
-      else df.stat.approxQuantile(valueCol, probs, 0.001).distinct.sorted
-    val bucketExpr = if (bounds.isEmpty) lit(0)
-      else bounds.map(b => when(col(valueCol) > lit(b), 1).otherwise(0))
-        .reduce(_ + _)
-    val bucketed = df.withColumn("__b", bucketExpr)
+    val bucketed = df.withColumn("__b",
+      graft.plans.PrefixSum.valueBucket(df, valueCol, range = None))
     val wCum = Window.partitionBy(groupCol).orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, -1)
     // ≤ nGroups × nBuckets rows — the tiny frame every step below joins

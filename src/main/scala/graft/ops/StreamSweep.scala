@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * event-time timeouts fire (data + sentinel arrive in one micro-batch,
   * and the engine's automatic no-data batch then flushes the timeouts —
   * two micro-batches total). The only driver-side values are the
-  * min/max bounds (one 2-column aggregate — the same bounds fold as
-  * [[graft.plans.PrefixSum]]'s knownRange) and the folded per-bucket
+  * min/max bounds (one 2-column aggregate, which also serves as the batch
+  * parity run's `eventRange`) and the folded per-bucket
   * summaries (one tiny row per non-empty time bucket — bounded by the
   * analysis window, not the data).
   *
@@ -131,13 +131,10 @@ object StreamSweep extends QueryModule {
 
     // Parity against the batch operator on the same kept querylog, over
     // the event range the bounds fold already found.
-    val b = Concurrency.maxima(Concurrency.sweep(kept, Concurrency.integerDeltas,
-      Some((minAdmittedUs.toDouble, maxEndUs.toDouble)))).head()
+    val b = Concurrency.maxima(kept, Concurrency.integerDeltas,
+      Some((minAdmittedUs.toDouble, maxEndUs.toDouble)))
     kept.unpersist()
-    val matches = b.getLong(0) == m.maxConcurrentQueries &&
-      b.getLong(1) == m.maxPods && b.getLong(2) == m.maxCache &&
-      b.getLong(3) == m.maxMem && b.getLong(4) == m.maxCpu &&
-      b.getLong(5) == m.maxSpill && b.getLong(6) == m.maxPodsAtUs
+    val matches = b.toSeq == m.productIterator.toSeq // maximaCols order
 
     ParityGate(
       Seq((m.maxConcurrentQueries, m.maxPods, m.maxCache, m.maxMem,

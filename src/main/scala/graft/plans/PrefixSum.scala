@@ -11,14 +11,8 @@ import org.apache.spark.sql.functions._
   * classic two-pass parallel scan instead (SURVEY §2.6 scale note):
   *
   *   1. Split the order-key domain into ~numShufflePartitions contiguous
-  *      buckets. Bucket boundaries come from `approxQuantile` over the
-  *      primary order column, and the bucket id is a PURE FUNCTION OF ROW
-  *      VALUES (a when-chain over the boundary literals) — never
-  *      `spark_partition_id()`. The scan recomputes its input across
-  *      multiple Spark jobs, and physical partition ids are not stable
-  *      across jobs (AQE may coalesce each job's shuffle differently), so
-  *      any pid-based bucketing silently mis-assigns carry-ins. Value-based
-  *      bucketing is deterministic under recomputation by construction.
+  *      value buckets ([[valueBucket]]), bounded by `approxQuantile` over the
+  *      primary order column or by an even split of a known range.
   *   2. Per-bucket running sums via a window PARTITIONED by bucket id
   *      (parallel, no global sort bottleneck).
   *   3. Per-bucket totals (≤ numBuckets rows — tiny) become exclusive
@@ -59,33 +53,8 @@ object PrefixSum {
       sumCols: Seq[(String, String)],
       knownRange: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): DataFrame = {
-    val spark = df.sparkSession
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // Boundary literals: deterministic, so every recomputation assigns
-    // every row the same bucket.
-    //  - default: Greenwald-Khanna quantiles (no RNG) — robust to any key
-    //    distribution, costs one sketch aggregation pass;
-    //  - knownRange: the caller already knows (or can compute more
-    //    cheaply upstream) the [lo, hi] span — an even split, skipping the
-    //    eager pass over `df` entirely and making the whole scan a single
-    //    job; correctness never depends on balance, only the local-scan
-    //    parallelism does.
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val bounds =
-      if (probs.isEmpty) Array.empty[Double]
-      else knownRange match {
-        case Some((lo, hi)) =>
-          if (lo == hi) Array.empty[Double]
-          else probs.map(p => lo + (hi - lo) * p).distinct.sorted
-        case None =>
-          df.stat.approxQuantile(bucketCol, probs, 0.001).distinct.sorted
-      }
-    val bucketExpr =
-      if (bounds.isEmpty) lit(0)
-      else bounds.map(b => when(col(bucketCol) > lit(b), 1).otherwise(0))
-        .reduce(_ + _)
-    val bucketed = df.withColumn("__bucket", bucketExpr)
+    val bucketed =
+      df.withColumn("__bucket", valueBucket(df, bucketCol, knownRange))
 
     val w = Window
       .partitionBy((groupCols.map(col) :+ col("__bucket")): _*)
@@ -130,6 +99,30 @@ object PrefixSum {
           .cast(d.schema(dst).dataType))
     }.drop(Seq("__bucket", "__cbucket") ++ groupCols.map(g => s"__cg_$g") ++
       srcs.map(s => s"__carry_$s"): _*)
+  }
+
+  /** The value bucket of `df`'s numeric `c`, one per shuffle partition:
+    * a when-chain counting the bounds `c` exceeds — a PURE FUNCTION OF THE
+    * ROW VALUE, so ties never straddle buckets. Never
+    * `spark_partition_id()`: AQE may partition an input recomputed across
+    * jobs differently each time, and pid-based buckets would silently
+    * mis-assign carry-ins. Bounds are an even split of `range` = (lo, hi)
+    * when given (one bucket when lo == hi), else Greenwald-Khanna
+    * quantiles of `c` (no RNG; robust to any value distribution; one
+    * eager sketch pass over `df`).
+    */
+  def valueBucket(df: DataFrame, c: String,
+      range: Option[(Double, Double)]): Column = {
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val probs = (1 until n).map(_.toDouble / n)
+    val bounds = range match {
+      case Some((lo, hi)) =>
+        if (lo == hi) Nil else probs.map(p => lo + (hi - lo) * p)
+      case None => if (probs.isEmpty) Nil
+        else df.stat.approxQuantile(c, probs.toArray, 0.001).toSeq
+    }
+    bounds.distinct.sorted.map(b => when(col(c) > lit(b), 1).otherwise(0))
+      .reduceOption(_ + _).getOrElse(lit(0))
   }
 
   /** `row_number()` per group under a total order, WITHOUT the per-group

@@ -1,8 +1,12 @@
 package graft.sizing
 
 import graft.plans.PrefixSum
-import org.apache.spark.sql.{Column, DataFrame}
+import java.math.MathContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The sweep-line concurrency operator (SURVEY §2.6) — the reference's one
   * genuinely novel operator: max-concurrent-resource analysis over query
@@ -22,9 +26,11 @@ import org.apache.spark.sql.functions._
   * (kind 0 < 1 — so a query ending exactly when another starts does not
   * count as overlapping), then query_id.
   *
-  * Scale: the running sums go through [[PrefixSum.scan]] — a two-pass
-  * range-partitioned scan, not a single-task global window. Event fan-out
-  * is 2 rows per query via explode (no driver loop).
+  * One sweep algebra for batch and stream: a bucket of events summarizes
+  * to its net deltas t and its running-sum maxima at starts m, and
+  * summaries fold in bucket order as (t₁, m₁) ⊕ (t₂, m₂) = (t₁ + t₂,
+  * max(m₁, t₁ + m₂)) — [[fold]]. [[maxima]] builds the summaries in SQL,
+  * [[graft.streaming.StreamingConcurrency]] per closed bucket in state.
   */
 object Concurrency {
 
@@ -41,87 +47,137 @@ object Concurrency {
     "cpu_mv" -> col("cpu_mv_per_backend"),
     "spill_b" -> col("spill_b_per_backend"))
 
-  /** Input: kept querylog rows with an `admitted_us`/`end_us` pair (µs
-    * since epoch, BIGINT) and one `(name, delta)` per swept resource — the
-    * delta an exact integer or decimal expression over the row (see
-    * [[integerDeltas]]; the report's DECIMAL payload is in [[Pipeline]]).
-    * One delta must be named `pods`: [[maxima]] reports the instant of
-    * its peak.
+  /** The events `query_id, ts_us, kind, d_count, d_<name>…` of kept rows
+    * with an `admitted_us`/`end_us` pair (µs since epoch, BIGINT) and one
+    * `(name, delta)` per swept resource, the delta an exact integer or
+    * decimal expression over the row (the report's is in [[Pipeline]]).
     *
     * Rows missing either instant are excluded: a null-instant event would
-    * land in PrefixSum's bucket 0 and sort FIRST, applying a query's end
-    * deltas before its start and silently depressing every running sum.
-    * Such rows cannot contribute a well-formed interval (they stay in the
+    * sort FIRST, applying a query's end deltas before its start and
+    * silently depressing every running sum (such rows stay in the
     * caller's CSV/aggregate paths).
     *
-    * Output: one row per event — `query_id, ts_us, kind, d_count, d_<name>…`
-    * — with running sums `run_count, run_<name>…` over the global
-    * (ts, kind, query_id) order.
-    *
-    * Nothing is cached. The scan evaluates the explode three times (bounds
-    * pass, totals branch, local-scan branch); round 18 measured that
+    * Nothing is cached. [[sweep]] evaluates the explode three times and
+    * [[maxima]] twice without an `eventRange`; round 18 measured that
     * materializing the event frame costs more than re-evaluating it (a
     * localCheckpoint per call, which q73 makes per micro-batch, left
     * blocks accumulating until driver GC and took the entry 7.5 → 35 s at
     * sf0.1). Callers with an expensive upstream persist `kept` instead.
-    *
-    * `eventRange` is the events' [min, max] instant when the caller
-    * already has it (the report computes it in its aggregate pass); it
-    * only sets the scan's bucket bounds, so a range that is off costs
-    * balance, never correctness. Without it the range costs one eager
-    * min/max action over the events.
     */
-  def sweep(kept: DataFrame, deltas: Seq[(String, Column)],
-      eventRange: Option[(Double, Double)] = None): DataFrame = {
+  private def events(kept: DataFrame, deltas: Seq[(String, Column)])
+      : DataFrame = {
     def event(ts: String, kind: Int, sign: Long): Column = struct(
       col(ts).as("ts_us") +: lit(kind).as("kind") +: lit(sign).as("d_count") +:
         deltas.map { case (n, d) => (if (sign > 0) d else -d).as(s"d_$n") }: _*)
-    val events = kept
+    kept
       .filter(col("admitted_us").isNotNull && col("end_us").isNotNull)
       .select(col("query_id"),
         explode(array(event("admitted_us", 1, 1L), event("end_us", 0, -1L)))
           .as("e"))
       .select(col("query_id"), col("e.*"))
-
-    // Event instants are near-uniform over the analysis window, so an even
-    // split of [min, max] balances the buckets; balance only affects
-    // local-scan parallelism, never correctness.
-    val range = eventRange.getOrElse {
-      val mm = events.agg(min(col("ts_us")).cast("double"),
-        max(col("ts_us")).cast("double")).head()
-      if (mm.isNullAt(0)) (0.0, 0.0) else (mm.getDouble(0), mm.getDouble(1))
-    }
-
-    PrefixSum.scan(events, "ts_us",
-      Seq(col("ts_us"), col("kind"), col("query_id")),
-      ("count" +: deltas.map(_._1)).map(n => s"d_$n" -> s"run_$n"),
-      knownRange = Some(range))
   }
 
-  /** The maxima row's columns for [[integerDeltas]] — the single source of
-    * truth shared by the batch [[maxima]] aggregate and the streamed fold
-    * (q73), so the two output schemas cannot drift.
+  private val eventOrder = Seq(col("ts_us"), col("kind"), col("query_id"))
+
+  /** One row per event ([[events]]) with running sums `run_count,
+    * run_<name>…` over the global (ts, kind, query_id) order, via
+    * [[PrefixSum.scan]] with quantile bounds. Library API: the report and
+    * the battery read only [[maxima]].
+    */
+  def sweep(kept: DataFrame, deltas: Seq[(String, Column)]): DataFrame =
+    PrefixSum.scan(events(kept, deltas), "ts_us", eventOrder,
+      ("count" +: deltas.map(_._1)).map(n => s"d_$n" -> s"run_$n"))
+
+  /** The [[maxima]] row's columns for [[integerDeltas]], shared with the
+    * streamed fold (q73) so the two output schemas cannot drift.
     */
   val maximaCols: Seq[String] = "max_concurrent_queries" +:
     integerDeltas.map { case (n, _) => s"max_concurrent_$n" } :+
     "max_pods_at_us"
 
-  /** Conditional maxima (py:381–396): max running footprint observed at
-    * start events. Returns a single row: `max_concurrent_queries`, one
-    * `max_concurrent_<name>` per delta of the [[sweep]] (its type), and
-    * `max_pods_at_us`.
+  /** A run of events over the caller's resources (one order for every
+    * summary): the net delta per resource and, when the run holds a start,
+    * the running-sum maxima at its starts from a zero carry-in (`peak`)
+    * with the start instant of the pods peak (latest on ties).
     */
-  def maxima(swept: DataFrame): DataFrame = {
-    val names = swept.columns.toSeq
-      .filter(c => c.startsWith("run_") && c != "run_count")
-      .map(_.stripPrefix("run_"))
-    val aggs = max(col("run_count")).as("max_concurrent_queries") +:
-      names.map(n => max(col(s"run_$n")).as(s"max_concurrent_$n")) :+
-      // py:384 uses >= for pods: at ties the LATEST start wins
-      max_by(col("ts_us"), struct(col("run_pods"), col("ts_us")))
-        .as("max_pods_at_us")
-    swept
-      .filter(col("d_count") > 0)
-      .agg(aggs.head, aggs.tail: _*)
+  final case class Summary[N](bucket: Long, net: Seq[N],
+      peak: Option[Seq[N]], peakAtUs: Long)
+
+  /** The one carry fold, in bucket order (any arrival order): (t₁, m₁) ⊕
+    * (t₂, m₂) = (t₁ + t₂, max(m₁, t₁ + m₂)) per resource; the pods instant
+    * moves to the later run when its peak ties or beats (py:384 `>=`;
+    * `pods` is the pods resource's position). Exact on long or decimal.
+    */
+  def fold[N](summaries: Seq[Summary[N]], pods: Int)(
+      implicit num: Numeric[N]): Option[Summary[N]] = {
+    def plus(a: Seq[N], b: Seq[N]) =
+      a.zip(b).map { case (x, y) => num.plus(x, y) }
+    summaries.sortBy(_.bucket).reduceLeftOption { (a, b) =>
+      val c = b.peak.map(plus(a.net, _)) // b's peak after a's carry
+      Summary(a.bucket, plus(a.net, b.net), (a.peak ++ c).reduceOption(
+        (x, y) => x.zip(y).map { case (p, q) => num.max(p, q) }),
+        if (c.exists(v => a.peak.forall(m => num.gteq(v(pods), m(pods)))))
+          b.peakAtUs
+        else a.peakAtUs)
+    }
+  }
+
+  /** Conditional maxima (py:381–396) over the [[events]] of `kept` (one
+    * delta named `pods`): one row of `max_concurrent_queries`, a
+    * `max_concurrent_<name>` per delta (BIGINT for integer deltas, the
+    * running sum's DECIMAL for decimal ones) and `max_pods_at_us`, all
+    * NULL without events. Events split into value buckets by an even
+    * split of `eventRange` ([[PrefixSum.valueBucket]]); a window partitioned
+    * by bucket and an aggregate on the same key (one exchange) give each
+    * bucket's [[Summary]], [[fold]]ed on the driver. A given `eventRange`
+    * (the events' [min, max] instant) saves an eager min/max action;
+    * instants are near-uniform over the analysis window, so its even split
+    * balances the buckets, and an off range costs balance, never
+    * correctness.
+    *
+    * A NULL delta counts as 0, as SQL sums skip it; a resource whose
+    * every delta is NULL has a NULL maximum.
+    */
+  def maxima(kept: DataFrame, deltas: Seq[(String, Column)],
+      eventRange: Option[(Double, Double)] = None): Row = {
+    val ev = events(kept, deltas)
+    val range = eventRange.getOrElse {
+      val mm = ev.agg(min("ts_us").cast("double"), max("ts_us").cast("double"))
+        .head()
+      if (mm.isNullAt(0)) (0.0, 0.0) else (mm.getDouble(0), mm.getDouble(1))
+    }
+    val names = "count" +: deltas.map(_._1)
+    val w = Window.partitionBy("__bucket").orderBy(eventOrder: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = ev
+      .withColumn("__bucket", PrefixSum.valueBucket(ev, "ts_us", Some(range)))
+      .select(col("*") +:
+        names.map(n => sum(s"d_$n").over(w).as(s"run_$n")): _*)
+    val start = col("d_count") > 0
+    // per bucket: nets, peaks (the count peak is NULL iff no start) and
+    // the pods peak's instant (py:384 `>=`: the LATEST start wins ties)
+    val aggs = names.map(n => sum(s"d_$n")) ++
+      names.map(n => max(when(start, col(s"run_$n")))) :+
+      max_by(col("ts_us"), when(start, struct("run_pods", "ts_us")))
+        .cast("long")
+    val k = names.size
+    def exact(r: Row, i: Int) = // a long or a decimal; NULL sweeps as 0
+      BigDecimal(Option(r.get(i)).fold("0")(_.toString), MathContext.UNLIMITED)
+    val rows = local.groupBy("__bucket").agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq
+    val summaries = rows.map(r => Summary(r.getInt(0).toLong,
+      (1 to k).map(exact(r, _)), Option.when(!r.isNullAt(k + 1))(
+        (k + 1 to 2 * k).map(exact(r, _))), r.getAs[Long](2 * k + 1)))
+    val types = names.map(n => local.schema(s"run_$n").dataType)
+    val fields = ("queries" +: deltas.map(_._1)).zip(types).map {
+      case (n, t) => StructField(s"max_concurrent_$n", t) } :+
+      StructField("max_pods_at_us", LongType)
+    val values = fold(summaries, names.indexOf("pods")).flatMap(s =>
+      s.peak.map(_.zip(types).zipWithIndex.map {
+        case (_, i) if rows.forall(_.isNullAt(i + 1)) => null // no delta
+        case ((v, LongType), _) => v.toLongExact
+        case ((v, _), _) => v.bigDecimal
+      } :+ s.peakAtUs)).getOrElse(Seq.fill(fields.size)(null))
+    new GenericRowWithSchema(values.toArray, StructType(fields))
   }
 }

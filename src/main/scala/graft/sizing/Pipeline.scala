@@ -160,8 +160,8 @@ object Pipeline {
             col("query_state")).as("value"))
           .write.mode("overwrite").text(s"$outDir/${cfg.skipQueryFile}")
 
-      Report.build(cfg, agg, Concurrency.maxima(Concurrency.sweep(kept,
-        reportDeltas, eventRange = Some(Report.eventRange(agg)))))
+      Report.build(cfg, agg, Concurrency.maxima(kept, reportDeltas,
+        eventRange = Some(Report.eventRange(agg))))
     } finally routed.unpersist()
   }
 }

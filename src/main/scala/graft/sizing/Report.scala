@@ -132,7 +132,7 @@ object Report {
   }
 
   /** The kept rows' event range from [[aggregate]]'s row, for
-    * [[Concurrency.sweep]]'s `eventRange`; (0, 0) when no kept row has
+    * [[Concurrency.maxima]]'s `eventRange`; (0, 0) when no kept row has
     * both instants (the sweep then has no events).
     */
   def eventRange(agg: Row): (Double, Double) =
@@ -150,11 +150,8 @@ object Report {
     * `constrainedBy` is the dimensions (fixed order — Q13 stance) with
     * nonzero counts at the workload's tsize row.
     */
-  def build(cfg: SizingConfig, agg: Row, concurrencyRow: DataFrame)
-      : SizingReport = {
+  def build(cfg: SizingConfig, agg: Row, c: Row): SizingReport = {
     val matrix = Aggregates.matrix(agg)
-
-    val c = concurrencyRow.head()
     // the sweep's DECIMAL maxima (Pipeline's payload); NULL when no row
     // was kept, read as 0 like the Long fields
     def dbl(name: String): Double =

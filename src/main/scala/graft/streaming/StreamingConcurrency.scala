@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sizing.Concurrency
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -8,7 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * 10): the reference's batch interval-overlap analysis (py:307–396) as a
   * Structured Streaming pipeline over a live query-event stream.
   *
-  * Shape mirrors the batch two-pass scan ([[graft.plans.PrefixSum]]):
+  * The batch operator's sweep algebra ([[graft.sizing.Concurrency.fold]]),
+  * over buckets that the watermark closes:
   *
   *  1. query intervals fan out into ±delta events (event time = the
   *     delta's instant);
@@ -21,16 +23,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     is the distributed heavy lifting: state per group is one bucket's
   *     events, never the stream.
   *  3. summaries are tiny (one row per bucket); [[GlobalAccumulator]]
-  *     folds them in bucket order with carry-ins — the same
-  *     exclusive-prefix trick as the batch scan, O(buckets) work —
-  *     typically inside `foreachBatch` or any downstream consumer.
+  *     folds them with carry-ins, O(buckets) work — typically inside
+  *     `foreachBatch` or any downstream consumer.
   *
-  * Deltas are LONGs, same contract as the batch operator
-  * ([[graft.sizing.Concurrency]]): pods are counts, cache/mem/spill are
-  * bytes-per-backend, cpu is milli-vcores — integer units whose partial
-  * sums are exact and associativity-safe; doubles would silently lose
-  * low-order bits once a byte-count running sum crosses 2^53 (a few
-  * hundred concurrent 50 TiB-cache queries).
+  * Deltas are the batch operator's integer units
+  * ([[graft.sizing.Concurrency.integerDeltas]]) as LONGs: exact partial
+  * sums, where doubles would lose low-order bits once a byte-count
+  * running sum crosses 2^53 (a few hundred concurrent 50 TiB queries).
   *
   * All instant arithmetic is µs-exact: Spark TimestampType is µs
   * precision, and [[tsUs]]/[[usTs]] round-trip the full µs through
@@ -64,12 +63,12 @@ object StreamingConcurrency {
   /** A ±delta event with its bucket key. */
   final case class Event(bucket: Long, ts: Timestamp, kind: Int,
       queryId: String, dCount: Long, dPods: Long, dCache: Long,
-      dMem: Long, dCpu: Long, dSpill: Long)
+      dMem: Long, dCpu: Long, dSpill: Long) {
+    def deltas: Seq[Long] = Seq(dCount, dPods, dCache, dMem, dCpu, dSpill)
+  }
 
-  /** Per-bucket local scan result. `maxPref*` are the bucket-internal
-    * running-sum maxima observed at start events (relative to a zero
-    * carry-in); `net*` are the bucket's total deltas (the carry for every
-    * later bucket). `maxPrefAtUs` carries the py:384 `>=` tie rule.
+  /** A closed bucket's [[graft.sizing.Concurrency.Summary]] in the
+    * stream's six-long shape (`net*`, `maxPref*`, `maxPrefAtUs`).
     */
   final case class BucketSummary(bucket: Long, nEvents: Long,
       netCount: Long, netPods: Long, netCache: Long, netMem: Long,
@@ -83,15 +82,11 @@ object StreamingConcurrency {
       : Dataset[Event] = {
     import intervals.sparkSession.implicits._
     intervals.flatMap { q =>
-      val sUs = tsUs(q.admitted)
-      val eUs = tsUs(q.end)
-      Seq(
-        Event(Math.floorDiv(sUs, bucketUs), q.admitted, 1, q.queryId, 1L,
-          q.pods, q.cachePerBackend, q.memPerBackend, q.cpuMilliVcores,
-          q.spillPerBackend),
-        Event(Math.floorDiv(eUs, bucketUs), q.end, 0, q.queryId, -1L,
-          -q.pods, -q.cachePerBackend, -q.memPerBackend, -q.cpuMilliVcores,
-          -q.spillPerBackend))
+      def ev(t: Timestamp, kind: Int, s: Long) =
+        Event(Math.floorDiv(tsUs(t), bucketUs), t, kind, q.queryId, s,
+          s * q.pods, s * q.cachePerBackend, s * q.memPerBackend,
+          s * q.cpuMilliVcores, s * q.spillPerBackend)
+      Seq(ev(q.admitted, 1, 1L), ev(q.end, 0, -1L))
     }
   }
 
@@ -119,33 +114,21 @@ object StreamingConcurrency {
       }
   }
 
-  /** Sequential local scan of one closed bucket (the bucket is the unit
-    * of parallelism — this runs once per bucket, distributed).
+  /** Sequential scan of one closed bucket, once per bucket, distributed:
+    * each event is a run of one, and folding the runs in event order gives
+    * the bucket's running sums, maxima taken at starts (py:381–396).
     */
   private[streaming] def scanBucket(bucket: Long, evs: List[Event])
       : BucketSummary = {
-    val ordered = evs.sortBy(e => (tsUs(e.ts), e.kind, e.queryId))
-    var (c, p, ca, m, cp, sp) = (0L, 0L, 0L, 0L, 0L, 0L)
-    var (mc, mp, mca, mm, mcp, msp) =
-      (Long.MinValue, Long.MinValue, Long.MinValue, Long.MinValue,
-        Long.MinValue, Long.MinValue)
-    var atUs = Long.MinValue
-    var hasStart = false
-    ordered.foreach { e =>
-      c += e.dCount; p += e.dPods; ca += e.dCache; m += e.dMem
-      cp += e.dCpu; sp += e.dSpill
-      if (e.dCount > 0) { // maxima only at starts (py:381–396)
-        hasStart = true
-        if (c > mc) mc = c
-        if (p >= mp) { mp = p; atUs = tsUs(e.ts) } // py:384 >=
-        if (ca > mca) mca = ca
-        if (m > mm) mm = m
-        if (cp > mcp) mcp = cp
-        if (sp > msp) msp = sp
-      }
-    }
-    BucketSummary(bucket, evs.size.toLong, c, p, ca, m, cp, sp,
-      mc, mp, mca, mm, mcp, msp, atUs, hasStart)
+    val s = Concurrency.fold(evs.sortBy(e => (tsUs(e.ts), e.kind, e.queryId))
+      .zipWithIndex.map { case (e, i) => Concurrency.Summary(i.toLong,
+        e.deltas, Option.when(e.dCount > 0)(e.deltas), tsUs(e.ts)) }, pods = 1)
+    val n = s.fold(Seq.fill(6)(0L))(_.net)
+    val (m, atUs) = s.flatMap(r => r.peak.map(_ -> r.peakAtUs))
+      .getOrElse((Seq.fill(6)(Long.MinValue), Long.MinValue))
+    BucketSummary(bucket, evs.size.toLong, n(0), n(1), n(2), n(3), n(4),
+      n(5), m(0), m(1), m(2), m(3), m(4), m(5), atUs,
+      s.exists(_.peak.nonEmpty))
   }
 
   /** Stage 3 result: the reference's concurrency report fields. */
@@ -154,34 +137,18 @@ object StreamingConcurrency {
       maxPodsAtUs: Long)
 
   /** Fold closed-bucket summaries (any arrival order) into global maxima
-    * with carry-ins — O(buckets), driver-friendly, deterministic.
+    * with carry-ins: [[Concurrency.fold]] over the six long resources.
     */
   object GlobalAccumulator {
-    def fold(summaries: Seq[BucketSummary]): Option[Maxima] = {
-      val ordered = summaries.sortBy(_.bucket)
-      var (c, p, ca, m, cp, sp) = (0L, 0L, 0L, 0L, 0L, 0L)
-      var out: Option[Maxima] = None
-      ordered.foreach { b =>
-        if (b.hasStart) {
-          val cand = Maxima(c + b.maxPrefCount, p + b.maxPrefPods,
-            ca + b.maxPrefCache, m + b.maxPrefMem, cp + b.maxPrefCpu,
-            sp + b.maxPrefSpill, b.maxPrefAtUs)
-          out = Some(out.fold(cand) { prev =>
-            Maxima(
-              math.max(prev.maxConcurrentQueries, cand.maxConcurrentQueries),
-              math.max(prev.maxPods, cand.maxPods),
-              math.max(prev.maxCache, cand.maxCache),
-              math.max(prev.maxMem, cand.maxMem),
-              math.max(prev.maxCpu, cand.maxCpu),
-              math.max(prev.maxSpill, cand.maxSpill),
-              if (cand.maxPods >= prev.maxPods) cand.maxPodsAtUs
-              else prev.maxPodsAtUs)
-          })
-        }
-        c += b.netCount; p += b.netPods; ca += b.netCache
-        m += b.netMem; cp += b.netCpu; sp += b.netSpill
-      }
-      out
-    }
+    def fold(summaries: Seq[BucketSummary]): Option[Maxima] =
+      Concurrency.fold(summaries.map { b =>
+        Concurrency.Summary(b.bucket, Seq(b.netCount, b.netPods, b.netCache,
+          b.netMem, b.netCpu, b.netSpill),
+          Option.when(b.hasStart)(Seq(b.maxPrefCount, b.maxPrefPods,
+            b.maxPrefCache, b.maxPrefMem, b.maxPrefCpu, b.maxPrefSpill)),
+          b.maxPrefAtUs)
+      }, pods = 1).flatMap(s => s.peak.map {
+        case Seq(c, p, ca, m, cp, sp) => Maxima(c, p, ca, m, cp, sp, s.peakAtUs)
+      })
   }
 }

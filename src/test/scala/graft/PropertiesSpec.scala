@@ -255,8 +255,7 @@ class PropertiesSpec extends SparkTestBase {
         .withColumn("mem_b_per_backend", lit(1L))
         .withColumn("cpu_mv_per_backend", lit(1L))
         .withColumn("spill_b_per_backend", lit(1L))
-      val m = Concurrency.maxima(
-        Concurrency.sweep(df, Concurrency.integerDeltas)).head
+      val m = Concurrency.maxima(df, Concurrency.integerDeltas)
       val brute = ivals.map { case (_, t, _, _) =>
         ivals.filter { case (_, s, e, _) => s <= t && t < e }
           .map(_._4).sum

@@ -133,6 +133,19 @@ class PipelineSpec extends SparkTestBase {
     assert(r.maxPodsWorkload == 3.0)
   }
 
+  test("kept rows without a cache or spill value sweep as 0") {
+    // REST documents without hdfs_bytes_read / memory_spilled give these
+    // NULLs, and a log where no query spilled has no spill delta at all
+    val (r, _) = runCsv(csv
+      .replace("10000,3000,500,1500,", "10000,,500,,")
+      .replace("10000,500,100,0,", "10000,,100,,"))
+    assert(r.totalQueries == 3)
+    assert(r.maxConcurrentQueries == 2)
+    assert(r.maxConcurrentMemory == 350.0)
+    assert(r.maxConcurrentCache == 0.0)
+    assert(r.maxConcurrentSpill == 0.0)
+  }
+
   test("report renders all five sections") {
     val r = report.render
     Seq("Individual Query Analysis", "Concurrent Query Analysis",
