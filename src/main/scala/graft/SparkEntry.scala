@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -60,8 +61,39 @@ trait QueryModule {
   def oracleSql: Map[String, String]
 }
 
-/** Small filesystem helper shared by the streaming harnesses and specs. */
+/** Small filesystem helpers shared by the scratch-writing entries, the
+  * streaming harnesses and the specs.
+  */
 object Fs {
+  /** Scratch root for an entry that writes files: sink→source round
+    * trips, streamed inputs, foreachBatch state and stream checkpoints.
+    * Honors `spark.graft.scratch.dir` (any Hadoop-FS URI — set it to a
+    * SHARED filesystem on a multi-node cluster, where a driver-local /tmp
+    * would silently lose every executor-written partition): the root is
+    * a fresh `<tag>-<uuid>` under it. Unset, the root is a fresh
+    * driver-local temp dir `graft-<tag>-*`, which is correct only in
+    * local mode. Either way `body` gets the root's URI and the root is
+    * deleted after it, through the Hadoop FileSystem API so both schemes
+    * delete the same way.
+    */
+  def withScratch[A](s: SparkSession, tag: String)(body: String => A): A = {
+    val root = s.conf.getOption("spark.graft.scratch.dir") match {
+      case Some(base) => new Path(base, s"$tag-${java.util.UUID.randomUUID()}")
+      case None => new Path("file", null, java.nio.file.Files
+        .createTempDirectory(s"graft-$tag-").toAbsolutePath.toString)
+    }
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try body(root.toString) finally fs.delete(root, true)
+  }
+
+  /** Whether `path` (a scratch-root URI or below) exists, through the
+    * same Hadoop FileSystem API [[withScratch]] deletes with.
+    */
+  def exists(s: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Recursive delete that CLOSES the walk stream (Files.walk holds open
     * directory handles; without close they live until GC).
     */

@@ -22,6 +22,31 @@ object Tables {
     if (name == "events") normalizeEvents(df) else df
   }
 
+  /** The streaming twin of [[load]]: a file-source stream over table
+    * `name` under `dir` (a driver table directory, or a scratch root the
+    * leg wrote `<name>.parquet` into), with the same `nanosAsLong`
+    * setting and events normalization. The schema comes from one batch
+    * probe of `<dir>/<name>.parquet`; `filesPerTrigger` caps the files per
+    * micro-batch (`maxFilesPerTrigger`).
+    *
+    * The glob is `<name>.parquet*`: the file source requires a
+    * glob or a directory (a bare file path throws "basePath must be a
+    * directory" on the single-file fixtures), but the suffix-star form
+    * still pins the exact name the batch side reads in BOTH layouts
+    * (single file at sf0.01, part-file directory at sf1) — unlike a
+    * broader `<name>*.parquet`, a sibling `orders_v2.parquet` cannot slip
+    * into the stream and desynchronize its parity gate.
+    */
+  def stream(spark: SparkSession, dir: String, name: String,
+      filesPerTrigger: Option[Int] = None): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
+    val reader = filesPerTrigger.foldLeft(spark.readStream.schema(schema))(
+      (r, n) => r.option("maxFilesPerTrigger", n.toLong))
+    val df = reader.parquet(s"$dir/$name.parquet*")
+    if (name == "events") normalizeEvents(df) else df
+  }
+
   /** Normalize the events frame to the library's internal contract:
     * `ts` = epoch NANOS as BIGINT. The generator has shipped two physical
     * layouts — TIMESTAMP(NANOS) (surfaced as a nanos long via
@@ -31,8 +56,8 @@ object Tables {
     * each consumer. The NTZ value is naive UTC by the generator's
     * convention; the session timezone is pinned to UTC everywhere
     * (builder + javaOptions), so the LTZ cast below is value-preserving.
-    * Works on streaming frames too (a stateless projection) — the
-    * file-source entries route their post-`readStream` frame through it.
+    * Works on streaming frames too (a stateless projection) — [[stream]]
+    * routes its events frame through it.
     */
   def normalizeEvents(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.LongType

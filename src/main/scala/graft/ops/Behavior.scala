@@ -358,47 +358,37 @@ object Behavior extends QueryModule {
   // of the streaming battery.
   private def q143(s: SparkSession, dir: String): DataFrame = {
     val CapK = 4096
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    val qname = s"q143_${System.nanoTime()}"
     val capTimeline = udaf(new graft.functions.BoundedTimelineAgg(CapK),
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[(Long, Long, String)]())
-    val fromStream = graft.streaming.StreamConf.withStateParts(s) {
-      val timelines = Tables.normalizeEvents(
-          s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
+    val fromStream = graft.streaming.StreamConf.drain(s, "q143", "complete")(
+      _ => Tables.stream(s, dir, "events")
         .select(col("user_id"), expr("ts div 1000").as("ts_us"),
           col("event_id"), col("event_type"))
         .groupBy("user_id")
         .agg(
           capTimeline(col("ts_us"), col("event_id"), col("event_type"))
             .as("tl"),
-          count(lit(1)).as("n_events"))
-      val q = timelines.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try {
-        q.processAllAvailable()
-        val truncated = s.table(qname)
-          .filter(expr("size(tl) < n_events")).count()
-        require(truncated == 0L,
-          s"q143: $truncated user timelines exceeded the $CapK-event " +
-            "cap — count-for-count parity with batch q138 requires the " +
-            "fixture inside the cap")
-        s.table(qname)
-          .select(expr(
-            """transform(tl, t -> named_struct(
-              |  'ts_us', t._1, 'event_id', t._2, 'event_type', t._3))"""
-              .stripMargin).as("timeline"))
-          .select(explode(expr(
-            """arrays_zip(slice(timeline, 1, size(timeline) - 1),
-              |           slice(timeline, 2, size(timeline) - 1))"""
-              .stripMargin)).as("pair"))
-          .groupBy(
-            col("pair.0.event_type").as("prev_type"),
-            col("pair.1.event_type").as("next_type"))
-          .agg(count(lit(1)).as("n_trans"))
-          .collect()
-      } finally { q.stop(); s.catalog.dropTempView(qname) }
+          count(lit(1)).as("n_events"))) { leg =>
+      val truncated = leg.out.filter(expr("size(tl) < n_events")).count()
+      require(truncated == 0L,
+        s"q143: $truncated user timelines exceeded the $CapK-event " +
+          "cap — count-for-count parity with batch q138 requires the " +
+          "fixture inside the cap")
+      leg.out
+        .select(expr(
+          """transform(tl, t -> named_struct(
+            |  'ts_us', t._1, 'event_id', t._2, 'event_type', t._3))"""
+            .stripMargin).as("timeline"))
+        .select(explode(expr(
+          """arrays_zip(slice(timeline, 1, size(timeline) - 1),
+            |           slice(timeline, 2, size(timeline) - 1))"""
+            .stripMargin)).as("pair"))
+        .groupBy(
+          col("pair.0.event_type").as("prev_type"),
+          col("pair.1.event_type").as("next_type"))
+        .agg(count(lit(1)).as("n_trans"))
+        .collect()
     }
     val batch = q138(s, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

@@ -1589,48 +1589,41 @@ object Dedup extends QueryModule {
         array_distinct(words).as("tk"))
       .ckptLocal(eager = false) // corpus build + stream input +
                                       // batch reference probe
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-q230").toString
-    val idxDir = s"$tmp/idx"
-    snbIndexBuild(toks.filter(col("doc_id") % 10 =!= 0), idxDir)
     val batchDocs = toks.filter(col("doc_id") % 10 === 0)
-    // 2 input files → 2 micro-batches under maxFilesPerTrigger=1 — the
-    // minimum that exercises union-equals-batch across a real batch
-    // boundary (q199's round-18 rationale: each micro-batch pays a
-    // fixed index-read + plan + parquet-append cost, and every gate
-    // bit is batch-count-agnostic)
-    batchDocs.repartition(2, col("doc_id"))
-      .write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    val sink = s"$tmp/sink"
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-      .writeStream.outputMode("append")
-      .foreachBatch { (mb: DataFrame, id: Long) =>
-        snbIndexProbe(s, idxDir, mb)
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(sink)
-      }
-      .start()
-    val (streamed, nBatches) = try {
-      q.processAllAvailable()
-      val sk = s.read.parquet(sink)
-        .ckptLocal(eager = false) // diff leg + output
-      (sk, sk.select("batch_id").distinct().count())
-    } finally q.stop()
-    val batchRef = snbIndexProbe(s, idxDir, batchDocs)
-    val nDiff = streamed.drop("batch_id").withColumn("side", lit(1))
-      .unionByName(batchRef.withColumn("side", lit(2)))
-      .groupBy("new_doc", "n_window", "best_match", "best_milli",
-        "is_dup")
-      .agg(count_distinct(col("side")).as("ns"))
-      .filter(col("ns") =!= 2)
-      .count()
-    graft.ParityGate(
-      streamed.drop("batch_id")
-        .withColumn("matches_batch", lit(nDiff == 0L))
-        .withColumn("multi_batch", lit(nBatches >= 2L)),
-      "q230_stream_snb_increment", "matches_batch", "multi_batch")
+    // unscoped (no state store: the index IS the state), so the probe's
+    // batch plans keep the session's partitioning
+    graft.streaming.StreamConf.drain(s, "q230", "append", stateParts = None,
+        foreachBatch = Some(root => (mb: DataFrame, id: Long) =>
+          snbIndexProbe(s, s"$root/idx", mb)
+            .withColumn("batch_id", lit(id))
+            .write.mode("append").parquet(s"$root/sink"))) { root =>
+      snbIndexBuild(toks.filter(col("doc_id") % 10 =!= 0), s"$root/idx")
+      // 2 input files → 2 micro-batches under maxFilesPerTrigger=1 — the
+      // minimum that exercises union-equals-batch across a real batch
+      // boundary (q199's round-18 rationale: each micro-batch pays a
+      // fixed index-read + plan + parquet-append cost, and every gate
+      // bit is batch-count-agnostic)
+      batchDocs.repartition(2, col("doc_id"))
+        .write.mode("overwrite").parquet(s"$root/in.parquet")
+      Tables.stream(s, root, "in", filesPerTrigger = Some(1))
+    } { leg =>
+      val sk = s.read.parquet(s"${leg.root}/sink")
+        .ckptLocal() // diff leg + output; eager: outlives the root
+      val nBatches = sk.select("batch_id").distinct().count()
+      val nDiff = sk.drop("batch_id").withColumn("side", lit(1))
+        .unionByName(snbIndexProbe(s, s"${leg.root}/idx", batchDocs)
+          .withColumn("side", lit(2)))
+        .groupBy("new_doc", "n_window", "best_match", "best_milli",
+          "is_dup")
+        .agg(count_distinct(col("side")).as("ns"))
+        .filter(col("ns") =!= 2)
+        .count()
+      graft.ParityGate(
+        sk.drop("batch_id")
+          .withColumn("matches_batch", lit(nDiff == 0L))
+          .withColumn("multi_batch", lit(nBatches >= 2L)),
+        "q230_stream_snb_increment", "matches_batch", "multi_batch")
+    }
   }
 
   private val q230Sql = snbProbeSql(
@@ -1722,30 +1715,18 @@ object Dedup extends QueryModule {
   // `.withWatermark` on an arrival-time column to bound the state — that
   // contract is exercised by StreamingOpsSpec's watermarked-dedup test.
   private def q74(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = s.read.parquet(path).schema
-    // FileStreamSource force-sets basePath to the path itself (then
-    // requires a directory) unless the path is a GLOB — and this testdata
-    // table is a single file, so stream it through a glob that matches it.
     // NULL keys (a NULL text md5's to NULL) are excluded BEFORE the
     // stateful dedup: dropDuplicates+count would tally a NULL key as one
     // survivor while the batch side's countDistinct ignores NULLs — the
     // filter gives both sides the same NULL semantics.
-    val streamed = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
+    // 8 state parts: dedup state is one row per distinct (source, key) —
+    // larger than the window harnesses' state, smaller than q77's
+    val fromStream = graft.streaming.StreamConf.drain(s, "q74", "complete",
+        stateParts = Some(8))(_ => Tables.stream(s, dir, "documents")
       .withColumn("k", dedupKey())
       .filter(col("k").isNotNull)
       .dropDuplicates("source", "k")
-      .groupBy("source").agg(count(lit(1)).as("n_unique"))
-    val qname = s"q74_${System.nanoTime()}"
-    // 8 state parts: dedup state is one row per distinct (source, key) —
-    // larger than the window harnesses' state, smaller than q77's
-    val fromStream = graft.streaming.StreamConf.withStateParts(s, n = 8) {
-      val q = streamed.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+      .groupBy("source").agg(count(lit(1)).as("n_unique")))(_.out.collect())
     val batch = Tables.load(s, dir, "documents")
       .withColumn("k", dedupKey())
       .groupBy("source").agg(countDistinct(col("k")).as("n_unique_batch"))
@@ -1793,15 +1774,6 @@ object Dedup extends QueryModule {
   // monitor bounds it with a bucket TTL, not event-time eviction.
   private def q105(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    val path = s"$dir/documents.parquet"
-    val schema = s.read.parquet(path).schema
-    val streamedSigs = minHashSignatures(
-      s.readStream.schema(schema).parquet(s"$dir/documents*.parquet"))
-    val buckets = bandKeys(streamedSigs.select("doc_id", "mh"),
-        Bands, rowsPerBand = 3, idCol = "doc_id")
-      .groupBy("band", "bkey")
-      .agg(collect_set(col("doc_id")).as("ids"))
-
     val sigs = sigsMemo.getOrElseUpdate((s, dir),
       minHashSignatures(Tables.load(s, dir, "documents")))
     if (sigs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
@@ -1816,35 +1788,33 @@ object Dedup extends QueryModule {
         round(min(col("jac")), 6).as("min_jac"),
         round(max(col("jac")), 6).as("max_jac"))
 
-    val qname = s"q105_${System.nanoTime()}"
     // 8 state parts, q74's sizing: one state row per occupied bucket
-    val (streamHist, nDiff) =
-      graft.streaming.StreamConf.withStateParts(s, n = 8) {
-        val q = buckets.writeStream.format("memory").queryName(qname)
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable()
-          // pair expansion stays IN-PLAN (explode × explode over the
-          // final bucket state), never a driver-side loop
-          val streamPairs = s.table(qname)
-            .filter(size(col("ids")) >= 2)
-            .select(explode(col("ids")).as("d1"), col("ids"))
-            .select(col("d1"), explode(col("ids")).as("d2"))
-            .filter(col("d1") < col("d2"))
-            .select("d1", "d2").distinct()
-          val streamVerified = verifyJaccard(streamPairs, sigs)
-            .ckptLocal(eager = false)
-          val diff = streamVerified.select(col("d1"), col("d2"))
-            .withColumn("side", lit(1))
-            .unionByName(batchVerified.select(col("d1"), col("d2"))
-              .withColumn("side", lit(2)))
-            .groupBy("d1", "d2")
-            .agg(count_distinct(col("side")).as("ns"))
-            .filter(col("ns") =!= 2)
-            .count()
-          (hist(streamVerified).collect(), diff)
-        } finally { q.stop(); s.catalog.dropTempView(qname) }
-      }
+    val (streamHist, nDiff) = graft.streaming.StreamConf.drain(s, "q105",
+        "complete", stateParts = Some(8))(_ =>
+      bandKeys(minHashSignatures(Tables.stream(s, dir, "documents"))
+          .select("doc_id", "mh"), Bands, rowsPerBand = 3, idCol = "doc_id")
+        .groupBy("band", "bkey")
+        .agg(collect_set(col("doc_id")).as("ids"))) { leg =>
+      // pair expansion stays IN-PLAN (explode × explode over the
+      // final bucket state), never a driver-side loop
+      val streamPairs = leg.out
+        .filter(size(col("ids")) >= 2)
+        .select(explode(col("ids")).as("d1"), col("ids"))
+        .select(col("d1"), explode(col("ids")).as("d2"))
+        .filter(col("d1") < col("d2"))
+        .select("d1", "d2").distinct()
+      val streamVerified = verifyJaccard(streamPairs, sigs)
+        .ckptLocal(eager = false)
+      val diff = streamVerified.select(col("d1"), col("d2"))
+        .withColumn("side", lit(1))
+        .unionByName(batchVerified.select(col("d1"), col("d2"))
+          .withColumn("side", lit(2)))
+        .groupBy("d1", "d2")
+        .agg(count_distinct(col("side")).as("ns"))
+        .filter(col("ns") =!= 2)
+        .count()
+      (hist(streamVerified).collect(), diff)
+    }
     val batchHist = hist(batchVerified).collect()
       .map(r => r.getLong(0) -> r.toSeq.tail).toMap
 
@@ -2342,33 +2312,23 @@ object Dedup extends QueryModule {
   // histogram rows each carry the fail-loud bit. q120's oracle hash
   // pins the batch semantics; equality pins the stream to it.
   private def q126(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = s.read.parquet(path).schema
-    val qname = s"q126_${System.nanoTime()}"
-    val (streamHist, nDiff) =
-      graft.streaming.StreamConf.withStateParts(s, n = 8) {
-        val q = positionalGrams(
-            s.readStream.schema(schema).parquet(s"$dir/documents*.parquet"),
-            "text", q120K)
-          .groupBy("g").agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete").start()
-        try {
-          q.processAllAvailable()
-          val st = s.table(qname)
-          val batch = positionalGrams(Tables.load(s, dir, "documents"),
-              "text", q120K)
-            .groupBy("g").agg(count(lit(1)).as("bn"))
-          val diff = st.join(batch, Seq("g"), "full_outer")
-            .filter(col("n").isNull || col("bn").isNull ||
-              col("n") =!= col("bn"))
-            .count()
-          val hist = st.groupBy("n")
-            .agg(count(lit(1)).as("n_grams"))
-            .collect()
-          (hist, diff)
-        } finally { q.stop(); s.catalog.dropTempView(qname) }
-      }
+    val (streamHist, nDiff) = graft.streaming.StreamConf.drain(s, "q126",
+        "complete", stateParts = Some(8))(_ =>
+      positionalGrams(Tables.stream(s, dir, "documents"), "text", q120K)
+        .groupBy("g").agg(count(lit(1)).as("n"))) { leg =>
+      val st = leg.out
+      val batch = positionalGrams(Tables.load(s, dir, "documents"),
+          "text", q120K)
+        .groupBy("g").agg(count(lit(1)).as("bn"))
+      val diff = st.join(batch, Seq("g"), "full_outer")
+        .filter(col("n").isNull || col("bn").isNull ||
+          col("n") =!= col("bn"))
+        .count()
+      val hist = st.groupBy("n")
+        .agg(count(lit(1)).as("n_grams"))
+        .collect()
+      (hist, diff)
+    }
     import s.implicits._
     graft.ParityGate(
       streamHist.toSeq.map(r =>
@@ -2427,89 +2387,70 @@ object Dedup extends QueryModule {
   //     every batch). Positional grams are mostly doc-local, so deltas
   //     stay near one emission per gram.
   private def q199(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q199").toString
-    try {
-      val docs = Tables.load(s, dir, "documents")
-      // 2 input files → 2 micro-batches under maxFilesPerTrigger=1 —
-      // the minimum that keeps the multi_batch gate meaningful (update
-      // vs complete mode indistinguishable on one mega-batch). Round 18
-      // (guide §6/§5): each micro-batch pays fixed cost — a plan
-      // compile, 8 RocksDB state-store commits, a parquet append — so
-      // the harness streams the SAME corpus in 2 halves instead of 4
-      // quarters; all three parity-gate bits are batch-count-agnostic
-      // (state ≡ batch counts, ≥2 batches, deltas < batches × vocab).
+    val docs = Tables.load(s, dir, "documents")
+    // 2 input files → 2 micro-batches under maxFilesPerTrigger=1 —
+    // the minimum that keeps the multi_batch gate meaningful (update
+    // vs complete mode indistinguishable on one mega-batch). Round 18
+    // (guide §6/§5): each micro-batch pays fixed cost — a plan
+    // compile, 8 RocksDB state-store commits, a parquet append — so
+    // the harness streams the SAME corpus in 2 halves instead of 4
+    // quarters; all three parity-gate bits are batch-count-agnostic
+    // (state ≡ batch counts, ≥2 batches, deltas < batches × vocab).
+    val (hist, gateBits) = graft.streaming.StreamConf.drain(s, "q199",
+        "update", stateParts = Some(8),
+        foreachBatch = Some(root => (batch: DataFrame, id: Long) =>
+          batch.withColumn("batch_id", lit(id))
+            .write.mode("append").parquet(s"$root/sink"))) { root =>
       docs.repartition(2, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val sink = s"$tmp/sink"
-      val (hist, gateBits) =
-        graft.streaming.StreamConf.withStateParts(s, n = 8) {
-          val q = positionalGrams(
-              s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
-              "text", q120K)
-            .groupBy("g").agg(count(lit(1)).as("n"))
-            .writeStream
-            .outputMode("update")
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              batch.withColumn("batch_id", lit(id))
-                .write.mode("append").parquet(sink)
-            }
-            .start()
-          try {
-            q.processAllAvailable()
-            val appended = s.read.parquet(sink)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("g").orderBy(col("batch_id").desc)
-            // ckptLocal: resolved feeds the parity join AND the final
-            // histogram — one window pass instead of two
-            val resolved = appended
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1).select("g", "n")
-              .ckptLocal(eager = false)
-            val batchCounts =
-              positionalGrams(docs, "text", q120K)
-                .groupBy("g").agg(count(lit(1)).as("bn"))
-            // ONE full-outer pass delivers both parity-gate inputs: the
-            // symmetric-difference count and the batch vocabulary size.
-            // The old shape ran the corpus gram scan TWICE (nDiff join +
-            // vocab count) and the delta log through three separate
-            // actions (guide §1.2: don't recompute what one pass gives).
-            val jv = resolved.join(batchCounts, Seq("g"), "full_outer")
-              .agg(
-                coalesce(sum(when(col("n").isNull || col("bn").isNull ||
-                    col("n") =!= col("bn"), 1L).otherwise(0L)), lit(0L))
-                  .as("n_diff"),
-                coalesce(sum(when(col("bn").isNotNull, 1L).otherwise(0L)),
-                  lit(0L)).as("vocab"))
-              .head()
-            val (nDiff, vocab) = (jv.getLong(0), jv.getLong(1))
-            val be = appended
-              .agg(countDistinct(col("batch_id")).as("nb"),
-                count(lit(1)).as("emitted"))
-              .head()
-            val (nBatches, emitted) = (be.getLong(0), be.getLong(1))
-            val h = resolved.groupBy("n")
-              .agg(count(lit(1)).as("n_grams"))
-              .collect()
-            (h, (nDiff == 0L, nBatches >= 2L,
-              emitted < nBatches * vocab))
-          } finally { q.stop() }
-        }
-      import s.implicits._
-      graft.ParityGate(
-        hist.toSeq.map(r => (r.getLong(0), r.getLong(1),
-            gateBits._1, gateBits._2, gateBits._3))
-          .toDF("n_occurrences", "n_grams", "matches_batch",
-            "multi_batch", "incremental_emission"),
-        "q199_stream_dupgrams_update",
-        "matches_batch", "multi_batch", "incremental_emission")
-    } finally {
-      import java.nio.file.{Files, Path, Paths}
-      import java.util.Comparator
-      Files.walk(Paths.get(tmp)).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
+        .write.mode("overwrite").parquet(s"$root/in.parquet")
+      positionalGrams(Tables.stream(s, root, "in", filesPerTrigger = Some(1)),
+          "text", q120K)
+        .groupBy("g").agg(count(lit(1)).as("n"))
+    } { leg =>
+      val appended = s.read.parquet(s"${leg.root}/sink")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy(col("batch_id").desc)
+      // ckptLocal: resolved feeds the parity join AND the final
+      // histogram — one window pass instead of two
+      val resolved = appended
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select("g", "n")
+        .ckptLocal(eager = false)
+      val batchCounts =
+        positionalGrams(docs, "text", q120K)
+          .groupBy("g").agg(count(lit(1)).as("bn"))
+      // ONE full-outer pass delivers both parity-gate inputs: the
+      // symmetric-difference count and the batch vocabulary size.
+      // The old shape ran the corpus gram scan TWICE (nDiff join +
+      // vocab count) and the delta log through three separate
+      // actions (guide §1.2: don't recompute what one pass gives).
+      val jv = resolved.join(batchCounts, Seq("g"), "full_outer")
+        .agg(
+          coalesce(sum(when(col("n").isNull || col("bn").isNull ||
+              col("n") =!= col("bn"), 1L).otherwise(0L)), lit(0L))
+            .as("n_diff"),
+          coalesce(sum(when(col("bn").isNotNull, 1L).otherwise(0L)),
+            lit(0L)).as("vocab"))
+        .head()
+      val (nDiff, vocab) = (jv.getLong(0), jv.getLong(1))
+      val be = appended
+        .agg(countDistinct(col("batch_id")).as("nb"),
+          count(lit(1)).as("emitted"))
+        .head()
+      val (nBatches, emitted) = (be.getLong(0), be.getLong(1))
+      val h = resolved.groupBy("n")
+        .agg(count(lit(1)).as("n_grams"))
+        .collect()
+      (h, (nDiff == 0L, nBatches >= 2L, emitted < nBatches * vocab))
     }
+    import s.implicits._
+    graft.ParityGate(
+      hist.toSeq.map(r => (r.getLong(0), r.getLong(1),
+          gateBits._1, gateBits._2, gateBits._3))
+        .toDF("n_occurrences", "n_grams", "matches_batch",
+          "multi_batch", "incremental_emission"),
+      "q199_stream_dupgrams_update",
+      "matches_batch", "multi_batch", "incremental_emission")
   }
 
   // --- q193: benchmark-contamination check ---------------------------------

@@ -29,28 +29,9 @@ object Formats extends QueryModule {
     "concat_ws('|', CAST(doc_id AS STRING), text, " +
       "coalesce(lang, '<N>'), CAST(n_chars AS STRING))"
 
-  /** Scratch root for sink→source round trips. Honors
-    * `spark.graft.scratch.dir` (any Hadoop-FS URI — set it to a SHARED
-    * filesystem on a multi-node cluster, where a driver-local /tmp would
-    * silently lose every executor-written partition); unset, falls back
-    * to a driver-local temp dir, which is correct only in local mode
-    * (the harness's `local[32]`). Cleanup goes through the Hadoop
-    * FileSystem API so both schemes delete the same way.
-    */
-  private def withScratch[A](s: SparkSession, tag: String)(
-      body: String => A): A = {
-    val base = s.conf.getOption("spark.graft.scratch.dir").getOrElse(
-      java.nio.file.Files.createTempDirectory(s"graft-$tag-").toUri.toString)
-    val path = new org.apache.hadoop.fs.Path(
-      s"$base/${tag}-${java.util.UUID.randomUUID()}")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try body(path.toString)
-    finally fs.delete(path, true)
-  }
-
   private def q112(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    withScratch(s, "q112") { path =>
+    graft.Fs.withScratch(s, "q112") { path =>
       docs.write.mode("overwrite").json(path)
       // schema-pinned read: JSONL carries no types; inference would make
       // the round trip depend on sampled data (and read the files twice)
@@ -79,7 +60,7 @@ object Formats extends QueryModule {
   // to q112 (partition-parallel write/read + one grouped aggregate).
   private def q124(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    withScratch(s, "q124") { path =>
+    graft.Fs.withScratch(s, "q124") { path =>
       docs.write.mode("overwrite").orc(path)
       val back = s.read.schema(docs.schema).orc(path)
       Temporal.tableChecksum(back, docRowKeySpark, Seq("source"))
@@ -233,7 +214,7 @@ object Formats extends QueryModule {
     val o = Tables.load(s, dir, "orders")
       .withColumn("cents",
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
-    withScratch(s, "q154") { path =>
+    graft.Fs.withScratch(s, "q154") { path =>
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "cents")
         .write.mode("overwrite").parquet(s"$path/batch=1")
@@ -285,7 +266,7 @@ object Formats extends QueryModule {
     val o = Tables.load(s, dir, "orders")
       .withColumn("cents", expr("CAST(floor(o_totalprice * 100) AS BIGINT)"))
       .select("o_orderkey", "cents", "o_orderpriority")
-    withScratch(s, "q159") { path =>
+    graft.Fs.withScratch(s, "q159") { path =>
       o.write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(path)
       o.filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
@@ -344,7 +325,7 @@ object Formats extends QueryModule {
       expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
         .as("cents"),
       expr(s"datediff(sd, DATE'$gmin') DIV $ZWindowDays").as("zfile"))
-    withScratch(s, "q243") { path =>
+    graft.Fs.withScratch(s, "q243") { path =>
       rows.write.mode("overwrite").partitionBy("zfile").parquet(path)
       val manifest = s.read.parquet(path).groupBy("zfile")
         .agg(min(col("sd")).as("sd_min"), max(col("sd")).as("sd_max"),
@@ -426,40 +407,37 @@ object Formats extends QueryModule {
       .withColumn("sd", expr("CAST(l_shipdate AS DATE)"))
       .select(col("sd"),
         expr(s"datediff(sd, DATE'$gmin') DIV $ZWindowDays").as("zfile"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-q250").toString
-    src.repartition(4, col("zfile"))
-      .write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    val state = s"$tmp/manifest"
-    val log = s"$tmp/log"
     def manifestOf(df: DataFrame): DataFrame =
       df.groupBy("zfile").agg(min(col("sd")).as("sd_min"),
         max(col("sd")).as("sd_max"), count(lit(1)).as("n_rows"))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-      .writeStream.outputMode("append")
-      .foreachBatch { (mb: DataFrame, id: Long) =>
-        val bm = manifestOf(mb)
-        val merged = (if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(state)))
-          s.read.parquet(state).unionByName(bm) else bm)
-          .groupBy("zfile").agg(min(col("sd_min")).as("sd_min"),
-            max(col("sd_max")).as("sd_max"),
-            sum(col("n_rows")).as("n_rows"))
-          // materialize BEFORE the overwrite clobbers the state this
-          // plan reads (the read-modify-write hazard)
-          .ckptLocal(eager = true)
-        merged.write.mode("overwrite").parquet(state)
-        mb.sparkSession.range(1).select(lit(id).as("batch_id"))
-          .write.mode("append").parquet(log)
-      }
-      .start()
-    val (streamed, nBatches) = try {
-      q.processAllAvailable()
-      (s.read.parquet(state).ckptLocal(eager = false),
-        s.read.parquet(log).select("batch_id").distinct().count())
-    } finally q.stop()
+    // unscoped (no state store: the manifest parquet IS the state), so
+    // the fold's batch plans keep the session's partitioning
+    val (streamed, nBatches) = graft.streaming.StreamConf.drain(s, "q250",
+        "append", stateParts = None,
+        foreachBatch = Some(root => (mb: DataFrame, id: Long) => {
+          val state = s"$root/manifest"
+          val bm = manifestOf(mb)
+          val merged = (if (graft.Fs.exists(s, state))
+            s.read.parquet(state).unionByName(bm) else bm)
+            .groupBy("zfile").agg(min(col("sd_min")).as("sd_min"),
+              max(col("sd_max")).as("sd_max"),
+              sum(col("n_rows")).as("n_rows"))
+            // materialize BEFORE the overwrite clobbers the state this
+            // plan reads (the read-modify-write hazard)
+            .ckptLocal(eager = true)
+          merged.write.mode("overwrite").parquet(state)
+          mb.sparkSession.range(1).select(lit(id).as("batch_id"))
+            .write.mode("append").parquet(s"$root/log")
+        })) { root =>
+      src.repartition(4, col("zfile"))
+        .write.mode("overwrite").parquet(s"$root/in.parquet")
+      Tables.stream(s, root, "in", filesPerTrigger = Some(1))
+    } { leg =>
+      // eager: the drained manifest outlives the scratch root
+      (s.read.parquet(s"${leg.root}/manifest").ckptLocal(),
+        s.read.parquet(s"${leg.root}/log").select("batch_id").distinct()
+          .count())
+    }
     val nDiff = streamed.withColumn("side", lit(1))
       .unionByName(manifestOf(src).withColumn("side", lit(2)))
       .groupBy("zfile", "sd_min", "sd_max", "n_rows")

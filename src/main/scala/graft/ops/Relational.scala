@@ -2062,18 +2062,9 @@ object Relational extends graft.QueryModule {
   // parity, fail-loud ParityGate). Runs on RocksDB like the rest of
   // the streaming battery.
   private def q198(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/orders.parquet"
-    val schema = s.read.parquet(path).schema
-    val qname = s"q198_${System.nanoTime()}"
-    val fromStream = graft.streaming.StreamConf.withStateParts(s) {
-      // `orders.parquet*`: the file source requires a glob/directory (a
-      // bare file path throws 'basePath must be a directory' on the
-      // single-file fixtures), but the suffix-star form still pins the
-      // exact name the batch side reads in BOTH layouts (single file at
-      // sf0.01, part-file directory at sf1) — unlike the broader
-      // `orders*.parquet`, a future orders_v2.parquet cannot slip into
-      // the stream and desynchronize the gate
-      val o = s.readStream.schema(schema).parquet(s"$path*")
+    val fromStream = graft.streaming.StreamConf.drain(s, "q198",
+        "complete") { _ =>
+      val o = Tables.stream(s, dir, "orders")
         .filter(col("o_orderkey") % 3 =!= 0)
       val v1 = o.select(col("o_orderkey").as("k"), struct(
         lit(1).as("v"), col("o_totalprice").as("pb"),
@@ -2082,27 +2073,23 @@ object Relational extends graft.QueryModule {
         .select(col("o_orderkey").as("k"), struct(
           lit(2).as("v"), (col("o_totalprice") + 1).as("pb"),
           col("o_orderstatus").as("stb")).as("row"))
-      val latest = v1.union(v2).groupBy("k").agg(max(col("row")).as("r"))
-      val q = latest.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try {
-        q.processAllAvailable()
-        val b = s.table(qname)
-          .select(col("k"), col("r.pb").as("pb"), col("r.stb").as("stb"))
-        val a = s.read.parquet(path)
-          .filter(col("o_orderkey") % 7 =!= 0)
-          .select(col("o_orderkey").as("k"),
-            col("o_totalprice").as("pa"), col("o_orderstatus").as("sta"))
-        a.join(b, Seq("k"), "full_outer")
-          .withColumn("change_type", expr(
-            "CASE WHEN pa IS NULL THEN 'insert' " +
-              "WHEN pb IS NULL THEN 'delete' " +
-              "WHEN pa <> pb OR sta <> stb THEN 'update' " +
-              "ELSE 'unchanged' END"))
-          .groupBy("change_type")
-          .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("key_sum"))
-          .collect()
-      } finally { q.stop(); s.catalog.dropTempView(qname) }
+      v1.union(v2).groupBy("k").agg(max(col("row")).as("r"))
+    } { leg =>
+      val b = leg.out
+        .select(col("k"), col("r.pb").as("pb"), col("r.stb").as("stb"))
+      val a = Tables.load(s, dir, "orders")
+        .filter(col("o_orderkey") % 7 =!= 0)
+        .select(col("o_orderkey").as("k"),
+          col("o_totalprice").as("pa"), col("o_orderstatus").as("sta"))
+      a.join(b, Seq("k"), "full_outer")
+        .withColumn("change_type", expr(
+          "CASE WHEN pa IS NULL THEN 'insert' " +
+            "WHEN pb IS NULL THEN 'delete' " +
+            "WHEN pa <> pb OR sta <> stb THEN 'update' " +
+            "ELSE 'unchanged' END"))
+        .groupBy("change_type")
+        .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("key_sum"))
+        .collect()
     }
     val batch = q196(s, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap

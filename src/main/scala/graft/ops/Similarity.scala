@@ -2147,8 +2147,6 @@ object Similarity extends QueryModule {
   // transitive parity scheme, fail-loud via the gate bit.
   private def q122(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(s)
-    val path = s"$dir/embeddings.parquet"
-    val schema = s.read.parquet(path).schema
     val e = Tables.load(s, dir, "embeddings")
     val anchorsDf = e.filter(col("vec_id") >= NQueries &&
         col("vec_id") < NQueries + NCells)
@@ -2168,20 +2166,13 @@ object Similarity extends QueryModule {
          |                      'c', a._1)
          |    ELSE acc END).c""".stripMargin
 
-    val qname = s"q122_${System.nanoTime()}"
-    val index = graft.streaming.StreamConf.withStateParts(s) {
-      val q = s.readStream.schema(schema)
-        .parquet(s"$dir/embeddings*.parquet")
+    val index = graft.streaming.StreamConf.drain(s, "q122", "complete")(
+      _ => Tables.stream(s, dir, "embeddings")
         .filter(col("vec_id") >= NQueries) // q41's candidate set
         .withColumn("__anchors", anchorLit)
         .select(col("vec_id"), expr(assignExpr).as("cell"))
         .groupBy("cell")
-        .agg(collect_set(col("vec_id")).as("ids"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+        .agg(collect_set(col("vec_id")).as("ids")))(_.out.collect())
 
     // probe against the STREAM-built index: q41's probe assignment, the
     // index's memberships, vectors re-joined from the table

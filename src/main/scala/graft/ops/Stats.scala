@@ -1181,41 +1181,38 @@ object Stats extends QueryModule {
   private def q241(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
       .select("doc_id", "source", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-q241").toString
-    docs.repartition(4, col("doc_id"))
-      .write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    val state = s"$tmp/sketch"
-    val log = s"$tmp/log"
     def toTokens(df: DataFrame): DataFrame =
       df.select(col("source"), explode(expr(
         "regexp_extract_all(lower(text), '[a-z]+', 0)")).as("t"))
     val w = Window.partitionBy("src").orderBy(col("h").asc)
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-      .writeStream.outputMode("append")
-      .foreachBatch { (mb: DataFrame, id: Long) =>
-        val bh = kmvHashes(toTokens(mb), "source", "t")
-        val merged = (if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(state)))
-          s.read.parquet(state).unionByName(bh) else bh)
-          .distinct()
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= KmvK).select("src", "h")
-          // materialize BEFORE the overwrite clobbers the state this
-          // plan reads (the read-modify-write hazard)
-          .ckptLocal(eager = true)
-        merged.write.mode("overwrite").parquet(state)
-        mb.sparkSession.range(1).select(lit(id).as("batch_id"))
-          .write.mode("append").parquet(log)
-      }
-      .start()
-    val (streamedSk, nBatches) = try {
-      q.processAllAvailable()
-      (s.read.parquet(state).ckptLocal(eager = false),
-        s.read.parquet(log).select("batch_id").distinct().count())
-    } finally q.stop()
+    // unscoped (no state store: the sketch parquet IS the state), so the
+    // merge's batch plans keep the session's partitioning
+    val (streamedSk, nBatches) = graft.streaming.StreamConf.drain(s, "q241",
+        "append", stateParts = None,
+        foreachBatch = Some(root => (mb: DataFrame, id: Long) => {
+          val state = s"$root/sketch"
+          val bh = kmvHashes(toTokens(mb), "source", "t")
+          val merged = (if (graft.Fs.exists(s, state))
+            s.read.parquet(state).unionByName(bh) else bh)
+            .distinct()
+            .withColumn("rn", row_number().over(w))
+            .where(col("rn") <= KmvK).select("src", "h")
+            // materialize BEFORE the overwrite clobbers the state this
+            // plan reads (the read-modify-write hazard)
+            .ckptLocal(eager = true)
+          merged.write.mode("overwrite").parquet(state)
+          mb.sparkSession.range(1).select(lit(id).as("batch_id"))
+            .write.mode("append").parquet(s"$root/log")
+        })) { root =>
+      docs.repartition(4, col("doc_id"))
+        .write.mode("overwrite").parquet(s"$root/in.parquet")
+      Tables.stream(s, root, "in", filesPerTrigger = Some(1))
+    } { leg =>
+      // eager: the drained sketch outlives the scratch root
+      (s.read.parquet(s"${leg.root}/sketch").ckptLocal(),
+        s.read.parquet(s"${leg.root}/log").select("batch_id").distinct()
+          .count())
+    }
     val batchSk = kmvHashes(toTokens(docs), "source", "t")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= KmvK).select("src", "h")

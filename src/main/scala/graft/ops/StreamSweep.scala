@@ -2,9 +2,9 @@ package graft.ops
 
 import graft.{ParityGate, QueryModule, Tables}
 import graft.sizing.{Concurrency, QuerylogAdapter, SizingConfig}
-import graft.streaming.StreamingConcurrency
+import graft.streaming.{StreamConf, StreamingConcurrency}
 import graft.streaming.StreamingConcurrency._
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * semantics included); q78 = gap sessions via `session_window`;
   * q74 (streaming exact dedup) lives with the dedup ops in [[Dedup]].
   *
+  * Every streamed leg, here and in the other modules, runs through
+  * [[graft.streaming.StreamConf.drain]]: it streams a driver table or
+  * files it wrote under its own scratch root via [[Tables.stream]], its
+  * checkpoint lives under that root too, and the root is deleted when
+  * the leg's read body returns or throws — a leg leaves no files behind.
+  *
   * q73: the streaming sweep-line under the driver's correctness gate.
   *
   * Runs [[graft.streaming.StreamingConcurrency]] (the Structured Streaming
@@ -31,11 +37,12 @@ import org.apache.spark.sql.functions._
   * result on identical input.
   *
   * The stream is fed from a real FILE SOURCE: the kept intervals are
-  * written once to parquet (a distributed write) and `readStream` picks
-  * them up — no driver-side collect anywhere in the data path, the same
-  * shape as q74/q75/q77/q78. A sentinel interval rides in the same file;
-  * its event time advances the watermark past every real bucket so the
-  * event-time timeouts fire (data + sentinel arrive in one micro-batch,
+  * written once to parquet under the leg's scratch root (a distributed
+  * write) and streamed back — no driver-side collect anywhere in the
+  * data path, the same shape as q74/q75/q77/q78. A sentinel interval
+  * rides in the same file; its event time advances the watermark past
+  * every real bucket so the event-time timeouts fire (data + sentinel
+  * arrive in one micro-batch,
   * and the engine's automatic no-data batch then flushes the timeouts —
   * two micro-batches total). The only driver-side values are the
   * min/max bounds (one 2-column aggregate, which also serves as the batch
@@ -79,54 +86,34 @@ object StreamSweep extends QueryModule {
     val sentinelUs = maxEndUs + 10 * bucketUs
     val sentinelBucket = Math.floorDiv(sentinelUs, bucketUs)
 
-    // The stream's file source: kept intervals + sentinel, written once.
+    // The stream's file source: kept intervals + sentinel, written once
+    // under the leg's scratch root — which also holds the checkpoint, so
+    // the one finally-deleted root owns every artifact this entry creates.
     // queryId is zero-padded so the streaming String tiebreak orders
     // identically to the batch operator's numeric query_id sort (Q5 tie
     // rule) — required for exact parity. timestamp_micros round-trips the
     // full µs through parquet (Spark writes TIMESTAMP_MICROS).
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q73-")
-    val src = s"$tmp/intervals"
-    val intervals = kept.select(
-      format_string("%020d", col("query_id")).as("queryId"),
-      expr("timestamp_micros(admitted_us)").as("admitted"),
-      expr("timestamp_micros(end_us)").as("end"),
-      col("min_executor_pod").cast("long").as("pods"),
-      col("cache_b_per_backend").cast("long").as("cachePerBackend"),
-      col("mem_b_per_backend").cast("long").as("memPerBackend"),
-      col("cpu_mv_per_backend").cast("long").as("cpuMilliVcores"),
-      col("spill_b_per_backend").cast("long").as("spillPerBackend"))
-    val sentinel = Seq(QueryInterval("sentinel", usTs(sentinelUs),
-      usTs(sentinelUs + bucketUs), 0, 0, 0, 0, 0)).toDS()
-      .select(intervals.columns.map(col): _*)
-    intervals.union(sentinel).write.parquet(src)
-
-    val folded = try {
-      graft.streaming.StreamConf.withStateParts(s) {
-        val input = s.readStream
-          .schema(Encoders.product[QueryInterval].schema)
-          .parquet(src).as[QueryInterval]
-        val summaries = StreamingConcurrency.bucketSummaries(
-          StreamingConcurrency.events(input, bucketUs), bucketUs, "0 seconds")
-        val qname = s"q73_${System.nanoTime()}"
-        // checkpoint under the SAME managed temp root as the file source:
-        // the one finally-deleted directory owns every artifact this
-        // entry creates — a killed JVM leaks nothing outside it (the
-        // other streaming entries create no files at all: their implicit
-        // temp checkpoints are removed by stop()).
-        val query = summaries.writeStream.format("memory").queryName(qname)
-          .option("checkpointLocation", s"$tmp/chk")
-          .outputMode("append").start()
-        try {
-          query.processAllAvailable()
-          val closed = s.table(qname).as[BucketSummary].collect().toSeq
-            .filter(_.bucket < sentinelBucket)
-          GlobalAccumulator.fold(closed)
-        } finally {
-          query.stop()
-          s.catalog.dropTempView(qname)
-        }
-      }
-    } finally graft.Fs.deleteRecursively(tmp)
+    val folded = StreamConf.drain(s, "q73", "append") { root =>
+      val intervals = kept.select(
+        format_string("%020d", col("query_id")).as("queryId"),
+        expr("timestamp_micros(admitted_us)").as("admitted"),
+        expr("timestamp_micros(end_us)").as("end"),
+        col("min_executor_pod").cast("long").as("pods"),
+        col("cache_b_per_backend").cast("long").as("cachePerBackend"),
+        col("mem_b_per_backend").cast("long").as("memPerBackend"),
+        col("cpu_mv_per_backend").cast("long").as("cpuMilliVcores"),
+        col("spill_b_per_backend").cast("long").as("spillPerBackend"))
+      val sentinel = Seq(QueryInterval("sentinel", usTs(sentinelUs),
+        usTs(sentinelUs + bucketUs), 0, 0, 0, 0, 0)).toDS()
+        .select(intervals.columns.map(col): _*)
+      intervals.union(sentinel).write.parquet(s"$root/intervals.parquet")
+      StreamingConcurrency.bucketSummaries(StreamingConcurrency.events(
+          Tables.stream(s, root, "intervals").as[QueryInterval], bucketUs),
+        bucketUs, "0 seconds").toDF()
+    } { leg =>
+      GlobalAccumulator.fold(leg.out.as[BucketSummary].collect().toSeq
+        .filter(_.bucket < sentinelBucket))
+    }
     val m = folded.getOrElse(sys.error("q73: no closed buckets — empty querylog?"))
 
     // Parity against the batch operator on the same kept querylog, over
@@ -173,12 +160,6 @@ object StreamSweep extends QueryModule {
       qtag: String, winFn: org.apache.spark.sql.Column,
       durationUs: Long): DataFrame = {
     import s.implicits._
-    val path = s"$dir/events.parquet"
-    // the file source reads the PHYSICAL schema; Tables.normalizeEvents
-    // then re-establishes the internal contract (ts = nanos long) on the
-    // streamed frame, same as Tables.load does for the batch side
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(path).schema
     // events.ts is a nanos long; the µs TimestampType column the watermark
     // hangs off is derived once and shared by both sides (the watermark
     // tag lives on the event_ts attribute — it must flow into the window,
@@ -193,19 +174,9 @@ object StreamSweep extends QueryModule {
       .select(col("w.start").as("w_start"), col("event_type"),
         col("n_events"), col("sum_v"))
 
-    val qname = s"${qtag}_${System.nanoTime()}"
-    // glob, not the bare file: FileStreamSource force-sets basePath to a
-    // non-glob path and then requires it to be a directory
-    val streamed = graft.streaming.StreamConf.withStateParts(s) {
-      val q = windowed(
-        withEventTs(Tables.normalizeEvents(s.readStream.schema(schema)
-            .parquet(s"$dir/events*.parquet")))
-          .withWatermark("event_ts", "0 seconds"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+    val streamed = StreamConf.drain(s, qtag, "append")(_ =>
+      windowed(withEventTs(Tables.stream(s, dir, "events"))
+        .withWatermark("event_ts", "0 seconds")))(_.out.collect())
 
     val events = Tables.load(s, dir, "events")
     val maxTsUs = events.agg(max(expr("ts div 1000"))).head().getLong(0)
@@ -250,42 +221,44 @@ object StreamSweep extends QueryModule {
   // input is complete (state eviction happens only behind the watermark),
   // so the streamed match SET must equal the batch join exactly —
   // asserted per-row with the same transitive-parity scheme as q73–q75.
-  private def q77(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    def side(df: DataFrame, kind: String, alias: String): DataFrame = df
-      .filter(col("event_type") === kind)
-      .select(
-        col("event_id").as(s"${alias}_id"),
-        col("user_id").as(s"${alias}_user"),
-        expr("timestamp_micros(ts div 1000)").as(s"${alias}_ts"))
-    def joined(views: DataFrame, clicks: DataFrame): DataFrame = views
-      .join(clicks,
+  /** q77/q165's view→click interval join: views and clicks of `events`
+    * (evaluated once per side, so a stream gets one source per side)
+    * joined on user with a click at most 10 minutes after its view, in
+    * `joinType`. Streamed sides are watermarked at 0 s on their own time
+    * column — the range bound on those columns is what lets the engine
+    * evict join state. Output: v_id, c_id, user_id, v_ts.
+    */
+  private def viewClicks(events: => DataFrame, joinType: String,
+      streamed: Boolean): DataFrame = {
+    def side(kind: String, a: String): DataFrame = {
+      val d = events.filter(col("event_type") === kind).select(
+        col("event_id").as(s"${a}_id"), col("user_id").as(s"${a}_user"),
+        expr("timestamp_micros(ts div 1000)").as(s"${a}_ts"))
+      if (streamed) d.withWatermark(s"${a}_ts", "0 seconds") else d
+    }
+    side("view", "v").join(side("click", "c"),
         col("v_user") === col("c_user") &&
           col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"))
-      .select(col("v_id"), col("c_id"), col("v_user").as("user_id"))
+          col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
+        joinType)
+      .select(col("v_id"), col("c_id"), col("v_user").as("user_id"),
+        col("v_ts"))
+  }
 
-    def stream() = Tables.normalizeEvents(
-      s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
-    val qname = s"q77_${System.nanoTime()}"
-    // 8 state parts, not the harness default 4: join state is per-EVENT
-    // (every view/click inside the watermark horizon), not per-window —
-    // an order of magnitude more state rows than the window harnesses
-    val streamed = graft.streaming.StreamConf.withStateParts(s, n = 8) {
-      val q = joined(
-        side(stream(), "view", "v").withWatermark("v_ts", "0 seconds"),
-        side(stream(), "click", "c").withWatermark("c_ts", "0 seconds"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+  // 8 state parts, not the harness default 4: join state is per-EVENT
+  // (every view/click inside the watermark horizon), not per-window —
+  // an order of magnitude more state rows than the window harnesses
+  private def streamedViewClicks(s: SparkSession, dir: String, tag: String,
+      joinType: String): Array[org.apache.spark.sql.Row] =
+    StreamConf.drain(s, tag, "append", stateParts = Some(8))(_ =>
+      viewClicks(Tables.stream(s, dir, "events"), joinType,
+        streamed = true))(_.out.collect())
 
+  private def q77(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val streamed = streamedViewClicks(s, dir, "q77", "inner")
     val events = Tables.load(s, dir, "events")
-    val batch = joined(side(events, "view", "v"), side(events, "click", "c"))
+    val batch = viewClicks(events, "inner", streamed = false)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     ParityGate(
@@ -315,52 +288,17 @@ object StreamSweep extends QueryModule {
   // what flushes the evictable state — processAllAvailable covers it.
   private def q165(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    def side(df: DataFrame, kind: String, alias: String): DataFrame = df
-      .filter(col("event_type") === kind)
-      .select(
-        col("event_id").as(s"${alias}_id"),
-        col("user_id").as(s"${alias}_user"),
-        expr("timestamp_micros(ts div 1000)").as(s"${alias}_ts"))
-    def joined(views: DataFrame, clicks: DataFrame): DataFrame = views
-      .join(clicks,
-        col("v_user") === col("c_user") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      .select(col("v_id"), col("c_id"), col("v_user").as("user_id"))
-
-    def stream() = Tables.normalizeEvents(
-      s.readStream.schema(schema).parquet(s"$dir/events*.parquet"))
-    val qname = s"q165_${System.nanoTime()}"
-    val streamed = graft.streaming.StreamConf.withStateParts(s, n = 8) {
-      val q = joined(
-        side(stream(), "view", "v").withWatermark("v_ts", "0 seconds"),
-        side(stream(), "click", "c").withWatermark("c_ts", "0 seconds"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+    val streamed = streamedViewClicks(s, dir, "q165", "left_outer")
 
     val events = Tables.load(s, dir, "events")
-    val v = side(events, "view", "v")
-    val c = side(events, "click", "c")
     // final global watermark in µs: min of each side's max event time,
     // truncated to ms (the engine tracks watermarks at ms precision)
-    val wmUs = {
-      val vMax = v.agg(max(expr("unix_micros(v_ts)"))).head().getLong(0)
-      val cMax = c.agg(max(expr("unix_micros(c_ts)"))).head().getLong(0)
-      math.min(vMax, cMax) / 1000 * 1000
-    }
-    val batchRows = v.join(c,
-        col("v_user") === col("c_user") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      .select(col("v_id"), col("c_id"), col("v_user").as("user_id"),
+    val sideMaxUs = events.filter(col("event_type").isin("view", "click"))
+      .groupBy("event_type").agg(max(expr("ts div 1000")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val wmUs = math.min(sideMaxUs("view"), sideMaxUs("click")) / 1000 * 1000
+    val batchRows = viewClicks(events, "left_outer", streamed = false)
+      .select(col("v_id"), col("c_id"), col("user_id"),
         expr("unix_micros(v_ts)").as("v_us"))
       .collect()
     val matched = batchRows.filter(!_.isNullAt(1))
@@ -407,9 +345,8 @@ object StreamSweep extends QueryModule {
   // per-batch drop ledger (first seen at sf1/sf10, where the write is
   // slow enough for the poller to win the race); a single part file
   // becomes visible in one atomic rename, so the early batch is
-  // all-or-nothing by construction. Scratch is driver-local (q112's
-  // local-mode contract; a cluster routes it through
-  // spark.graft.scratch.dir).
+  // all-or-nothing by construction. Both halves land under the leg's
+  // scratch root (driver-local unless spark.graft.scratch.dir is set).
   //
   // Ledger units (probed, not assumed): `numRowsDroppedByWatermark`
   // counts rows reaching the STATE operator — i.e. post-shuffle MERGED
@@ -420,7 +357,6 @@ object StreamSweep extends QueryModule {
   // batch-side DISTINCT window count of the early half.
   private def q180(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         expr("timestamp_micros(ts div 1000)").as("event_ts"))
@@ -435,59 +371,47 @@ object StreamSweep extends QueryModule {
       .select(expr("unix_micros(event_ts) div 3600000000").as("h"))
       .distinct().count()
 
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-q180-").toString
-    val qname = s"q180_${System.nanoTime()}"
-    try {
-      late.write.mode("append").parquet(scratch)
-      val (rows, dropped) = graft.streaming.StreamConf
-        .withStateParts(s, n = 4) {
-          val q = s.readStream.schema(ev.schema).parquet(scratch)
-            .withWatermark("event_ts", "0 seconds")
-            .groupBy(window(col("event_ts"), "1 hour").as("w"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(expr("unix_micros(w.start)").as("w_start_us"),
-              col("n_events"))
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            // one part file => atomic visibility to the polling source
-            // (multi-file commits can split across micro-batches and
-            // double-count windows in the drop ledger — see doc above)
-            early.coalesce(1).write.mode("append").parquet(scratch)
-            q.processAllAvailable()
-            val drops = q.recentProgress.toSeq
-              .flatMap(_.stateOperators.toSeq)
-              .map(_.numRowsDroppedByWatermark).sum
-            (s.table(qname).collect(), drops)
-          } finally { q.stop(); s.catalog.dropTempView(qname) }
-        }
-
-      // expected: late-half windows whose END the final watermark passed
-      val wmUs = late.agg(max(expr("unix_micros(event_ts)")))
-        .head().getLong(0) / 1000 * 1000
-      val expected = late
+    val (rows, dropped) = StreamConf.drain(s, "q180", "append") { root =>
+      late.write.parquet(s"$root/in.parquet")
+      Tables.stream(s, root, "in")
+        .withWatermark("event_ts", "0 seconds")
         .groupBy(window(col("event_ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n_events"))
         .select(expr("unix_micros(w.start)").as("w_start_us"),
-          col("n_events"), expr("unix_micros(w.end)").as("w_end_us"))
-        .filter(col("w_end_us") <= wmUs)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.ParityGate(
-        rows.toSeq
-          .map { r =>
-            val t = (r.getLong(0), r.getLong(1))
-            (t._1, t._2,
-              expected.contains(t) && expected.size == rows.length &&
-                dropped == nEarlyWindows)
-          }
-          .toDF("w_start_us", "n_events", "matches_batch"),
-        "q180_late_data_audit", "matches_batch")
-    } finally {
-      graft.Fs.deleteRecursively(java.nio.file.Paths.get(scratch))
+          col("n_events"))
+    } { leg =>
+      // one part file => atomic visibility to the polling source
+      // (multi-file commits can split across micro-batches and
+      // double-count windows in the drop ledger — see doc above)
+      early.coalesce(1).write.mode("append").parquet(s"${leg.root}/in.parquet")
+      leg.query.processAllAvailable()
+      val drops = leg.query.recentProgress.toSeq
+        .flatMap(_.stateOperators.toSeq)
+        .map(_.numRowsDroppedByWatermark).sum
+      (leg.out.collect(), drops)
     }
+
+    // expected: late-half windows whose END the final watermark passed
+    val wmUs = late.agg(max(expr("unix_micros(event_ts)")))
+      .head().getLong(0) / 1000 * 1000
+    val expected = late
+      .groupBy(window(col("event_ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(expr("unix_micros(w.start)").as("w_start_us"),
+        col("n_events"), expr("unix_micros(w.end)").as("w_end_us"))
+      .filter(col("w_end_us") <= wmUs)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    graft.ParityGate(
+      rows.toSeq
+        .map { r =>
+          val t = (r.getLong(0), r.getLong(1))
+          (t._1, t._2,
+            expected.contains(t) && expected.size == rows.length &&
+              dropped == nEarlyWindows)
+        }
+        .toDF("w_start_us", "n_events", "matches_batch"),
+      "q180_late_data_audit", "matches_batch")
   }
 
   // --- q78: session_window (gap sessions) under the gate ------------------
@@ -507,8 +431,6 @@ object StreamSweep extends QueryModule {
   // is oracle-hash-checked — same transitive scheme as q73–q77.
   private def q78(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
     def withEventTs(df: DataFrame): DataFrame =
       df.withColumn("event_ts", expr("timestamp_micros(ts div 1000)"))
     def sessions(df: DataFrame): DataFrame = df
@@ -520,17 +442,9 @@ object StreamSweep extends QueryModule {
       .select(col("w.start").as("s_start"), col("w.end").as("s_end"),
         col("user_id"), col("n_events"), col("sum_v"))
 
-    val qname = s"q78_${System.nanoTime()}"
-    val streamed = graft.streaming.StreamConf.withStateParts(s) {
-      val q = sessions(
-        withEventTs(Tables.normalizeEvents(s.readStream.schema(schema)
-            .parquet(s"$dir/events*.parquet")))
-          .withWatermark("event_ts", "0 seconds"))
-        .writeStream.format("memory").queryName(qname)
-        .outputMode("append").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+    val streamed = StreamConf.drain(s, "q78", "append")(_ =>
+      sessions(withEventTs(Tables.stream(s, dir, "events"))
+        .withWatermark("event_ts", "0 seconds")))(_.out.collect())
 
     val events = Tables.load(s, dir, "events")
     val maxTsUs = events.agg(max(expr("ts div 1000"))).head().getLong(0)

@@ -469,23 +469,14 @@ object Temporal extends QueryModule {
   // this is the anti-entropy monitor a landing zone runs: each arriving
   // file folds into per-group checksums without re-scanning history.
   private def q96(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/orders.parquet"
-    val schema = s.read.parquet(path).schema
     // tableChecksum itself builds the streaming aggregation: groupBy/agg
     // is streaming-capable in complete mode, so the stream computes the
-    // IDENTICAL agg body as the batch operator — one drift surface, not two
-    val streamed = tableChecksum(
-      s.readStream.schema(schema).parquet(s"$dir/orders*.parquet"),
-      rowKeySql = ordersRowKeySpark,
-      groupCols = Seq("o_orderpriority"))
-    val qname = s"q96_${System.nanoTime()}"
-    // state = one row per group (5 order priorities) — minimal state parts
-    val fromStream = graft.streaming.StreamConf.withStateParts(s) {
-      val q = streamed.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").start()
-      try { q.processAllAvailable(); s.table(qname).collect() }
-      finally { q.stop(); s.catalog.dropTempView(qname) }
-    }
+    // IDENTICAL agg body as the batch operator — one drift surface, not two.
+    // State = one row per group (5 order priorities) — minimal state parts.
+    val fromStream = graft.streaming.StreamConf.drain(s, "q96", "complete")(
+      _ => tableChecksum(Tables.stream(s, dir, "orders"),
+        rowKeySql = ordersRowKeySpark,
+        groupCols = Seq("o_orderpriority")))(_.out.collect())
     // group keys NULL-sentineled on BOTH sides (same treatment the row
     // fingerprint gives o_orderstatus): a NULL group must compare as a
     // real key, not collapse onto Scala null map semantics

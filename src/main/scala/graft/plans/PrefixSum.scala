@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Distributed running (prefix) sums over a global ordering.
   *
@@ -93,10 +94,22 @@ object PrefixSum {
     val joined = local.join(broadcast(carries), joinCond, "left")
     sumCols.foldLeft(joined) { case (d, (src, dst)) =>
       // Carry-in is exact decimal; cast back to the running column's type
-      // so integer-delta scans stay integral end-to-end.
+      // so integer-delta scans stay integral end-to-end. A decimal carry is
+      // a DECIMAL(38, s) window sum, and Spark types `dst + carry` wider
+      // than 38 digits, so its precision-loss rule would drop scale and
+      // round every bucket after the first. Both operands at
+      // DECIMAL(min(p, 37), s) add exactly at the column's own scale; a
+      // running sum outside the column's type overflows loudly (ANSI).
+      val t = d.schema(dst).dataType
+      val add: Column => Column = t match {
+        case d: DecimalType if d.scale < DecimalType.MAX_PRECISION =>
+          _.cast(DecimalType(
+            math.min(d.precision, DecimalType.MAX_PRECISION - 1), d.scale))
+        case _ => identity
+      }
       d.withColumn(dst,
-        (col(dst) + coalesce(col(s"__carry_$src"), lit(0)))
-          .cast(d.schema(dst).dataType))
+        (add(col(dst)) + add(coalesce(col(s"__carry_$src"), lit(0))))
+          .cast(t))
     }.drop(Seq("__bucket", "__cbucket") ++ groupCols.map(g => s"__cg_$g") ++
       srcs.map(s => s"__carry_$s"): _*)
   }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object Formulas {
 
   /** Guarded ratio: `num/den`, 0 when den is 0 or NULL (Q9). */
-  private def safeDiv(num: Column, den: Column): Column =
+  private[sizing] def safeDiv(num: Column, den: Column): Column =
     when(den.isNull || den === 0, lit(0.0)).otherwise(num / den)
 
   /** Per-dimension raw (un-ceiled) pod ratios — the reference keeps these

@@ -79,18 +79,22 @@ object Pipeline {
     * GB shares, avg vcores, data rate. Doubles are carried as
     * DECIMAL(38,9) so distributed partial sums are exact and
     * order-independent; rendered values round to 2dp, far below the 1e-9
-    * quantization.
+    * quantization. A row with `num_backends` = 0 shares 0 GB (Q9's
+    * [[Formulas.safeDiv]] guard, as its per-node averages), where the
+    * reference raises ZeroDivisionError (py:223–227).
     */
   private[sizing] val reportDeltas: Seq[(String, Column)] = {
     def dec(c: Column): Column = c.cast("decimal(38,9)")
     Seq(
       "pods" -> dec(greatest(col("ratio_data"), col("ratio_mem"),
         col("ratio_cpu"), col("ratio_spill"))),
-      "cache" -> dec(col("reqd_cache_gb") / col("num_backends")),
-      "mem" -> dec(col("reqd_agg_mem") / col("num_backends")),
+      "cache" -> dec(Formulas.safeDiv(col("reqd_cache_gb"),
+        col("num_backends"))),
+      "mem" -> dec(Formulas.safeDiv(col("reqd_agg_mem"), col("num_backends"))),
       "cpu" -> dec(col("avg_vcores_per_node")),
       "data_rate" -> dec(col("avg_data_rate_per_node")),
-      "spill" -> dec(col("memory_spilled_gb") / col("num_backends")))
+      "spill" -> dec(Formulas.safeDiv(col("memory_spilled_gb"),
+        col("num_backends"))))
   }
 
   /** Full run: reads `cfg.inputFile`, writes the three sinks under

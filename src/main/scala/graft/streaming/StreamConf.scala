@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Session-conf scoping for the streaming parity harnesses.
+/** The streaming parity harness: [[drain]], the one start → drain → read
+  * → stop path every streamed battery leg runs through, and the
+  * session-conf scoping it applies.
   *
   * A Structured Streaming query captures `spark.sql.shuffle.partitions`
   * at START as its STATE partition count, and every micro-batch then
@@ -90,4 +93,48 @@ object StreamConf {
       restore(ChangelogKey, oldChangelog)
     }
   }
+
+  /** What [[drain]] hands a leg's read body: the leg's scratch root and
+    * its running query. `out` is the memory sink's frame (memory-sink
+    * legs only; a foreachBatch leg reads what its function wrote under
+    * `root`).
+    */
+  final case class Leg(root: String, query: StreamingQuery) {
+    def out: DataFrame = query.sparkSession.table(query.name)
+  }
+
+  /** Run one streamed leg end to end — the battery's only start/drain/
+    * stop.
+    *
+    * Makes the leg's scratch root ([[graft.Fs.withScratch]], tag `tag`)
+    * and hands it to `stream`, which writes whatever input the leg
+    * streams from its own files and returns the streaming frame; it runs
+    * OUTSIDE the state-parts scope, so batch writes in it keep the
+    * session's partitioning. The query then starts in `outputMode` on a
+    * memory sink, or on `foreachBatch` (given the root) when set, with its
+    * checkpoint at `<root>/chk` — under [[withStateParts]]`(n)` for
+    * `stateParts = Some(n)`, unscoped for `None` (a foreachBatch body
+    * that runs batch plans would capture `n` as their parallelism).
+    * `processAllAvailable` drains it and `read` gets the [[Leg]] inside
+    * the same scope. In `finally` the query stops, the memory view is
+    * dropped and the root is deleted: nothing `read` returns may still
+    * read files under the root (collect it, or checkpoint it eagerly).
+    */
+  def drain[T](s: SparkSession, tag: String, outputMode: String,
+      stateParts: Option[Int] = Some(HarnessStateParts),
+      foreachBatch: Option[String => (DataFrame, Long) => Unit] = None)(
+      stream: String => DataFrame)(read: Leg => T): T =
+    graft.Fs.withScratch(s, tag) { root =>
+      val df = stream(root)
+      val name = s"${tag}_${System.nanoTime()}"
+      def run(): T = {
+        val w = df.writeStream.queryName(name).outputMode(outputMode)
+          .option("checkpointLocation", s"$root/chk")
+        val q = foreachBatch.fold(w.format("memory"))(
+          f => w.foreachBatch(f(root))).start()
+        try { q.processAllAvailable(); read(Leg(root, q)) }
+        finally { q.stop(); s.catalog.dropTempView(name) }
+      }
+      stateParts.fold(run())(n => withStateParts(s, n)(run()))
+    }
 }

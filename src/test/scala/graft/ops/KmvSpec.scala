@@ -87,8 +87,12 @@ class KmvSpec extends SparkTestBase {
     // ParityGate throws if the drained synopsis differs from the batch
     // sketch or fewer than 2 micro-batches ran — reaching collect()
     // with true bits IS the parity assertion
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch = tmp.list().filter(_.startsWith("graft-q241")).toSet
+    val before = scratch
     val rows = graft.SparkEntry.queries("q241_stream_kmv_merge")(
       spark, dir).collect()
+    assert((scratch -- before).isEmpty, "q241 left a scratch dir behind")
     assert(rows.length === 20)
     rows.foreach { r =>
       assert(r.getBoolean(5) && r.getBoolean(6))

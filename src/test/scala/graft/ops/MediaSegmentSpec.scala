@@ -13,7 +13,11 @@ class MediaSegmentSpec extends SparkTestBase {
 
   test("q250: streamed manifest merges to the batch manifest and " +
       "serves a pruning decision") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch = tmp.list().filter(_.startsWith("graft-q250")).toSet
+    val before = scratch
     val r = q("q250_stream_zonemap").head()
+    assert((scratch -- before).isEmpty, "q250 left a scratch dir behind")
     assert(r.getLong(0) > 0L, "no files in the manifest")
     assert(r.getLong(1) <= r.getLong(0))
     assert(r.getLong(2) > 0L, "the probe window matched no file")

@@ -55,6 +55,26 @@ class PrefixSumSpec extends SparkTestBase {
     assert(out.schema("run").dataType.typeName == "long")
   }
 
+  test("a DECIMAL(38,9) running sum keeps its scale past the first bucket") {
+    import spark.implicits._
+    // 1e-9 per row over an even 0..99 range split into several buckets:
+    // every carry-in add must stay at scale 9, not round to 8 places
+    val df = (0L until 100L).map(i => (i, i)).toDF("ts", "id")
+      .withColumn("delta", lit("0.000000001").cast("decimal(38,9)"))
+      .repartition(4)
+    val out = PrefixSum.scan(df, "ts", Seq(col("ts"), col("id")),
+      Seq("delta" -> "run"), knownRange = Some((0.0, 99.0)))
+    assert(out.schema("run").dataType ==
+      org.apache.spark.sql.types.DecimalType(38, 9))
+    val got = out.select("ts", "run").collect()
+      .map(r => r.getLong(0) -> r.getDecimal(1)).sortBy(_._1)
+    assert(got.length == 100)
+    got.foreach { case (ts, run) =>
+      assert(run.compareTo(java.math.BigDecimal.valueOf(ts + 1, 9)) == 0,
+        s"ts=$ts run=$run")
+    }
+  }
+
   test("uniformBounds stays correct on skewed keys (only balance degrades)") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)

@@ -146,6 +146,19 @@ class PipelineSpec extends SparkTestBase {
     assert(r.maxConcurrentSpill == 0.0)
   }
 
+  test("a kept row with num_backends = 0 shares 0 GB in the sweep") {
+    // the reference raises ZeroDivisionError here (SURVEY §2.10 Q9b); one
+    // such row must not abort the report: q2's cache/mem/spill shares are 0
+    val text = csv.replace("10,QUERY,0,1\n", "10,QUERY,0,0\n")
+    assert(text != csv)
+    val (r, _) = runCsv(text)
+    assert(r.totalQueries == 3)
+    assert(r.maxConcurrentQueries == 2)
+    assert(r.maxConcurrentMemory == 250.0) // q1's 500 / 2 + q2's 0
+    assert(r.maxConcurrentCache == 1500.0) // q1's 3000 / 2 + q2's 0
+    assert(r.maxConcurrentSpill == 750.0)
+  }
+
   test("report renders all five sections") {
     val r = report.render
     Seq("Individual Query Analysis", "Concurrent Query Analysis",

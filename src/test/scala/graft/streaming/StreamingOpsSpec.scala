@@ -360,4 +360,80 @@ class StreamingOpsSpec extends SparkTestBase {
     assert(!heapEngaged, "hdfs run unexpectedly used RocksDB")
     assert(rocksIds == Seq(1L, 2L, 3L) && heapIds == rocksIds)
   }
+
+  /** After a drain: no query runs, its memory view and its scratch root
+    * are gone.
+    */
+  private def assertCleanedUp(leg: StreamConf.Leg): Unit = {
+    assert(spark.streams.active.isEmpty, "a drained query still runs")
+    assert(!spark.catalog.tableExists(leg.query.name), "memory view left")
+    assert(!graft.Fs.exists(spark, leg.root), "scratch root left")
+  }
+
+  test("drain stops the query, drops the view and deletes the root " +
+      "whether its read body returns or throws") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    var seen: Option[StreamConf.Leg] = None
+    val total = StreamConf.drain(spark, "drain_spec", "complete") { root =>
+      Seq(7L).toDF("v").write.parquet(s"$root/side.parquet")
+      input.toDF().groupBy().agg(sum(col("value")).as("s"))
+    } { leg =>
+      seen = Some(leg)
+      assert(leg.query.isActive)
+      assert(graft.Fs.exists(spark, s"${leg.root}/side.parquet"))
+      assert(graft.Fs.exists(spark, s"${leg.root}/chk"))
+      leg.out.collect().map(_.getLong(0)).toSeq
+    }
+    assert(total == Seq(6L))
+    assertCleanedUp(seen.get)
+
+    val failing = MemoryStream[Long]
+    failing.addData(4L)
+    seen = None
+    val e = intercept[IllegalStateException] {
+      StreamConf.drain(spark, "drain_spec", "append")(_ => failing.toDF()) {
+        leg =>
+          seen = Some(leg)
+          throw new IllegalStateException("read body failed")
+      }
+    }
+    assert(e.getMessage == "read body failed")
+    assertCleanedUp(seen.get)
+  }
+
+  test("Fs.withScratch deletes its root, and its own temp base when " +
+      "spark.graft.scratch.dir is unset") {
+    val key = "spark.graft.scratch.dir"
+    assert(spark.conf.getOption(key).isEmpty)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def tagged = tmp.list().filter(_.startsWith("graft-scratch-spec")).toSet
+    val before = tagged
+    val root = graft.Fs.withScratch(spark, "scratch-spec") { root =>
+      spark.range(3).write.parquet(s"$root/x.parquet")
+      assert(spark.read.parquet(s"$root/x.parquet").count() == 3L)
+      root
+    }
+    assert(!graft.Fs.exists(spark, root))
+    assert(tagged == before, "withScratch left its temp base behind")
+
+    // set: a fresh root under the deployment's base, deleted; base kept
+    val base = java.nio.file.Files.createTempDirectory("graft-scratch-base")
+    spark.conf.set(key, base.toUri.toString)
+    try {
+      val under = graft.Fs.withScratch(spark, "scratch-spec") { root =>
+        spark.range(3).write.parquet(root)
+        assert(graft.Fs.exists(spark, root))
+        root
+      }
+      assert(under.contains(base.getFileName.toString))
+      assert(!graft.Fs.exists(spark, under))
+      assert(java.nio.file.Files.isDirectory(base))
+    } finally {
+      spark.conf.unset(key)
+      graft.Fs.deleteRecursively(base)
+    }
+  }
 }
