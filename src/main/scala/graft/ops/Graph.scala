@@ -28,6 +28,11 @@ import org.apache.spark.sql.functions._
   * is localCheckpoint()ed so lineage stays O(1) instead of growing per
   * iteration (superseded checkpoint blocks are released by Spark's
   * ContextCleaner once the superseded round's RDD is unreferenced).
+  * The iterative loops here (this one, [[Graph.kCore]],
+  * [[Graph.hopDistances]], [[Graph.shortestPaths]]) checkpoint each
+  * round with `ckptCounted`, which counts the rows their fixpoint test
+  * needs in the checkpoint's own execution: one Spark execution per
+  * round, not a checkpoint plus a `count()`.
   *
   * Determinism: labels are ids, min is associative/commutative, and the
   * fixpoint (min id reachable) is unique — results are independent of
@@ -104,21 +109,20 @@ object Graph extends QueryModule {
       // labels stay monotone non-increasing and the hook pointer graph
       // is acyclic by the < order. The previous label rides the same
       // aggregate (min over the own-row only) so the changed-count needs
-      // no labels⋈next join; the checkpoint is LAZY so that count is the
-      // hook step's one action and materializes the blocks it runs on
-      // (the compression loop below adds one more count per doubling
-      // step — O(log chain-depth) of them per round).
+      // no labels⋈next join, and the counted checkpoint takes it in the
+      // hook step's one execution (the compression loop below adds one
+      // more per doubling step — O(log chain-depth) of them per round).
       val msgs = sym
         .join(labels.select(col("id").as("a"), col("comp").as("ca")), "a")
         .join(labels.select(col("id").as("b"), col("comp").as("cb")), "b")
         .select(col("ca").as("id"), col("cb").as("comp"))
-      val hooked = labels.withColumn("own", lit(true))
+      val (hooked, moved) = labels.withColumn("own", lit(true))
         .unionByName(msgs.withColumn("own", lit(false)))
         .groupBy("id").agg(
           min(col("comp")).as("comp"),
           min(when(col("own"), col("comp"))).as("prev"))
-        .ckptLocal(false)
-      changed = hooked.filter(col("comp") =!= col("prev")).count()
+        .ckptCounted(col("comp") =!= col("prev"))
+      changed = moved
       labels = hooked.select(col("id"), col("comp"))
       // full path compression: comp ← comp(comp) until idempotent.
       // Labels are always vertex ids with comp(x) ≤ x, so the self-join
@@ -136,11 +140,11 @@ object Graph extends QueryModule {
           "connectedComponents: path compression did not reach a " +
             "fixpoint in 64 doubling steps — label frame is corrupt " +
             "(cycle?); doubling covers chains of depth 2^64")
-        val stepped = labels
+        val (stepped, jumped) = labels
           .join(labels.select(col("id").as("comp"), col("comp").as("jump")),
             "comp")
-          .ckptLocal(false)
-        compressing = stepped.filter(col("jump") =!= col("comp")).count() > 0
+          .ckptCounted(col("jump") =!= col("comp"))
+        compressing = jumped > 0
         labels = stepped.select(col("id"), col("jump").as("comp"))
         cstep += 1
       }
@@ -371,13 +375,15 @@ object Graph extends QueryModule {
     var h = 1
     var frontierSize = 1L
     while (h <= maxHops && frontierSize > 0) {
-      val next = frontier
+      // lineage O(1) per round, CC's trade; the counted checkpoint is
+      // the round's one execution
+      val (next, reached) = frontier
         .join(edges, frontier("id") === edges("src"))
         .select(edges("dst").as("id"), lit(h.toLong).as("hops"))
         .distinct()
         .join(dist.select("id"), Seq("id"), "left_anti")
-        .ckptLocal(false) // lineage O(1) per round, CC's trade
-      frontierSize = next.count() // the round's one action
+        .ckptCounted()
+      frontierSize = reached
       if (frontierSize > 0) {
         dist = dist.unionByName(next).ckptLocal(false)
         frontier = next
@@ -758,10 +764,11 @@ object Graph extends QueryModule {
   // Scale shape: the edge build is one fact-fact equi-join (lineitem ⋈
   // orders on the order key) + an entity-grain aggregate — the peel then
   // runs on the aggregated graph, orders of magnitude smaller than the
-  // fact table. Each peel round semi-joins the CURRENT edge set to the
-  // survivors on both endpoints and recomputes degrees; the edge frame
-  // is re-checkpointed each round so work SHRINKS monotonically (the
-  // full edge set is never rescanned after round 1). Peeling is
+  // fact table. Each peel round semi-joins the CURRENT edge set on both
+  // endpoints to the vertices whose degree in it is ≥ k, and checkpoints
+  // and counts the result in ONE Spark execution; the edge frame shrinks
+  // monotonically (the full edge set is never rescanned after round 1),
+  // and an unchanged edge count is the fixpoint. Peeling is
   // inherently iterative — a path graph needs n/2 rounds — but real
   // trade/link graphs peel in tens of rounds (measured: 1 round at
   // sf0.01, 23 at sf0.1); the round cap fails loud, and the oracle
@@ -773,6 +780,17 @@ object Graph extends QueryModule {
     * columns `a`, `b` (self-loops dropped, duplicates collapsed).
     * Returns (`vid`, `deg`) — every vertex of the k-core with its
     * induced degree (≥ k by construction).
+    *
+    * One Spark execution per peel round: the next edge frame
+    * `cur ⋉ S on a ⋉ S on b`, with S the vertices of degree ≥ k in
+    * `cur`, is checkpointed and counted together (`ckptCounted`). S is
+    * one frame read by both semi-joins, so the plan builds its exchange
+    * once and reuses it. The peel stops when the edge count is
+    * unchanged: every vertex of the symmetrized set has an edge and
+    * dropping a vertex drops its edges, so an unchanged edge set is an
+    * unchanged vertex set. The symmetrized input is counted the same
+    * way, so a k-core of r rounds costs r + 1 executions before the
+    * caller's action.
     * @throws IllegalStateException when the peel has not reached a
     *         fixpoint within `maxRounds` (a silent early stop would
     *         report a non-core superset). */
@@ -781,31 +799,24 @@ object Graph extends QueryModule {
     val und = edges.select(col("a"), col("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    var cur = und
+    var (cur, n) = und
       .union(und.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .ckptLocal(eager = false)
-    var n = cur.select("a").distinct().count()
+      .ckptCounted()
     var rounds = 0
     var converged = n == 0L
     while (!converged && rounds < maxRounds) {
-      val survivors = cur.groupBy("a").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("a").as("id"))
-        .ckptLocal(eager = false)
-      val m = survivors.count()
-      if (m == n) converged = true
-      else {
-        // shrink the edge set to the induced subgraph; next round's
-        // degrees come from this smaller frame
-        cur = cur
-          .join(survivors.withColumnRenamed("id", "a"), Seq("a"),
-            "left_semi")
-          .join(survivors.withColumnRenamed("id", "b"), Seq("b"),
-            "left_semi")
-          .ckptLocal(eager = false)
-        n = m
-        converged = m == 0L
-      }
+      val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select(col("a").as("v"))
+      // the induced subgraph on `keep`; next round's degrees come from
+      // this smaller frame
+      val (next, m) = cur
+        .join(keep, col("a") === col("v"), "left_semi")
+        .join(keep, col("b") === col("v"), "left_semi")
+        .ckptCounted()
+      converged = m == n || m == 0L
+      cur = next
+      n = m
       rounds += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -887,7 +898,9 @@ object Graph extends QueryModule {
     * exactly `rounds` rounds. `edges` as (`a`, `b`, `w`) with positive
     * integral weights (symmetrized, self-loops dropped). Returns
     * (`vid`, `lbl`) — the label is a vertex id, initially each vertex's
-    * own; ties broken by (max Σw, min label). */
+    * own; ties broken by (max Σw, min label). One Spark execution per
+    * round, the eager checkpoint of its labels; the initial labels are
+    * planned into round 1 rather than checkpointed on their own. */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds=$rounds must be >= 1")
     val und = edges.select(col("a"), col("b"), col("w"))
@@ -899,7 +912,6 @@ object Graph extends QueryModule {
       .ckptLocal(eager = false) // read by every round
     var labels = sym.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
-      .ckptLocal(eager = true)
     for (_ <- 1 to rounds) {
       // One shuffle for the two-level aggregate: hash(a) satisfies the
       // (a, lbl) clustering, so after the explicit repartition both the
@@ -1457,14 +1469,14 @@ object Graph extends QueryModule {
     while (changed > 0 && rounds < maxRounds) {
       val relax = sym.join(dist.withColumnRenamed("id", "a"), "a")
         .select(col("b").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.withColumn("own", lit(true))
+      // a newly-reached vertex has prev NULL — null-safe inequality
+      val (next, moved) = dist.withColumn("own", lit(true))
         .unionByName(relax.withColumn("own", lit(false)))
         .groupBy("id").agg(
           min(col("dist")).as("dist"),
           min(when(col("own"), col("dist"))).as("prev"))
-        .ckptLocal(eager = false)
-      // a newly-reached vertex has prev NULL — null-safe inequality
-      changed = next.filter(!(col("dist") <=> col("prev"))).count()
+        .ckptCounted(!(col("dist") <=> col("prev")))
+      changed = moved
       dist = next.select(col("id"), col("dist"))
       rounds += 1
     }

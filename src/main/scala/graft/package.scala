@@ -17,5 +17,24 @@ package object graft {
       private val df: org.apache.spark.sql.DataFrame) extends AnyVal {
     def ckptLocal(eager: Boolean = true): org.apache.spark.sql.DataFrame =
       org.apache.spark.sql.GraftPlanStats.clampedLocalCheckpoint(df, eager)
+
+    /** Eager [[ckptLocal]] that also counts the checkpointed rows — all
+      * of them, or those matching `where` — in the SAME Spark execution:
+      * the count rides the checkpoint's job as a `Dataset.observe`
+      * metric, so an iterative loop's per-round "checkpoint, then test
+      * the fixpoint" costs one execution instead of two. The observation
+      * is read only after the checkpoint returned, so a frame whose
+      * evaluation raises throws that error here and never waits on it.
+      */
+    def ckptCounted(
+        where: org.apache.spark.sql.Column =
+          org.apache.spark.sql.functions.lit(true))
+        : (org.apache.spark.sql.DataFrame, Long) = {
+      import org.apache.spark.sql.functions.{count, lit, when}
+      val obs = org.apache.spark.sql.Observation()
+      val ck = org.apache.spark.sql.GraftPlanStats.clampedLocalCheckpoint(
+        df.observe(obs, count(when(where, lit(1))).as("n")), eager = true)
+      (ck, obs.get("n").asInstanceOf[Long])
+    }
   }
 }

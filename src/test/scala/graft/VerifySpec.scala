@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 class VerifySpec extends SparkTestBase {
 
   test("dump returns the names of the entries that failed") {
-    val empty = Files.createTempDirectory("graft-verify-in")
-    val out = Files.createTempDirectory("graft-verify-out")
+    val empty = tempDir("graft-verify-in")
+    val out = tempDir("graft-verify-out")
     // a directory with no tables: the entry's scan fails
     val failed = Verify.dump(spark, empty.toString, out.toString,
       only = Some(Set("q1_pricing_summary")))

@@ -147,8 +147,7 @@ class BlockingSpec extends SparkTestBase {
       qid -> ((n, b.map(_._1), b.map(_._2),
         b.exists(_._2 >= 500L)))
     }.toMap
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("snb-spec").toString
+    val idxDir = tempDir("snb-spec").toString
     Dedup.snbIndexBuild(toks.filter(col("doc_id") % 10 =!= 0), idxDir)
     val got = Dedup.snbIndexProbe(spark, idxDir,
         toks.filter(col("doc_id") % 10 === 0))
@@ -177,8 +176,7 @@ class BlockingSpec extends SparkTestBase {
     val corpus = toks.filter(col("doc_id") % 10 =!= 0)
     val batch = toks.filter(col("doc_id") % 10 === 0)
     def probeAt(b: Int): Map[Long, Seq[Any]] = {
-      val idxDir = java.nio.file.Files
-        .createTempDirectory(s"snb-width-$b").toString
+      val idxDir = tempDir(s"snb-width-$b").toString
       Dedup.snbIndexBuild(corpus, idxDir, keyBytes = b)
       Dedup.snbIndexProbe(spark, idxDir, batch)
         .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
@@ -193,8 +191,7 @@ class BlockingSpec extends SparkTestBase {
     // reconstructed as ins = rank of the nearest window mate minus its
     // offset is overkill; instead recompute carries sparsely here and
     // compare table-to-table.
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("snb-dense-twin").toString
+    val idxDir = tempDir("snb-dense-twin").toString
     Dedup.snbIndexBuild(corpus, idxDir, keyBytes = 2)
     val hist = spark.read.parquet(s"$idxDir/hist")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -18,8 +18,7 @@ class OutputSpec extends SparkTestBase {
 
   test("writePartitioned bounds files per partition and keeps layout") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-out").toFile.getAbsolutePath
+    val dir = tempDir("graft-out").toFile.getAbsolutePath
     val df = (1L to 1000L).map(i => (i, s"d${i % 4}", i * 1.5))
       .toDF("id", "day", "amt")
     Output.writePartitioned(df, dir, Seq("day"), Seq("id"),
@@ -42,8 +41,7 @@ class OutputSpec extends SparkTestBase {
 
   test("compact collapses a task-scattered layout into bounded files") {
     import spark.implicits._
-    val scattered = java.nio.file.Files
-      .createTempDirectory("graft-scatter").toFile.getAbsolutePath
+    val scattered = tempDir("graft-scatter").toFile.getAbsolutePath
     // worst case: high task parallelism × partition values = many shards
     (1L to 1000L).map(i => (i, s"d${i % 4}", i * 1.5))
       .toDF("id", "day", "amt")
@@ -52,8 +50,7 @@ class OutputSpec extends SparkTestBase {
     val before = parquetFiles(scattered)
     assert(before.values.sum > 50, before.toString) // scatter confirmed
 
-    val compacted = java.nio.file.Files
-      .createTempDirectory("graft-compact").toFile.getAbsolutePath
+    val compacted = tempDir("graft-compact").toFile.getAbsolutePath
     Output.compact(spark.read.parquet(scattered), compacted,
       Seq("day"), Seq("id"), maxRowsPerFile = 500)
     val after = parquetFiles(compacted)

@@ -2,11 +2,7 @@ package graft.sizing
 
 import graft.SparkTestBase
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.GraftListenerAccess
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end EP1 golden test (SURVEY §5.3): CSV fixture → sinks + report,
   * every number hand-computed from the reference formulas.
@@ -32,7 +28,7 @@ class PipelineSpec extends SparkTestBase {
     * in a fresh directory; returns the report and the directory.
     */
   private def runCsv(text: String): (SizingReport, java.io.File) = {
-    val dir = Files.createTempDirectory("graft-pipeline").toFile
+    val dir = tempDir("graft-pipeline").toFile
     val in = new java.io.File(dir, "querylog.csv")
     Files.writeString(in.toPath, text)
     val cfg = SizingConfig(inputFile = Some(in.getAbsolutePath))
@@ -114,7 +110,7 @@ class PipelineSpec extends SparkTestBase {
   test("a row with missing end_time cannot corrupt the sweep-line") {
     // q2's end event would otherwise sort at the null instant (before
     // every start) and push the running sums negative
-    val dir = Files.createTempDirectory("graft-nullend").toFile
+    val dir = tempDir("graft-nullend").toFile
     val in = new java.io.File(dir, "querylog.csv")
     Files.writeString(in.toPath,
       """query_id,pool,start_time,end_time,duration_millis,reqd_cache_gb,reqd_agg_mem,memory_spilled_gb,cpu_time_sec,query_type,admission_wait,num_backends
@@ -209,21 +205,7 @@ class PipelineSpec extends SparkTestBase {
   test("a report over the fixture runs seven Spark actions") {
     // the CSV header read (two), ONE aggregate pass over the routed log,
     // the three sink writes and the sweep's maxima
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val counter = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        n.incrementAndGet()
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        n.incrementAndGet()
-    }
-    GraftListenerAccess.drain(sc)
-    spark.listenerManager.register(counter)
-    try {
-      runCsv(csv)
-      GraftListenerAccess.drain(sc)
-    } finally spark.listenerManager.unregister(counter)
-    assert(n.get == 7)
+    assert(sqlExecutions(runCsv(csv)) == 7)
   }
 
   /** The report of a run whose routed log has no kept row: NULL

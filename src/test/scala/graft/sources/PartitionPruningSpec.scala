@@ -12,8 +12,7 @@ class PartitionPruningSpec extends SparkTestBase {
 
   test("partition-column predicate prunes files at the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-part").toFile.getAbsolutePath
+    val dir = tempDir("graft-part").toFile.getAbsolutePath
     (1L to 1000L).map(i => (i, s"d${i % 10}", i * 1.5))
       .toDF("id", "day", "amt")
       .write.mode("overwrite").partitionBy("day").parquet(dir)

@@ -169,8 +169,7 @@ class RestQuerylogSourceSpec extends SparkTestBase {
         doc(2, "2021-07-12T00:00:01.000Z"),
         doc(4, "2021-07-12T00:00:02.000Z"),
         doc(5, "2021-07-12T00:00:03.000Z", mem = false)))) // skipped
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-ep2").toFile.getAbsolutePath
+    val outDir = tempDir("graft-ep2").toFile.getAbsolutePath
     val report = graft.sizing.Pipeline.runRest(spark,
       graft.sizing.SizingConfig(),
       Map("url" -> "http://cm.example/api/impalaQueries",
@@ -193,7 +192,7 @@ class RestQuerylogSourceSpec extends SparkTestBase {
     PageFetcher.register("hygiene", _ =>
       page(Seq(doc(1, "2021-07-12T00:00:01.000Z"),
         doc(2, "2021-07-12T00:00:02.000Z", mem = false))))
-    val dir = java.nio.file.Files.createTempDirectory("graft-hygiene")
+    val dir = tempDir("graft-hygiene")
     val csv = dir.resolve("querylog.csv")
     java.nio.file.Files.writeString(csv,
       """query_id,pool,start_time,end_time,duration_millis,reqd_cache_gb,reqd_agg_mem,memory_spilled_gb,cpu_time_sec,query_type,admission_wait,num_backends
