@@ -10,10 +10,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * [--runs n] [--plan]`
   *
   * Each entry is warmed once on sf0.001 (JIT, codegen and parquet
-  * footers are paid before any timed run), then run `n` times (default
-  * 3) on every scale directory through [[Bench.exec]], the bench's
-  * noop-sink execution, with `clearCache()` after each run. Output is one
-  * line per entry:
+  * footers are paid before any timed run), every entry once more on
+  * the first directory before any is timed, then each is run `n`
+  * times (default 3) on every scale directory through [[Bench.exec]],
+  * the bench's noop-sink execution, with `clearCache()` after each run.
+  * Output is one line per entry:
   *
   * {{{PROFILE <entry> <sf>=<min s> … x=<last/first> jobs=<n>}}}
   *
@@ -78,6 +79,11 @@ object DevProfile {
       t
     }
 
+    // one untimed pass of every entry at the first target scale: after
+    // the sf0.001 warm-up alone, or one extra run of the first entry only,
+    // a fresh JVM still timed its first entry 1.3-1.7x a later repeat
+    // (PERF.md, "One graph vocabulary")
+    names.foreach(timed(_, dirs.head))
     names.foreach { name =>
       timed(name, Bench.WarmDir)
       if (plan) {

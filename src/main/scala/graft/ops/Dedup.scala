@@ -282,18 +282,6 @@ object Dedup extends QueryModule {
       .withColumn("ham", expr("bit_count(s1 ^ s2)"))
   }
 
-  /** Near-dup cluster resolution: LSH pairs at/above `minJac` form an
-    * undirected graph; returns (id, comp) — the duplicate GROUPS a dedup
-    * pipeline actually needs ("keep the minimum id per group") via
-    * distributed connected components ([[Graph.connectedComponents]]).
-    */
-  def nearDupClusters(docs: DataFrame, minJac: Double = NearDupJac,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    Graph.connectedComponents(
-      minHashLshPairs(docs, idCol, textCol)
-        .filter(col("jac") >= minJac)
-        .select(col("d1").as("a"), col("d2").as("b")))
-
   /** EXACT threshold Jaccard self-join via prefix filtering (AllPairs /
     * PPJoin family — Bayardo et al., WWW 2007; Chaudhuri et al., ICDE
     * 2006): every pair with distinct-token Jaccard ≥ `tMilli`/1000, with
@@ -2763,10 +2751,30 @@ object Dedup extends QueryModule {
   private def q194(s: SparkSession, dir: String): DataFrame = {
     val edges = lshVerifiedPairs(s, dir)
       .filter(col("jac") >= NearDupJac)
-      .select(col("d1"), col("d2"))
+      .select(col("d1").as("a"), col("d2").as("b"))
       .ckptLocal(eager = false)
-    val comp = Graph.connectedComponents(
-      edges.select(col("d1").as("a"), col("d2").as("b")))
+    val (assigned, leaked) = clusterSplit(s, dir, edges)
+    assigned
+      .groupBy("split")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("n_chars_total"),
+        countDistinct(col("cluster")).as("n_clusters"))
+      .crossJoin(leaked)
+  }
+
+  /** The leakage-free split q194 and q214 share, over near-dup `edges`
+    * (`a`, `b`): every document's cluster is its connected component
+    * (itself when it is in none), and hash60(cluster) mod 10 assigns
+    * the whole cluster to train (0–7), val (8) or test (9), so no
+    * near-duplicate pair can straddle two splits. Returns the documents
+    * with `cluster` and `split` (a lazy checkpoint: both callers read it
+    * twice) and the one-row broadcast audit `n_leaked`, the count of
+    * edges whose endpoints landed in different splits — 0 by
+    * construction, computed from the data. */
+  private def clusterSplit(s: SparkSession, dir: String,
+      edges: DataFrame): (DataFrame, DataFrame) = {
+    val comp = Graph.connectedComponents(edges)
     val assigned = Tables.load(s, dir, "documents")
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("comp"), col("doc_id")))
@@ -2778,19 +2786,13 @@ object Dedup extends QueryModule {
       .ckptLocal(eager = false)
     val splitOf = assigned.select(col("doc_id"), col("split"))
     val leaked = broadcast(edges
-      .join(splitOf.select(col("doc_id").as("d1"), col("split").as("sa")),
-        Seq("d1"))
-      .join(splitOf.select(col("doc_id").as("d2"), col("split").as("sb")),
-        Seq("d2"))
+      .join(splitOf.select(col("doc_id").as("a"), col("split").as("sa")),
+        Seq("a"))
+      .join(splitOf.select(col("doc_id").as("b"), col("split").as("sb")),
+        Seq("b"))
       .agg(coalesce(sum(when(col("sa") =!= col("sb"), 1L).otherwise(0L)),
         lit(0L)).as("n_leaked")))
-    assigned
-      .groupBy("split")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("n_chars_total"),
-        countDistinct(col("cluster")).as("n_clusters"))
-      .crossJoin(leaked)
+    (assigned, leaked)
   }
 
   private val q194Sql =
@@ -2860,24 +2862,7 @@ object Dedup extends QueryModule {
       .unionByName(q208(s, dir).select(col("a"), col("b")))
       .distinct()
       .ckptLocal(eager = false) // CC + leak audit
-    val comp = Graph.connectedComponents(edges)
-    val assigned = Tables.load(s, dir, "documents")
-      .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("comp"), col("doc_id")))
-      .withColumn("hm",
-        expr(s"${Dialect.sparkHash60("CAST(cluster AS STRING)")} % 10"))
-      .withColumn("split", expr(
-        "CASE WHEN hm < 8 THEN 'train' WHEN hm = 8 THEN 'val' " +
-          "ELSE 'test' END"))
-      .ckptLocal(eager = false)
-    val splitOf = assigned.select(col("doc_id"), col("split"))
-    val leaked = broadcast(edges
-      .join(splitOf.select(col("doc_id").as("a"), col("split").as("sa")),
-        Seq("a"))
-      .join(splitOf.select(col("doc_id").as("b"), col("split").as("sb")),
-        Seq("b"))
-      .agg(coalesce(sum(when(col("sa") =!= col("sb"), 1L).otherwise(0L)),
-        lit(0L)).as("n_leaked")))
+    val (assigned, leaked) = clusterSplit(s, dir, edges)
     val surv = assigned.groupBy("cluster").agg(min(col("doc_id")).as("sdoc"))
     assigned.join(surv, "cluster")
       .groupBy("split")

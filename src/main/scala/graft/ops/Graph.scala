@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.CkptLocalOps
 import graft.{QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list — the cluster-
@@ -33,6 +33,15 @@ import org.apache.spark.sql.functions._
   * round with `ckptCounted`, which counts the rows their fixpoint test
   * needs in the checkpoint's own execution: one Spark execution per
   * round, not a checkpoint plus a `count()`.
+  *
+  * Two decisions are made once for the whole module. `undirected` is
+  * the edge contract every undirected operator reads its input through
+  * (null endpoints and self-loops dropped, both directions present,
+  * parallel edges collapsed). `fixpoint` is the one fail-loud loop the
+  * converging operators (this one's hook rounds and path compression,
+  * [[Graph.kCore]], [[Graph.shortestPaths]]) run: it stops on the first
+  * step that changes nothing and throws `IllegalStateException` when
+  * its cap is reached first.
   *
   * Determinism: labels are ids, min is associative/commutative, and the
   * fixpoint (min id reachable) is unique — results are independent of
@@ -91,17 +100,11 @@ object Graph extends QueryModule {
     // 3.2→3.8 s measured). The per-round exchange is AQE-coalesced to
     // near-zero cost at this scale; at cluster scale the right fix is
     // bucketed/pre-partitioned EDGE STORAGE, not a plan-level pin.
-    val und = pairs.filter(col("a") =!= col("b"))
-    val sym = und
-      .union(und.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist()
+    val sym = undirected(pairs).persist()
 
-    var labels = verts.select(col("id"), col("id").as("comp"))
+    val start = verts.select(col("id"), col("id").as("comp"))
       .ckptLocal(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    val labels = fixpoint("connectedComponents", maxIter, start) { labels =>
       // root-hook: each edge (a,b) addresses a's ROOT (comp(a)),
       // proposing b's root (comp(b)) — whole trees merge per round, not
       // boundary layers (`sym` carries both directions). The proposal
@@ -122,8 +125,6 @@ object Graph extends QueryModule {
           min(col("comp")).as("comp"),
           min(when(col("own"), col("comp"))).as("prev"))
         .ckptCounted(col("comp") =!= col("prev"))
-      changed = moved
-      labels = hooked.select(col("id"), col("comp"))
       // full path compression: comp ← comp(comp) until idempotent.
       // Labels are always vertex ids with comp(x) ≤ x, so the self-join
       // matches every row and labels stay monotone non-increasing; when
@@ -133,28 +134,62 @@ object Graph extends QueryModule {
       // chain's depth, so 64 steps cover chains of 2⁶⁴), but a
       // corrupted frame (a label cycle from a buggy caller edge type)
       // must fail loud like every other iterative loop here, not spin.
-      var compressing = changed > 0
-      var cstep = 0
-      while (compressing) {
-        if (cstep >= 64) throw new IllegalStateException(
-          "connectedComponents: path compression did not reach a " +
-            "fixpoint in 64 doubling steps — label frame is corrupt " +
-            "(cycle?); doubling covers chains of depth 2^64")
-        val (stepped, jumped) = labels
-          .join(labels.select(col("id").as("comp"), col("comp").as("jump")),
-            "comp")
-          .ckptCounted(col("jump") =!= col("comp"))
-        compressing = jumped > 0
-        labels = stepped.select(col("id"), col("jump").as("comp"))
-        cstep += 1
+      // A hook round that moved nothing leaves nothing to compress.
+      val compressed = fixpoint("connectedComponents path compression",
+          64, hooked.select(col("id"), col("comp")), stable = moved == 0) {
+        labels =>
+          val (stepped, jumped) = labels
+            .join(labels.select(col("id").as("comp"),
+              col("comp").as("jump")), "comp")
+            .ckptCounted(col("jump") =!= col("comp"))
+          (stepped.select(col("id"), col("jump").as("comp")), jumped > 0)
       }
-      iter += 1
+      (compressed, moved > 0)
     }
     sym.unpersist()
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still changing) — raise maxIter")
     labels
+  }
+
+  /** The undirected-edge contract of every operator here that reads an
+    * undirected graph: null endpoints and self-loops dropped, the
+    * reverse of every edge added, parallel edges collapsed. Without
+    * `mergeW` the result is the distinct (`a`, `b`) pairs; with it,
+    * one (`a`, `b`, `w`) row per directed pair, `w` merged by the
+    * caller's aggregate (a sum for LPA, Louvain and modularity, the
+    * minimum for shortest paths). Callers checkpoint or persist it. */
+  private def undirected(edges: DataFrame,
+      mergeW: Option[Column => Column] = None): DataFrame = {
+    val w = mergeW.map(_ => col("w")).toSeq
+    val und = edges.select(Seq(col("a"), col("b")) ++ w: _*)
+      .filter(col("a").isNotNull && col("b").isNotNull &&
+        col("a") =!= col("b"))
+    val both = und.union(
+      und.select(Seq(col("b").as("a"), col("a").as("b")) ++ w: _*))
+    mergeW.fold(both.distinct())(
+      m => both.groupBy("a", "b").agg(m(col("w")).as("w")))
+  }
+
+  /** The fail-loud fixpoint loop of every converging operator here:
+    * applies `step` until it reports no change and returns the last
+    * state. `stable` says `start` is already the fixpoint, so no step
+    * runs. A step that still reports a change when `cap` steps have run
+    * throws: a silent early stop would return a state that is not the
+    * fixpoint (one component reported as several, a non-core superset,
+    * inflated distances). */
+  private def fixpoint[S](op: String, cap: Int, start: S,
+      stable: Boolean = false)(step: S => (S, Boolean)): S = {
+    var state = start
+    var changed = !stable
+    var steps = 0
+    while (changed) {
+      if (steps == cap) throw new IllegalStateException(
+        s"$op did not reach a fixpoint in $cap steps")
+      val (next, moved) = step(state)
+      state = next
+      changed = moved
+      steps += 1
+    }
+    state
   }
 
   // --- weighted PageRank, fixed iterations, integer-scaled -----------------
@@ -513,22 +548,26 @@ object Graph extends QueryModule {
         col("b") === col("b2"))
       .select(col("a"), col("b"), col("c"))
 
-  private def q134(s: SparkSession, dir: String): DataFrame = {
-    // Sparsify to major routes first (relative threshold, like q128 —
-    // scale-factor stable): the FULL trade graph is complete at sf≥0.01,
-    // which makes every clustering coefficient 1.0; the w·3 ≥ max(w)
-    // subgraph keeps ~2/3 of the edges and a non-trivial topology.
+  /** The major-route nation graph q134 and q164 score, as canonical
+    * undirected simple edges (`u` < `v`): [[tradeEdges]] without
+    * self-loops, kept where w·3 ≥ max(w). The threshold is relative
+    * (like q128's), so it is scale-factor stable: the FULL trade graph
+    * is complete at sf≥0.01, which makes every clustering coefficient
+    * 1.0; this subgraph keeps ~2/3 of the edges and a non-trivial
+    * topology. */
+  private def majorRoutes(s: SparkSession, dir: String): DataFrame = {
     val edges = tradeEdges(s, dir).persist()
     val maxW = edges.agg(max(col("w"))).head().getLong(0)
-    // canonical undirected simple edges: drop self-loops, fold direction
-    val und = edges
+    edges
       .filter(col("src") =!= col("dst") && col("w") * 3 >= maxW)
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
       .persist()
-    triangleStats(und).withColumnRenamed("id", "nation")
   }
+
+  private def q134(s: SparkSession, dir: String): DataFrame =
+    triangleStats(majorRoutes(s, dir)).withColumnRenamed("id", "nation")
 
   private val q134Sql =
     """WITH e AS (
@@ -609,17 +648,8 @@ object Graph extends QueryModule {
         col("ra_micro"))
   }
 
-  private def q164(s: SparkSession, dir: String): DataFrame = {
-    val edges = tradeEdges(s, dir).persist()
-    val maxW = edges.agg(max(col("w"))).head().getLong(0)
-    val und = edges
-      .filter(col("src") =!= col("dst") && col("w") * 3 >= maxW)
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .persist()
-    linkPredictionScores(und)
-  }
+  private def q164(s: SparkSession, dir: String): DataFrame =
+    linkPredictionScores(majorRoutes(s, dir))
 
   private val q164Sql =
     """WITH e AS (
@@ -796,16 +826,9 @@ object Graph extends QueryModule {
     *         report a non-core superset). */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1 && maxRounds >= 1, s"kCore: k=$k maxRounds=$maxRounds")
-    val und = edges.select(col("a"), col("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    var (cur, n) = und
-      .union(und.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .ckptCounted()
-    var rounds = 0
-    var converged = n == 0L
-    while (!converged && rounds < maxRounds) {
+    val (sym, n0) = undirected(edges).ckptCounted()
+    val (cur, _) = fixpoint("kCore", maxRounds, (sym, n0),
+        stable = n0 == 0L) { case (cur, n) =>
       val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a").as("v"))
       // the induced subgraph on `keep`; next round's degrees come from
@@ -814,14 +837,8 @@ object Graph extends QueryModule {
         .join(keep, col("a") === col("v"), "left_semi")
         .join(keep, col("b") === col("v"), "left_semi")
         .ckptCounted()
-      converged = m == n || m == 0L
-      cur = next
-      n = m
-      rounds += 1
+      ((next, m), m != n && m != 0L)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kCore did not reach a fixpoint in $maxRounds rounds — raise " +
-        "maxRounds")
     cur.groupBy("a").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k) // vacuous at fixpoint; keeps the contract
       .select(col("a").as("vid"), col("deg"))
@@ -831,18 +848,28 @@ object Graph extends QueryModule {
   private[ops] val KcRounds = 32
   private[ops] val KcMinLinks = 2
 
-  private def q210(s: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+  /** The bipartite customer–supplier trade graph: one edge (`a` =
+    * −custkey, `b` = suppkey, `w` = linking lineitems) per pair linked
+    * by at least [[KcMinLinks]] lineitems. Customers carry negated keys
+    * so the two key spaces cannot collide. The one Spark build of this
+    * graph, read by q210, q211, q213, q216, q218, q223 and q225 —
+    * distinct from [[tradeEdges]]'s nation-level projection. */
+  private[ops] def custSuppEdges(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
       .join(Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("nl"))
       .filter(col("nl") >= KcMinLinks)
-    kCore(cs.select((-col("o_custkey")).cast("bigint").as("a"),
-      col("l_suppkey").cast("bigint").as("b")), k = KcK,
-      maxRounds = KcRounds)
-      .withColumn("kind",
-        when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
-  }
+      .select((-col("o_custkey")).cast("bigint").as("a"),
+        col("l_suppkey").cast("bigint").as("b"), col("nl").as("w"))
+
+  /** Labels each `vid` of [[custSuppEdges]]' graph with its side. */
+  private def withKind(vertices: DataFrame): DataFrame =
+    vertices.withColumn("kind",
+      when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
+
+  private def q210(s: SparkSession, dir: String): DataFrame =
+    withKind(kCore(custSuppEdges(s, dir), k = KcK, maxRounds = KcRounds))
 
   private val q210Sql: String = {
     val head =
@@ -903,12 +930,7 @@ object Graph extends QueryModule {
     * planned into round 1 rather than checkpointed on their own. */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds=$rounds must be >= 1")
-    val und = edges.select(col("a"), col("b"), col("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val sym = und
-      .union(und.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("a", "b").agg(sum(col("w")).as("w"))
+    val sym = undirected(edges, Some(sum(_: Column)))
       .ckptLocal(eager = false) // read by every round
     var labels = sym.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
@@ -930,22 +952,8 @@ object Graph extends QueryModule {
 
   private[ops] val LpaRounds = 4
 
-  /** The bipartite customer–supplier trade graph (customers in the
-    * negative id space), shared by q211 (LPA) and q223 (Louvain) —
-    * distinct from [[tradeEdges]]'s nation-level projection. */
-  private[ops] def custSuppEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("nl"))
-      .filter(col("nl") >= KcMinLinks)
-      .select((-col("o_custkey")).cast("bigint").as("a"),
-        col("l_suppkey").cast("bigint").as("b"), col("nl").as("w"))
-
   private def q211(s: SparkSession, dir: String): DataFrame =
-    labelPropagation(custSuppEdges(s, dir), rounds = LpaRounds)
-      .withColumn("kind",
-        when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
+    withKind(labelPropagation(custSuppEdges(s, dir), rounds = LpaRounds))
 
   /** Semi-synchronous one-level Louvain (greedy modularity moves — the
     * OPTIMIZATION half of community detection; [[modularityMicro]] is
@@ -990,15 +998,9 @@ object Graph extends QueryModule {
     * directed rows with INPUT self-loops dropped (the LPA contract —
     * coarse-graph self-loops are created internally and only by
     * [[louvainMultiLevel]]). */
-  private def louvainSym(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("a"), col("b"), col("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    und
-      .union(und.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("a", "b").agg(sum(col("w")).cast("bigint").as("w"))
+  private def louvainSym(edges: DataFrame): DataFrame =
+    undirected(edges, Some(w => sum(w).cast("bigint")))
       .ckptLocal(eager = false) // read by every half-step
-  }
 
   /** The greedy parity-half-step mover shared by every Louvain level.
     * `sym` is a symmetrized directed edge frame that MAY carry
@@ -1159,9 +1161,7 @@ object Graph extends QueryModule {
   private val LouvainRounds = 2
 
   private def q223(s: SparkSession, dir: String): DataFrame =
-    louvainOneLevel(custSuppEdges(s, dir), rounds = LouvainRounds)
-      .withColumn("kind",
-        when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
+    withKind(louvainOneLevel(custSuppEdges(s, dir), rounds = LouvainRounds))
 
   /** One oracle half-step: parity movers greedily adopt the
     * gain-argmax label; frozen-parity labels carry over. Parameterized
@@ -1230,10 +1230,8 @@ object Graph extends QueryModule {
   // invariant: the coarse singleton partition scores the same Q as the
   // expanded level-1 labels, so coarse gains are original-graph gains).
   private def q225(s: SparkSession, dir: String): DataFrame =
-    louvainMultiLevel(custSuppEdges(s, dir), rounds = LouvainRounds,
-        levels = 2)
-      .withColumn("kind",
-        when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
+    withKind(louvainMultiLevel(custSuppEdges(s, dir),
+      rounds = LouvainRounds, levels = 2))
 
   private val q225Sql: String = {
     val lvl1End = s"g${2 * LouvainRounds}"
@@ -1289,12 +1287,7 @@ object Graph extends QueryModule {
     * (`vid`, `lbl`). One summary row: (n_communities, n_vertices,
     * two_m, intra_w, q_micro). */
   def modularityMicro(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = edges.select(col("a"), col("b"), col("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val sym = und
-      .union(und.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("a", "b").agg(sum(col("w")).as("w"))
+    val sym = undirected(edges, Some(sum(_: Column)))
       .ckptLocal(eager = false) // total + degree + intra legs
     val tot = sym.groupBy()
       .agg(sum(col("w")).cast("bigint").as("m2")) // 1 row
@@ -1345,15 +1338,7 @@ object Graph extends QueryModule {
   //     component swallowed the corpus: the dedup-quality early-warning
   //     number.
   private def q218(s: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("nl"))
-      .filter(col("nl") >= KcMinLinks)
-    val biEdges = cs.select(
-      (-col("o_custkey")).cast("bigint").as("a"),
-      col("l_suppkey").cast("bigint").as("b"),
-      col("nl").as("w"))
+    val biEdges = custSuppEdges(s, dir)
     val bi = modularityMicro(biEdges,
         labelPropagation(biEdges, rounds = LpaRounds))
       .withColumn("labeling", lit("lpa_bipartite"))
@@ -1452,21 +1437,15 @@ object Graph extends QueryModule {
     val guardedW = expr("CASE WHEN w > 0 THEN CAST(w AS BIGINT) ELSE " +
       "CAST(raise_error('shortestPaths: weights must be positive') " +
       "AS BIGINT) END")
-    val und = edges.select(col("a"), col("b"), guardedW.as("w"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val sym = und
-      .union(und.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .groupBy("a", "b").agg(min(col("w")).as("w"))
+    val sym = undirected(edges.select(col("a"), col("b"), guardedW.as("w")),
+        Some(min(_: Column)))
       .ckptLocal(eager = false) // read by every relaxation round
     val verts = sym.select(col("a").as("id")).distinct()
       .ckptLocal(eager = false)
-    var dist = verts.filter(col("id") === lit(source))
+    val start = verts.filter(col("id") === lit(source))
       .withColumn("dist", lit(0L))
       .ckptLocal(eager = true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
+    val dist = fixpoint("shortestPaths", maxRounds, start) { dist =>
       val relax = sym.join(dist.withColumnRenamed("id", "a"), "a")
         .select(col("b").as("id"), (col("dist") + col("w")).as("dist"))
       // a newly-reached vertex has prev NULL — null-safe inequality
@@ -1476,13 +1455,8 @@ object Graph extends QueryModule {
           min(col("dist")).as("dist"),
           min(when(col("own"), col("dist"))).as("prev"))
         .ckptCounted(!(col("dist") <=> col("prev")))
-      changed = moved
-      dist = next.select(col("id"), col("dist"))
-      rounds += 1
+      (next.select(col("id"), col("dist")), moved > 0)
     }
-    if (changed > 0) throw new IllegalStateException(
-      s"shortestPaths did not reach a fixpoint in $maxRounds rounds — " +
-        "raise maxRounds")
     verts.join(dist, Seq("id"), "left")
       .select(col("id").as("vid"), col("dist"))
   }
@@ -1490,20 +1464,10 @@ object Graph extends QueryModule {
   private[ops] val SpRounds = 24
   private[ops] val SpSource = 1L // supplier 1 (suppliers carry +keys)
 
-  private def q213(s: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("nl"))
-      .filter(col("nl") >= KcMinLinks)
-    shortestPaths(cs.select(
-        (-col("o_custkey")).cast("bigint").as("a"),
-        col("l_suppkey").cast("bigint").as("b"),
-        expr("1000000L div nl").as("w")), // strong links = short hops
-      source = SpSource, maxRounds = SpRounds)
-      .withColumn("kind",
-        when(col("vid") < 0, lit("customer")).otherwise(lit("supplier")))
-  }
+  private def q213(s: SparkSession, dir: String): DataFrame =
+    withKind(shortestPaths(custSuppEdges(s, dir).select(col("a"), col("b"),
+        expr("1000000L div w").as("w")), // strong links = short hops
+      source = SpSource, maxRounds = SpRounds))
 
   private val q213Sql: String = {
     val head =
@@ -1612,14 +1576,9 @@ object Graph extends QueryModule {
   private val HitsTopK = 10
 
   private def q216(s: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(Tables.load(s, dir, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_custkey", "l_suppkey").agg(count(lit(1)).as("nl"))
-      .filter(col("nl") >= KcMinLinks)
+    // suppliers are hubs, customers (their keys un-negated) authorities
     val scores = hits(
-      cs.select(col("l_suppkey").cast("bigint").as("src"),
-        col("o_custkey").cast("bigint").as("dst")),
+      custSuppEdges(s, dir).select(col("b").as("src"), (-col("a")).as("dst")),
       rounds = HitsRounds, scale = HitsScale)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("role").orderBy(col("score").desc, col("id").asc)

@@ -96,21 +96,29 @@ object SizingConfig {
       require(n.gt(v, n.zero), s"$k=${get(k).getOrElse(v)} must be > 0")
       v
     }
+    // an absent key keeps the case class's own default
+    val d = SizingConfig()
     SizingConfig(
-      scratchGbPerNode = positive("scratch_gb_per_node", 1000.0, _.toDouble),
-      cacheGbPerNode = positive("cache_gb_per_node", 1000.0, _.toDouble),
-      queryMemPerNode = positive("query_mem_per_node", 200.0, _.toDouble),
-      vcoresPerNode = positive("vcores_per_node", 16, _.toInt),
-      memAdjustmentPct = num("mem_adjustment_pct", 100.0, _.toDouble),
-      cpuAdjustmentPct = num("cpu_adjustment_pct", 80.0, _.toDouble),
-      cacheAdjustmentPct = num("cache_adjustment_pct", 100.0, _.toDouble),
-      mtDop = positive("mt_dop", 12, _.toInt),
-      podLimit = positive("pod_limit", 100, _.toInt),
+      scratchGbPerNode =
+        positive("scratch_gb_per_node", d.scratchGbPerNode, _.toDouble),
+      cacheGbPerNode =
+        positive("cache_gb_per_node", d.cacheGbPerNode, _.toDouble),
+      queryMemPerNode =
+        positive("query_mem_per_node", d.queryMemPerNode, _.toDouble),
+      vcoresPerNode = positive("vcores_per_node", d.vcoresPerNode, _.toInt),
+      memAdjustmentPct =
+        num("mem_adjustment_pct", d.memAdjustmentPct, _.toDouble),
+      cpuAdjustmentPct =
+        num("cpu_adjustment_pct", d.cpuAdjustmentPct, _.toDouble),
+      cacheAdjustmentPct =
+        num("cache_adjustment_pct", d.cacheAdjustmentPct, _.toDouble),
+      mtDop = positive("mt_dop", d.mtDop, _.toInt),
+      podLimit = positive("pod_limit", d.podLimit, _.toInt),
       pool = get("pool").filter(_.nonEmpty),
       inputFile = get("input_file").filter(_.nonEmpty),
-      outputFile = get("output_file").getOrElse("sizing_output.csv"),
-      pruneOutputFile = get("prune_output_file").getOrElse("sizing_pruned.csv"),
-      skipQueryFile = get("skip_query_file").getOrElse("skipped_queries.txt")
+      outputFile = get("output_file").getOrElse(d.outputFile),
+      pruneOutputFile = get("prune_output_file").getOrElse(d.pruneOutputFile),
+      skipQueryFile = get("skip_query_file").getOrElse(d.skipQueryFile)
     )
   }
 }

@@ -72,7 +72,6 @@ class Round13PropertiesSpec extends SparkTestBase {
   }
 
   test("merkleBucketDiff finds exactly the mutated leaves (sound+complete)") {
-    import spark.implicits._
     val gen = Gen.listOfN(5, Gen.chooseNum(0L, 1023L))
     samples(gen, 5).foreach { mutKeys =>
       val v1 = spark.range(0, 1024).selectExpr("id AS k",
@@ -90,7 +89,6 @@ class Round13PropertiesSpec extends SparkTestBase {
   }
 
   test("merkleBucketDiff flags content MOVED between sibling leaves") {
-    import spark.implicits._
     // payloads of keys 5 and 70 (leaves 0 and 1, same parent at
     // fanout 4) swap content; a raw row-XOR parent would cancel and
     // prune the real divergence — the node-triple parent must not

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Round-17 profiling/alignment entries: q245 (column profiler), q246
   * (functional-dependency profile), q247 (mutual-NN alignment gate).

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Pins [[Similarity.clusterNmi]] (q235) — normalized mutual information
   * of the q207 Lloyd clustering against the label column — on two

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Connected components: fixpoint correctness against brute-force
   * union-find on small graphs, plus edge-case handling.

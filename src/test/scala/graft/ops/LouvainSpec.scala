@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Pins [[Graph.louvainOneLevel]] (q223) — the optimization half of
   * community detection — on the hand-simulated bridged-triangles

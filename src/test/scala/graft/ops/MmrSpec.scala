@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Pins [[Similarity.mmrDiversify]] (q222) on a hand-computed greedy
   * trajectory.

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Pins [[Graph.modularityMicro]] (q218) on hand-computable fixtures. */
 class ModularitySpec extends SparkTestBase {

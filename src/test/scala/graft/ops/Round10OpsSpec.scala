@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Round-10 operators: brute-force references for PageRank, PPS
   * sampling, winsorization, interval union, char entropy and BM25, plus

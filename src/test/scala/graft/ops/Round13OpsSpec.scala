@@ -124,7 +124,6 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("merkleBucketDiff localizes a single mutated row to its leaf") {
-    import spark.implicits._
     val v1 = spark.range(0, 4096).select(col("id").as("k"),
       (col("id") * 3).as("payload"))
     // one mutation at k=1000 (leaf 3 under leafSize 256), one drop at
@@ -142,7 +141,6 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("merkleBucketDiff: identical tables produce an empty diff") {
-    import spark.implicits._
     val v = spark.range(0, 1000).select(col("id").as("k"),
       (col("id") % 7).as("payload"))
     assert(Temporal.merkleBucketDiff(v, v, "k",

@@ -55,7 +55,6 @@ class Round13PlanSpec extends SparkTestBase {
   }
 
   test("merkleBucketDiff: dirty-parent probe is a broadcast semi join") {
-    import spark.implicits._
     val v = spark.range(0, 512).selectExpr("id AS k", "id * 2 AS payload")
     val p = plan(Temporal.merkleBucketDiff(v, v, "k",
       "concat_ws('|', CAST(k AS STRING), CAST(payload AS STRING))"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.DataFrame
 
 /** Round-14 plan pins — the two round-11 `weak` flags were plans whose
   * in-code scale claims were false (q133 claimed WindowGroupLimit but

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions._
 
 /** Pins [[Similarity.semDeDup]] (q236) — within-cluster cosine pruning
   * after adaptive-k Lloyd clustering — on the adaptive-k shift search,

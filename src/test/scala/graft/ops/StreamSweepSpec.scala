@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{ParityGate, SparkEntry, SparkTestBase}
-import org.apache.spark.sql.functions._
 
 /** q73: the streamed sweep-line maxima must equal the batch q20 operator
   * on the same derived querylog (sf0.001) — the parity bit IS the check

@@ -16,6 +16,10 @@ class SizingConfigSpec extends AnyFunSuite {
     assert(c.pool.isEmpty)
   }
 
+  test("an empty config reads as the case class's defaults") {
+    assert(SizingConfig.fromProperties("") == SizingConfig())
+  }
+
   test("mt scaling factor: mt_dop=12 => 5.4 (py:112)") {
     assert(SizingConfig(mtDop = 12).mtScalingFactor == 5.4)
     assert(SizingConfig(mtDop = 1).mtScalingFactor == 1.0)
