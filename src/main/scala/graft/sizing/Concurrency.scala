@@ -1,12 +1,11 @@
 package graft.sizing
 
 import graft.plans.PrefixSum
-import java.math.MathContext
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** The sweep-line concurrency operator (SURVEY §2.6) — the reference's one
   * genuinely novel operator: max-concurrent-resource analysis over query
@@ -29,8 +28,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * One sweep algebra for batch and stream: a bucket of events summarizes
   * to its net deltas t and its running-sum maxima at starts m, and
   * summaries fold in bucket order as (t₁, m₁) ⊕ (t₂, m₂) = (t₁ + t₂,
-  * max(m₁, t₁ + m₂)) — [[fold]]. [[maxima]] builds the summaries in SQL,
-  * [[graft.streaming.StreamingConcurrency]] per closed bucket in state.
+  * max(m₁, t₁ + m₂)) — [[fold]]. One long kernel, [[BucketScan]], builds
+  * every summary: [[maxima]]'s per value bucket after one exchange, and
+  * [[graft.streaming.StreamingConcurrency]]'s per closed bucket in state.
   */
 object Concurrency {
 
@@ -106,7 +106,8 @@ object Concurrency {
   /** The one carry fold, in bucket order (any arrival order): (t₁, m₁) ⊕
     * (t₂, m₂) = (t₁ + t₂, max(m₁, t₁ + m₂)) per resource; the pods instant
     * moves to the later run when its peak ties or beats (py:384 `>=`;
-    * `pods` is the pods resource's position). Exact on long or decimal.
+    * `pods` is the pods resource's position). Exact on BigInt or decimal;
+    * long summaries fold through [[foldExact]].
     */
   def fold[N](summaries: Seq[Summary[N]], pods: Int)(
       implicit num: Numeric[N]): Option[Summary[N]] = {
@@ -122,16 +123,80 @@ object Concurrency {
     }
   }
 
+  /** [[fold]] over long summaries (the [[BucketScan]]s' of `names`) in
+    * exact arithmetic: a folded value outside the long range throws an
+    * `ArithmeticException` naming its resource, never wraps.
+    */
+  def foldExact(summaries: Seq[Summary[Long]], names: Seq[String],
+      pods: Int): Option[Summary[Long]] = {
+    def big(v: Seq[Long]) = v.map(BigInt(_))
+    def long(v: Seq[BigInt]) = v.zip(names).map {
+      case (x, n) => if (x.isValidLong) x.toLong else throw overflow(n) }
+    fold(summaries.map(s => s.copy(net = big(s.net), peak = s.peak.map(big))),
+      pods).map(s => s.copy(net = long(s.net), peak = s.peak.map(long)))
+  }
+
+  /** The one bucket scan, shared by [[maxima]] and the stream's closed
+    * buckets ([[graft.streaming.StreamingConcurrency]]): a bucket's events
+    * fed in (ts, kind, query_id) order, one signed long delta per resource
+    * ([[add]]) and then the event's instant ([[event]]). Running sums are
+    * exact longs (`Math.addExact`); an overflow throws an
+    * `ArithmeticException` naming the resource. A running sum inside a
+    * bucket is the difference of two footprints, so it overflows only
+    * where a footprint itself leaves the long range.
+    */
+  final class BucketScan(names: Seq[String], pods: Int) {
+    private val run = new Array[Long](names.size)
+    private val peak = new Array[Long](names.size)
+    private var started = false
+    private var peakAtUs = 0L
+
+    /** Adds resource `i`'s delta to its running sum. */
+    def add(i: Int, delta: Long): Unit =
+      run(i) = try Math.addExact(run(i), delta) catch {
+        case _: ArithmeticException => throw overflow(names(i)) }
+
+    /** Ends an event at `tsUs`: a start takes the running maxima
+      * (py:381–396), and the pods instant moves to it when its pods sum
+      * ties or beats the peak so far (py:384 `>=`: the latest wins).
+      */
+    def event(tsUs: Long, start: Boolean): Unit = if (start) {
+      if (!started || run(pods) >= peak(pods)) peakAtUs = tsUs
+      var i = 0
+      while (i < run.length) {
+        if (!started || run(i) > peak(i)) peak(i) = run(i)
+        i += 1
+      }
+      started = true
+    }
+
+    /** The events added so far as `bucket`'s [[Summary]]. */
+    def summary(bucket: Long): Summary[Long] = Summary(bucket, run.toSeq,
+      Option.when(started)(peak.toSeq), peakAtUs)
+  }
+
+  private def overflow(name: String) = new ArithmeticException(
+    s"sweep: the running sum of resource '$name' overflows a long")
+
   /** Conditional maxima (py:381–396) over the [[events]] of `kept` (one
     * delta named `pods`): one row of `max_concurrent_queries`, a
     * `max_concurrent_<name>` per delta (BIGINT for integer deltas, the
-    * running sum's DECIMAL for decimal ones) and `max_pods_at_us`, all
-    * NULL without events. Events split into value buckets by an even
-    * split of `eventRange` ([[PrefixSum.valueBucket]]); a window partitioned
-    * by bucket and an aggregate on the same key (one exchange) give each
-    * bucket's [[Summary]], [[fold]]ed on the driver. A given `eventRange`
-    * (the events' [min, max] instant) saves an eager min/max action;
-    * instants are near-uniform over the analysis window, so its even split
+    * SQL sum's DECIMAL for decimal ones) and `max_pods_at_us`, all NULL
+    * without events.
+    *
+    * Every delta is projected once per row, before the ±delta explode, as
+    * an exact BIGINT: an integer as it is, a DECIMAL(p,s) as the unscaled
+    * long of the same value (the report's [[Pipeline.reportDeltas]]); a
+    * value whose unscaled long leaves the range fails the projection's
+    * ANSI cast. Events split into value buckets by an even split of
+    * `eventRange` ([[PrefixSum.valueBucket]]); no window runs: one
+    * exchange (`repartition` by bucket, which AQE may coalesce), a sort
+    * within partitions and one [[BucketScan]] per bucket give each
+    * bucket's [[Summary]], folded exactly on the driver ([[foldExact]]),
+    * decimals rescaled. A running sum that leaves the long range throws an
+    * `ArithmeticException` naming the resource. A given `eventRange` (the
+    * events' [min, max] instant) saves an eager min/max action; instants
+    * are near-uniform over the analysis window, so its even split
     * balances the buckets, and an off range costs balance, never
     * correctness.
     *
@@ -140,43 +205,71 @@ object Concurrency {
     */
   def maxima(kept: DataFrame, deltas: Seq[(String, Column)],
       eventRange: Option[(Double, Double)] = None): Row = {
-    val ev = events(kept, deltas)
+    val names = "count" +: deltas.map(_._1)
+    // each result column keeps the type of its SQL running sum
+    val types = LongType +: kept.select(deltas.map(d => sum(d._2)): _*)
+      .schema.map(_.dataType)
+    val scales = names.zip(types).map {
+      case (_, LongType) => 0
+      case (_, t: DecimalType) => t.scale
+      case (n, t) => throw new IllegalArgumentException(
+        s"sweep: resource '$n' sums as $t; deltas must be integer or decimal")
+    }
+    val unscaled = deltas.zip(scales.tail).map {
+      case ((n, d), 0) => d.cast(LongType).as(s"u_$n")
+      case ((n, d), s) =>
+        (d * lit(java.math.BigDecimal.TEN.pow(s))).cast(LongType).as(s"u_$n")
+    }
+    val ev = events(kept.select(Seq(col("query_id"), col("admitted_us"),
+      col("end_us")) ++ unscaled: _*), deltas.map { case (n, _) =>
+        n -> col(s"u_$n") })
     val range = eventRange.getOrElse {
       val mm = ev.agg(min("ts_us").cast("double"), max("ts_us").cast("double"))
         .head()
       if (mm.isNullAt(0)) (0.0, 0.0) else (mm.getDouble(0), mm.getDouble(1))
     }
-    val names = "count" +: deltas.map(_._1)
-    val w = Window.partitionBy("__bucket").orderBy(eventOrder: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ev
-      .withColumn("__bucket", PrefixSum.valueBucket(ev, "ts_us", Some(range)))
-      .select(col("*") +:
-        names.map(n => sum(s"d_$n").over(w).as(s"run_$n")): _*)
-    val start = col("d_count") > 0
-    // per bucket: nets, peaks (the count peak is NULL iff no start) and
-    // the pods peak's instant (py:384 `>=`: the LATEST start wins ties)
-    val aggs = names.map(n => sum(s"d_$n")) ++
-      names.map(n => max(when(start, col(s"run_$n")))) :+
-      max_by(col("ts_us"), when(start, struct("run_pods", "ts_us")))
-        .cast("long")
     val k = names.size
-    def exact(r: Row, i: Int) = // a long or a decimal; NULL sweeps as 0
-      BigDecimal(Option(r.get(i)).fold("0")(_.toString), MathContext.UNLIMITED)
-    val rows = local.groupBy("__bucket").agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq
-    val summaries = rows.map(r => Summary(r.getInt(0).toLong,
-      (1 to k).map(exact(r, _)), Option.when(!r.isNullAt(k + 1))(
-        (k + 1 to 2 * k).map(exact(r, _))), r.getAs[Long](2 * k + 1)))
-    val types = names.map(n => local.schema(s"run_$n").dataType)
+    val pods = names.indexOf("pods")
+    import kept.sparkSession.implicits._
+    val rows = ev
+      .withColumn("__bucket", PrefixSum.valueBucket(ev, "ts_us", Some(range)))
+      .repartition(col("__bucket"))
+      .sortWithinPartitions(col("__bucket") +: eventOrder: _*)
+      .select(col("__bucket") +: col("ts_us") +: col("kind") +:
+        names.map(n => col(s"d_$n")): _*)
+      .mapPartitions { it =>
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+          val bucket = in.head.getInt(0)
+          val scan = new BucketScan(names, pods)
+          val valued = new Array[Boolean](k)
+          while (in.hasNext && in.head.getInt(0) == bucket) {
+            val r = in.next()
+            var i = 0
+            while (i < k) { // NULL sweeps as 0
+              if (!r.isNullAt(i + 3)) {
+                scan.add(i, r.getLong(i + 3))
+                valued(i) = true
+              }
+              i += 1
+            }
+            scan.event(r.getLong(1), r.getInt(2) == 1)
+          }
+          (scan.summary(bucket), valued.toSeq)
+        }
+      }
+    val summaries = try rows.collect().toSeq catch {
+      case e: SparkException if e.getCause.isInstanceOf[ArithmeticException] =>
+        throw e.getCause
+    }
     val fields = ("queries" +: deltas.map(_._1)).zip(types).map {
       case (n, t) => StructField(s"max_concurrent_$n", t) } :+
       StructField("max_pods_at_us", LongType)
-    val values = fold(summaries, names.indexOf("pods")).flatMap(s =>
-      s.peak.map(_.zip(types).zipWithIndex.map {
-        case (_, i) if rows.forall(_.isNullAt(i + 1)) => null // no delta
-        case ((v, LongType), _) => v.toLongExact
-        case ((v, _), _) => v.bigDecimal
+    val values = foldExact(summaries.map(_._1), names, pods)
+      .flatMap(s => s.peak.map(_.zip(scales).zipWithIndex.map {
+        case (_, i) if !summaries.exists(_._2(i)) => null // no delta
+        case ((v, 0), _) => v
+        case ((v, s), _) => java.math.BigDecimal.valueOf(v, s)
       } :+ s.peakAtUs)).getOrElse(Seq.fill(fields.size)(null))
     new GenericRowWithSchema(values.toArray, StructType(fields))
   }

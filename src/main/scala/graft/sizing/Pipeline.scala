@@ -1,7 +1,14 @@
 package graft.sizing
 
+import com.univocity.parsers.csv.CsvParser
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** End-to-end sizing pipeline (SURVEY §3 EP1/EP3): querylog CSV → derive →
   * route → CSV sinks → aggregates + sweep-line → report.
@@ -17,18 +24,52 @@ object Pipeline {
     *
     * The reference's DictReader selects columns BY NAME, so the input may
     * carry any superset of the 12 required columns (its own example input
-    * is a previous run's 24-column output). We mirror that: read with the
-    * header, then select+cast the columns of [[Model.querylogSchema]] —
-    * extra columns are dropped, missing ones fail analysis (same as a
-    * KeyError). The instants stay strings; [[withEventInstants]] parses
-    * them.
+    * is a previous run's 24-column output). We mirror that: the header is
+    * read on the driver ([[csvHeader]]) and passed as an all-string
+    * schema, which costs no Spark execution; then the columns of
+    * [[Model.querylogSchema]] are selected and cast by name — extra
+    * columns are dropped, missing ones fail analysis (same as a KeyError).
+    * The instants stay strings; [[withEventInstants]] parses them.
     */
   def readQuerylogCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("mode", "PERMISSIVE").csv(path)
+    spark.read.option("header", "true").option("mode", "PERMISSIVE")
+      .schema(StructType(csvHeader(spark, path).map(StructField(_, StringType))))
+      .csv(path)
       .select(Model.querylogSchema.map(f =>
         col(f.name).cast(f.dataType).as(f.name)) :+
         // the skip line's API-mode state field (RestAdapter.toQuerylog)
         lit(null).cast("string").as("query_state"): _*)
+
+  /** The column names in the first line of `path`'s first data file (a
+    * file, a directory of part files or a glob; names starting `_` or `.`
+    * are not data, as in Spark's file listing), parsed with Spark's own
+    * CSV settings through the Hadoop FS; empty when there is no line.
+    */
+  private def csvHeader(spark: SparkSession, path: String)
+      : Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val glob = new Path(path)
+    val fs = glob.getFileSystem(conf)
+    val files = Option(fs.globStatus(glob)).toSeq.flatten
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+      .filter(s => s.isFile && s.getLen > 0 &&
+        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.toString)
+    files.headOption.toSeq.flatMap { f =>
+      val codec = new CompressionCodecFactory(conf).getCodec(f)
+      val raw = fs.open(f)
+      val in = new BufferedReader(new InputStreamReader(
+        if (codec == null) raw else codec.createInputStream(raw),
+        StandardCharsets.UTF_8))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .find(_.trim.nonEmpty).toSeq.flatMap { line =>
+          val opts = new CSVOptions(Map("header" -> "true"),
+            columnPruning = false, spark.conf.get("spark.sql.session.timeZone"))
+          new CsvParser(opts.asParserSettings).parseLine(line).toSeq
+        }
+      finally in.close()
+    }
+  }
 
   /** Admitted/end instants in µs since epoch (SURVEY §2.6 E2, py:307–310).
     *
@@ -139,7 +180,9 @@ object Pipeline {
     * Spark actions after the source's own: ONE aggregate pass
     * ([[Report.aggregate]] — every report number but the sweep's, the
     * sinks' row counts and the sweep's event range; it also fills the
-    * cache), one write per non-empty sink, and the sweep's maxima.
+    * cache), one write per non-empty sink, and the sweep's maxima. The
+    * CSV source adds none ([[readQuerylogCsv]]), so a report with all
+    * three sinks runs 5 SQL executions.
     */
   private def finish(cfg: SizingConfig, querylog: DataFrame, outDir: String)
       : SizingReport = {

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * 10): the reference's batch interval-overlap analysis (py:307–396) as a
   * Structured Streaming pipeline over a live query-event stream.
   *
-  * The batch operator's sweep algebra ([[graft.sizing.Concurrency.fold]]),
-  * over buckets that the watermark closes:
+  * The batch operator's sweep algebra ([[graft.sizing.Concurrency.fold]])
+  * and its one bucket scan ([[graft.sizing.Concurrency.BucketScan]]), over
+  * buckets that the watermark closes:
   *
   *  1. query intervals fan out into ±delta events (event time = the
   *     delta's instant);
@@ -18,7 +19,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     bucketUs`; [[flatMapGroupsWithState]] buffers each bucket until the
   *     WATERMARK passes its end (event-time timeout), then sorts the
   *     bucket locally — (ts, end-before-start, query_id), the engine's Q5
-  *     tiebreak — and emits one [[BucketSummary]] with the bucket's net
+  *     tiebreak — scans it with the batch operator's long kernel and
+  *     emits one [[BucketSummary]] with the bucket's net
   *     deltas and its internal max-prefix-at-start candidates. This stage
   *     is the distributed heavy lifting: state per group is one bucket's
   *     events, never the stream.
@@ -30,6 +32,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ([[graft.sizing.Concurrency.integerDeltas]]) as LONGs: exact partial
   * sums, where doubles would lose low-order bits once a byte-count
   * running sum crosses 2^53 (a few hundred concurrent 50 TiB queries).
+  * A running sum that leaves the long range throws an
+  * `ArithmeticException` naming the resource; it never wraps.
   *
   * All instant arithmetic is µs-exact: Spark TimestampType is µs
   * precision, and [[tsUs]]/[[usTs]] round-trip the full µs through
@@ -115,21 +119,29 @@ object StreamingConcurrency {
   }
 
   /** Sequential scan of one closed bucket, once per bucket, distributed:
-    * each event is a run of one, and folding the runs in event order gives
-    * the bucket's running sums, maxima taken at starts (py:381–396).
+    * the bucket's events in (ts, end-before-start, query_id) order through
+    * the batch operator's one long kernel
+    * ([[graft.sizing.Concurrency.BucketScan]]), maxima taken at starts
+    * (py:381–396); a running sum that leaves the long range throws an
+    * `ArithmeticException` naming the resource.
     */
   private[streaming] def scanBucket(bucket: Long, evs: List[Event])
       : BucketSummary = {
-    val s = Concurrency.fold(evs.sortBy(e => (tsUs(e.ts), e.kind, e.queryId))
-      .zipWithIndex.map { case (e, i) => Concurrency.Summary(i.toLong,
-        e.deltas, Option.when(e.dCount > 0)(e.deltas), tsUs(e.ts)) }, pods = 1)
-    val n = s.fold(Seq.fill(6)(0L))(_.net)
-    val (m, atUs) = s.flatMap(r => r.peak.map(_ -> r.peakAtUs))
+    val scan = new Concurrency.BucketScan(resources, pods = 1)
+    evs.sortBy(e => (tsUs(e.ts), e.kind, e.queryId)).foreach { e =>
+      e.deltas.zipWithIndex.foreach { case (d, i) => scan.add(i, d) }
+      scan.event(tsUs(e.ts), e.dCount > 0)
+    }
+    val s = scan.summary(bucket)
+    val n = s.net
+    val (m, atUs) = s.peak.map(_ -> s.peakAtUs)
       .getOrElse((Seq.fill(6)(Long.MinValue), Long.MinValue))
     BucketSummary(bucket, evs.size.toLong, n(0), n(1), n(2), n(3), n(4),
-      n(5), m(0), m(1), m(2), m(3), m(4), m(5), atUs,
-      s.exists(_.peak.nonEmpty))
+      n(5), m(0), m(1), m(2), m(3), m(4), m(5), atUs, s.peak.nonEmpty)
   }
+
+  /** The six resources of [[Event.deltas]], in order. */
+  private val resources = Seq("count", "pods", "cache", "mem", "cpu", "spill")
 
   /** Stage 3 result: the reference's concurrency report fields. */
   final case class Maxima(maxConcurrentQueries: Long, maxPods: Long,
@@ -137,17 +149,18 @@ object StreamingConcurrency {
       maxPodsAtUs: Long)
 
   /** Fold closed-bucket summaries (any arrival order) into global maxima
-    * with carry-ins: [[Concurrency.fold]] over the six long resources.
+    * with carry-ins: [[Concurrency.foldExact]] over the six long
+    * resources, so a footprint past the long range throws, never wraps.
     */
   object GlobalAccumulator {
     def fold(summaries: Seq[BucketSummary]): Option[Maxima] =
-      Concurrency.fold(summaries.map { b =>
+      Concurrency.foldExact(summaries.map { b =>
         Concurrency.Summary(b.bucket, Seq(b.netCount, b.netPods, b.netCache,
           b.netMem, b.netCpu, b.netSpill),
           Option.when(b.hasStart)(Seq(b.maxPrefCount, b.maxPrefPods,
             b.maxPrefCache, b.maxPrefMem, b.maxPrefCpu, b.maxPrefSpill)),
           b.maxPrefAtUs)
-      }, pods = 1).flatMap(s => s.peak.map {
+      }, resources, pods = 1).flatMap(s => s.peak.map {
         case Seq(c, p, ca, m, cp, sp) => Maxima(c, p, ca, m, cp, sp, s.peakAtUs)
       })
   }

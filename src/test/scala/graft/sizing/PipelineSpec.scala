@@ -202,10 +202,106 @@ class PipelineSpec extends SparkTestBase {
     assert(Aggregates.sizeMatrix(kept.filter(lit(false))).count() == 0)
   }
 
-  test("a report over the fixture runs seven Spark actions") {
-    // the CSV header read (two), ONE aggregate pass over the routed log,
-    // the three sink writes and the sweep's maxima
-    assert(sqlExecutions(runCsv(csv)) == 7)
+  test("a report over the fixture runs five Spark actions") {
+    // ONE aggregate pass over the routed log, the three sink writes and
+    // the sweep's maxima; the CSV header is read on the driver
+    assert(sqlExecutions(runCsv(csv)) == 5)
+  }
+
+  /** Every sink's lines by file name ("-" for a missing sink): one copy
+    * of the CSV header however many part files carry it, then the rows
+    * sorted.
+    */
+  private def sinkLines(dir: java.io.File): Map[String, Seq[String]] =
+    Seq("sizing_output.csv", "sizing_pruned.csv", "skipped_queries.txt")
+      .map { f =>
+        val p = new java.io.File(dir, f)
+        f -> (if (!p.exists()) Seq("-") else {
+          val (header, rows) = spark.read.text(p.getPath).collect()
+            .map(_.getString(0)).toSeq.partition(_.startsWith("query_id,"))
+          header.distinct ++ rows.sorted
+        })
+      }.toMap
+
+  /** `Pipeline.run` over `write(dir)`'s input path, in a fresh directory. */
+  private def runAt(write: java.io.File => String)
+      : (SizingReport, java.io.File) = {
+    val dir = tempDir("graft-header").toFile
+    val cfg = SizingConfig(inputFile = Some(write(dir)))
+    (Pipeline.run(spark, cfg, dir.getAbsolutePath), dir)
+  }
+
+  private def assertSameAsFixture(run: (SizingReport, java.io.File)) = {
+    assert(run._1 == report)
+    assert(run._1.render == report.render)
+    assert(sinkLines(run._2) == sinkLines(outDir))
+  }
+
+  /** The fixture with its columns reordered by `cols` (names may repeat
+    * or be new: a new one gets the value "x").
+    */
+  private def reshaped(cols: Seq[String], quote: Boolean = false): String = {
+    val lines = csv.linesIterator.toSeq
+    val names = lines.head.split(",").toSeq
+    def q(s: String) = if (quote) "\"" + s + "\"" else s
+    (cols.map(q).mkString(",") +: lines.tail.map { l =>
+      val v = names.zip(l.split(",", -1)).toMap
+      cols.map(c => v.getOrElse(c, "x")).mkString(",")
+    }).mkString("", "\n", "\n")
+  }
+
+  private val fixtureCols = csv.linesIterator.next().split(",").toSeq
+
+  test("header read on the driver: a superset of columns, in any order") {
+    val text = reshaped("extra_a" +: fixtureCols.reverse :+ "extra_b")
+    assertSameAsFixture(runAt { d =>
+      val in = new java.io.File(d, "querylog.csv")
+      Files.writeString(in.toPath, text)
+      in.getAbsolutePath
+    })
+  }
+
+  test("header read on the driver: a missing column fails, naming it") {
+    val text = reshaped(fixtureCols.filterNot(_ == "reqd_agg_mem"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](runAt { d =>
+      val in = new java.io.File(d, "querylog.csv")
+      Files.writeString(in.toPath, text)
+      in.getAbsolutePath
+    })
+    assert(e.getMessage.contains("reqd_agg_mem"), e.getMessage)
+  }
+
+  test("header read on the driver: quoted header names") {
+    val text = reshaped(fixtureCols, quote = true)
+    assert(text.startsWith("\"query_id\",\"pool\","))
+    assertSameAsFixture(runAt { d =>
+      val in = new java.io.File(d, "querylog.csv")
+      Files.writeString(in.toPath, text)
+      in.getAbsolutePath
+    })
+  }
+
+  test("header read on the driver: a header-only file is a 0-row log") {
+    val (r, dir) = runCsv(csv.linesIterator.next() + "\n")
+    assert(r == emptyKept(0, Nil, 0))
+    assert(sinkLines(dir) == Map(
+      "sizing_output.csv" -> Seq(sinkLines(outDir)("sizing_output.csv").head),
+      "sizing_pruned.csv" -> Seq("-"), "skipped_queries.txt" -> Seq("-")))
+  }
+
+  test("header read on the driver: a directory of part files, each with " +
+      "its header") {
+    val lines = csv.linesIterator.toSeq
+    assertSameAsFixture(runAt { d =>
+      val in = new java.io.File(d, "querylog_csv")
+      in.mkdir()
+      Files.writeString(new java.io.File(in, "_SUCCESS").toPath, "")
+      lines.tail.grouped(2).zipWithIndex.foreach { case (rows, i) =>
+        Files.writeString(new java.io.File(in, f"part-$i%05d.csv").toPath,
+          (lines.head +: rows).mkString("", "\n", "\n"))
+      }
+      in.getAbsolutePath
+    })
   }
 
   /** The report of a run whose routed log has no kept row: NULL
